@@ -288,7 +288,15 @@ def _final_line(out: dict, timings: dict) -> str:
             line = json.dumps(fields, separators=(",", ":"))
             if len(line) <= _LINE_BUDGET - 60:  # slack: newline + jitter
                 return line
-    return line  # physically cannot fit; emit the minimal form anyway
+    # past the slack the minimal form may still fit the window whole;
+    # past the window, keep the largest walls that fit and flag the cut
+    kept = sorted(timings, key=timings.get, reverse=True)
+    while len(line) >= _LINE_BUDGET - 1 and kept:
+        kept.pop()
+        fields["queries"] = {k: int(round(timings[k])) for k in kept}
+        fields["queries_truncated"] = True
+        line = json.dumps(fields, separators=(",", ":"))
+    return line
 
 
 # Stable, untouched-by-design keys used to estimate box speed relative

@@ -59,7 +59,27 @@ def parquet_rows(sf_dir: str, name: str) -> int:
     return pq.read_metadata(path).num_rows
 
 
-def spread_scan(df: DataFrame, min_tasks_ratio: int = 2) -> DataFrame:
+# spread_scan's rule. Below the size floor (plan-statistics bytes) the
+# repartition's fixed shuffle cost exceeds the per-row work it
+# parallelizes: interleaved A/B, the heavy consumers win 1.3-7x at sf0.1
+# (~4 MB corpus) and lose 15-35 % at sf0.01 (~0.4 MB). Above it, a scan
+# spreads only when it yields at most 1/SPREAD_TASKS_RATIO of the cores.
+SPREAD_MIN_BYTES = 256 << 10
+SPREAD_TASKS_RATIO = 2
+
+
+def _holds_exchange(plan) -> bool:
+    """True if the physical plan contains an exchange. Under AQE (on in
+    every engine session) such a plan is rooted at AdaptiveSparkPlan;
+    the walk covers sessions with AQE off."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan" or name.endswith("Exchange"):
+        return True
+    kids = plan.children()
+    return any(_holds_exchange(kids.apply(i)) for i in range(kids.size()))
+
+
+def spread_scan(df: DataFrame) -> DataFrame:
     """Parallelism floor for heavy per-row work over few-file scans
     (guide §2.5: "one huge unsplittable file … repartition immediately
     after the read").
@@ -70,36 +90,28 @@ def spread_scan(df: DataFrame, min_tasks_ratio: int = 2) -> DataFrame:
     all serialize on one core. At production scale a table scan has
     thousands of row-group splits and this helper is a metadata-only
     no-op: it round-robin repartitions to the session's default
-    parallelism ONLY when the scan's own layout yields fewer than
-    1/``min_tasks_ratio`` of the cores (decided from the planned
-    partition count, no job). Results are unchanged by construction —
-    repartition moves rows, and every consumer is a key/group
-    computation. The cost when it fires is one shuffle of the
-    projected columns, so project/filter before calling (guide §2.3);
-    the deterministic sort-before-repartition default stays on so task
-    retries reproduce the same placement (guide §2.5). A size floor
-    (plan-statistics bytes, default 256 KiB, env
-    ``STREAMINGDEMO_SPREAD_MIN_BYTES``) keeps tiny inputs unspread —
-    below it the shuffle's fixed cost exceeds the per-row work it
-    parallelizes (measured: the same keys that win 1.3-7× at sf0.1
-    lose 15-35 % at sf0.01).
+    parallelism ONLY when an input of at least ``SPREAD_MIN_BYTES``
+    yields at most 1/``SPREAD_TASKS_RATIO`` of the cores. Results are
+    unchanged by construction — repartition moves rows, and every
+    consumer is a key/group computation. The cost when it fires is one
+    shuffle of the projected columns, so project/filter before calling
+    (guide §2.3); the deterministic sort-before-repartition default
+    stays on so task retries reproduce the same placement (guide §2.5).
+
+    The decision never runs a job: the size comes from plan
+    statistics and the split count from the frame's own physical plan.
+    A frame whose plan already holds an exchange is returned unchanged
+    — it is as parallel as its shuffle made it, and reading its split
+    count would run that shuffle.
     """
-    if os.environ.get("STREAMINGDEMO_SPREAD_SCAN", "1") == "0":
-        return df  # site override / A-B measurement kill-switch
-    # Size floor: the repartition's fixed shuffle cost is only paid
-    # back when there is enough per-row work behind it. Interleaved
-    # A/B: at sf0.1 (~4 MB corpus) the heavy consumers win 1.3-7x, at
-    # sf0.01 (~0.4 MB) the same keys LOSE 15-35% — so tiny inputs stay
-    # unspread (plan-statistics estimate, driver-side, no job).
-    min_bytes = int(
-        os.environ.get("STREAMINGDEMO_SPREAD_MIN_BYTES", str(256 << 10))
-    )
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est < min_bytes:
+    qe = df._jdf.queryExecution()
+    if int(qe.optimizedPlan().stats().sizeInBytes()) < SPREAD_MIN_BYTES:
         return df
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * min_tasks_ratio <= target:
+    plan = qe.executedPlan()
+    if _holds_exchange(plan):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if plan.execute().getNumPartitions() * SPREAD_TASKS_RATIO <= target:
         return df.repartition(target)
     return df
 

@@ -59,13 +59,14 @@ def get_spark(
     Defaults follow SURVEY.md §4: AQE on (runtime join re-selection,
     partition coalescing, skew-join splitting), Arrow on for all
     pandas-UDF/toPandas paths, UTC session time zone so timestamp
-    semantics match the ANSI-SQL oracle.
+    semantics match the ANSI-SQL oracle. The tuning values are
+    constants; a deployment sets any other Spark conf (e.g. the
+    RocksDB ``spark.sql.streaming.stateStore.providerClass``) through
+    ``extra_conf``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -82,11 +83,8 @@ def get_spark(
         # Interleaved A/B at sf0.1: GEMM keys -10..-24 %
         # (ext_dedup_embedding 1.30->0.99, ext_label_noise_ann
         # 1.73->1.55, ext_cluster_kmeans 1.70->1.54), join/agg keys
-        # unchanged over 5 alternating reps. Env-overridable per site.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("STREAMINGDEMO_AQE_MIN_PARTITION", "64k"),
-        )
+        # unchanged over 5 alternating reps.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.session.timeZone", "UTC")

@@ -70,33 +70,11 @@ def _capture_plan(query) -> str:
     return buf.getvalue()
 
 
-# The two state-store providers Spark ships. The default HDFS-backed
-# provider keeps each partition's state map on the executor HEAP —
-# fine for replay tests, but at 100 TB stream state (large watermarked
-# joins, big dedup windows) heap-resident maps cause GC pressure and
-# OOM; RocksDB keeps state off-heap with incremental checkpointing and
-# is the production lever for the heavy stateful queries. Select
-# per-run via ``state_provider`` or globally via
-# ``STREAMINGDEMO_STATE_PROVIDER=rocksdb``.
-STATE_PROVIDERS = {
-    "hdfs": (
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider"
-    ),
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-    ),
-}
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-
 def run_to_memory(
     df: DataFrame,
     output_mode: str = "append",
     timeout_sec: int | None = None,
     state_partitions: int | None = 8,
-    state_provider: str | None = None,
     processing_time: str | None = None,
     min_batches: int = 2,
     no_data_batches: bool = True,
@@ -127,10 +105,11 @@ def run_to_memory(
     micro-batch are pure task overhead. On a cluster, size this to the
     stream's key cardinality instead.
 
-    ``state_provider`` ("hdfs" | "rocksdb" | None) picks the
-    state-store backend for this stream (the conf is read at query
-    start and pinned into the checkpoint); None defers to the
-    ``STREAMINGDEMO_STATE_PROVIDER`` env var, else Spark's default.
+    The state-store backend is the session's
+    ``spark.sql.streaming.stateStore.providerClass`` (read at query
+    start and pinned into the checkpoint): Spark's HDFS-backed default
+    keeps state on the executor heap, and a deployment with large
+    state sets the RocksDB provider there.
 
     ``no_data_batches=False`` disables Spark's trailing no-data
     micro-batch (``spark.sql.streaming.noDataMicroBatches.enabled``)
@@ -149,12 +128,6 @@ def run_to_memory(
     name = f"mem_{uuid.uuid4().hex[:12]}"
     checkpoint = scratch_dir(prefix=f"ckpt_{name}_", dir=CHECKPOINT_ROOT)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    provider = state_provider or os.environ.get(
-        "STREAMINGDEMO_STATE_PROVIDER"
-    )
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
-    if provider:
-        spark.conf.set(_PROVIDER_CONF, STATE_PROVIDERS[provider])
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -224,9 +197,4 @@ def run_to_memory(
                 spark.conf.unset(_NODATA_CONF)
             else:
                 spark.conf.set(_NODATA_CONF, prev_nodata)
-        if provider:
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prev_provider)
     return spark.table(name)

@@ -63,3 +63,18 @@ def test_final_line_fits_tail_capture_window():
     assert len(doc["queries"]) == len(bench.HEADLINE) + 8
     for field in ("metric", "value", "unit", "sf", "queries"):
         assert field in doc
+
+    # cannot fit even at integer walls (60 long keys at 5-digit walls):
+    # the line keeps the largest walls that fit and flags the cut
+    timings = {k: 10_000.0 + 100 * i for i, k in enumerate(_fake_timings(60, 0))}
+    line = bench._final_line(_base_out(timings), timings)
+    assert len(line) < bench._LINE_BUDGET - 1
+    doc = json.loads(line)
+    assert doc["queries_truncated"] is True
+    kept = doc["queries"]
+    assert 0 < len(kept) < len(timings)
+    assert min(timings[k] for k in kept) > max(
+        v for k, v in timings.items() if k not in kept
+    )
+    for field in ("metric", "value", "unit", "sf"):
+        assert field in doc

@@ -47,50 +47,106 @@ def test_parquet_rows_matches_count(spark, sf_dir):
 
 
 def test_spread_scan_floors_parallelism(spark, sf_dir):
-    """spread_scan round-robins a few-partition scan up to the
-    session's default parallelism (rows unchanged), no-ops when the
-    input already parallelizes, and honors the env kill-switch — the
-    guide §2.5 input-skew fix must never fire where it would add a
-    pointless shuffle."""
-    import os
+    """spread_scan round-robins a few-partition input above the size
+    floor up to the session's default parallelism (rows unchanged),
+    and leaves tiny or already-parallel inputs alone — the guide §2.5
+    input-skew fix must never fire where it would add a pointless
+    shuffle."""
+    from streamingdemo_spark.io import SPREAD_MIN_BYTES, load_tables, spread_scan
 
-    from streamingdemo_spark.io import load_tables, spread_scan
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     target = spark.sparkContext.defaultParallelism
-    n_rows = docs.count()
 
-    # pin the knobs for the duration (and restore whatever the caller
-    # had exported — this test must neither fail under a user-set
-    # kill-switch nor erase the user's configuration afterwards)
-    knobs = ("STREAMINGDEMO_SPREAD_SCAN", "STREAMINGDEMO_SPREAD_MIN_BYTES")
-    saved = {k: os.environ.get(k) for k in knobs}
-    try:
-        os.environ["STREAMINGDEMO_SPREAD_SCAN"] = "1"
+    # one 8-byte column: 40k rows plan at 320 KB, above the floor
+    big = spark.range(0, 40_000, 1, 1)
+    assert 40_000 * 8 >= SPREAD_MIN_BYTES
+    spread = spread_scan(big)
+    assert spread.rdd.getNumPartitions() == target
+    assert spread.count() == 40_000
 
-        # size floor: the sf0.001 fixture is tiny — spread must NOT
-        # fire (the repartition's fixed cost isn't paid back; measured
-        # at sf0.01: minhash/eval/containment lose 15-35% if it does)
-        os.environ["STREAMINGDEMO_SPREAD_MIN_BYTES"] = str(256 << 10)
-        assert spread_scan(docs) is docs
+    # size floor: the sf0.001 fixture is tiny — spread must NOT fire
+    # (the repartition's fixed cost isn't paid back; measured at
+    # sf0.01: minhash/eval/containment lose 15-35% if it does)
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    assert spread_scan(docs) is docs
 
-        # with the floor lifted, a few-partition scan spreads to the
-        # session parallelism with rows unchanged
-        os.environ["STREAMINGDEMO_SPREAD_MIN_BYTES"] = "0"
-        spread = spread_scan(docs)
-        assert spread.rdd.getNumPartitions() == target
-        assert spread.count() == n_rows
+    # already-parallel input: untouched (identical plan object)
+    wide = big.repartition(target)
+    assert spread_scan(wide) is wide
 
-        # already-parallel input: untouched (identical plan object)
-        wide = docs.repartition(target)
-        assert spread_scan(wide) is wide
 
-        # kill-switch: untouched
-        os.environ["STREAMINGDEMO_SPREAD_SCAN"] = "0"
-        assert spread_scan(docs) is docs
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
+def test_spread_scan_runs_no_job_on_post_exchange_input(spark):
+    """A frame past an exchange is as parallel as its shuffle made it:
+    spread_scan must return it unchanged without running a job. Reading
+    its split count through ``df.rdd`` materialized the AQE shuffle
+    stages — a hidden job per call — and then spread it again. Jobs are
+    counted on the DAG scheduler, which also sees AQE map-stage jobs
+    that a status-tracker scan misses."""
+    from pyspark.sql import functions as F
+
+    from streamingdemo_spark.io import spread_scan
+
+    grouped = (
+        spark.range(0, 200_000, 1, 4)
+        .groupBy((F.col("id") % 1000).alias("k"))
+        .count()
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    assert spread_scan(grouped) is grouped
+    assert dag.numTotalJobs() == before
+
+
+# Deployment settings the engine reads: paths, memory, cores and a
+# liveness bound. Tuning decisions are constants in the code; a new
+# environment read is a new knob and must be argued onto this list
+# (and into the README's Configuration section).
+ALLOWED_ENV = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_DRIVER_MEMORY",
+    "SPARK_DRIVER_MAX_RESULT_SIZE",
+    "SPARK_UI_ENABLED",
+    "STREAMINGDEMO_STREAM_CACHE",
+    "STREAMINGDEMO_CKPT_ROOT",
+    "STREAMINGDEMO_STREAM_TIMEOUT",
+}
+
+
+def test_engine_reads_only_deployment_env():
+    """Every environment variable read under ``streamingdemo_spark/``
+    (``os.environ.get``, ``os.environ[...]``, ``os.getenv``, ``in
+    os.environ``) is on the deployment allowlist; a read whose name is
+    not a string literal fails too. No Spark needed."""
+    import ast
+    import pathlib
+
+    import streamingdemo_spark
+
+    def is_(node, dotted):
+        return ast.unparse(node) == dotted
+
+    found = set()
+    root = pathlib.Path(streamingdemo_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) and (
+                is_(node.func, "os.environ.get") or is_(node.func, "os.getenv")
+            ):
+                name = node.args[0]
+            elif (
+                isinstance(node, ast.Subscript)
+                and isinstance(node.ctx, ast.Load)
+                and is_(node.value, "os.environ")
+            ):
+                name = node.slice
+            elif isinstance(node, ast.Compare) and any(
+                is_(c, "os.environ") for c in node.comparators
+            ):
+                name = node.left
             else:
-                os.environ[k] = v
+                continue
+            if isinstance(name, ast.Constant) and isinstance(name.value, str):
+                found.add(name.value)
+            else:
+                found.add(f"<non-literal in {path.name}: {ast.unparse(name)}>")
+    assert found == ALLOWED_ENV

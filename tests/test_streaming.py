@@ -301,9 +301,47 @@ def test_stateful_stream_runs_on_rocksdb_state_store(spark, sf_dir):
     totals must produce identical results under the RocksDB state
     store provider (spillable, incremental-checkpoint) as under the
     default HDFS-backed provider — state logic must not depend on
-    provider semantics."""
+    provider semantics. Setting the session's ``providerClass`` must
+    actually engage the backend — pinned through the listener's
+    state-operator metrics, not just equal results: the RocksDB
+    provider reports rocksdb* custom metrics, the default reports
+    none, and both hold the SAME number of state rows for the same
+    replay (state CONTENT is provider-independent)."""
+    import time
+
+    from streamingdemo_spark.streaming.listener import (
+        attach_run_log,
+        detach_run_log,
+    )
+
     key = "stream_stateful_custom"
-    baseline = _rows(QUERIES[key](spark, sf_dir), "user_id", "n_events", "val_sum")
+
+    def run():
+        listener = attach_run_log(spark)
+        try:
+            rows = _rows(
+                QUERIES[key](spark, sf_dir), "user_id", "n_events", "val_sum"
+            )
+            # the listener bus is async: progress events can trail the
+            # query's stop by a beat
+            deadline = time.monotonic() + 15
+            while time.monotonic() < deadline:
+                ops = [
+                    op
+                    for e in listener.entries
+                    for op in e.get("state_operators", [])
+                ]
+                if ops and any(
+                    e["event"] == "terminated" for e in listener.entries
+                ):
+                    break
+                time.sleep(0.2)
+        finally:
+            detach_run_log(spark, listener)
+        assert ops, "no state-operator metrics recorded"
+        return rows, ops
+
+    baseline, ops_hdfs = run()
     prov = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(prov, None)
     spark.conf.set(
@@ -312,13 +350,31 @@ def test_stateful_stream_runs_on_rocksdb_state_store(spark, sf_dir):
         "RocksDBStateStoreProvider",
     )
     try:
-        got = _rows(QUERIES[key](spark, sf_dir), "user_id", "n_events", "val_sum")
+        got, ops_rocks = run()
     finally:
         if prev is None:
             spark.conf.unset(prov)
         else:
             spark.conf.set(prov, prev)
     assert got == baseline and len(got) > 0
+
+    def metric_names(ops):
+        return {m for op in ops for m in op["custom_metrics"]}
+
+    hdfs_metrics = metric_names(ops_hdfs)
+    rocks_metrics = metric_names(ops_rocks)
+    assert not any(m.startswith("rocksdb") for m in hdfs_metrics), (
+        f"default provider unexpectedly reported rocksdb metrics: "
+        f"{sorted(hdfs_metrics)[:5]}"
+    )
+    assert any(m.startswith("rocksdb") for m in rocks_metrics), (
+        f"rocksdb run reported no rocksdb metrics — providerClass did "
+        f"not engage: {sorted(rocks_metrics)[:5]}"
+    )
+    # same replay -> same final state volume, backend-independent
+    assert max(op["num_rows_total"] for op in ops_hdfs) == max(
+        op["num_rows_total"] for op in ops_rocks
+    )
 
 
 def test_incremental_agg_resumes_and_equals_batch(spark, sf_dir):
@@ -504,74 +560,6 @@ def test_txn_log_incremental_reconciles_with_snapshot(spark, sf_dir):
     assert rows[2]["n_removed"] == per_part[1]
     # final net == the latest snapshot (parts 2 and 3 live)
     assert rows[-1]["net_rows"] == per_part[2] + per_part[3]
-
-
-def test_state_store_provider_toggle_pins_metrics(spark, sf_dir, monkeypatch):
-    """The run_to_memory provider toggle must actually engage the
-    requested backend — pinned through the listener's state-operator
-    metrics, not just equal results: the RocksDB provider reports
-    rocksdb* custom metrics, the default HDFS-backed provider reports
-    its loadedMapCache* metrics and no rocksdb ones, and both providers
-    hold the SAME number of state rows for the same replay (state
-    CONTENT is provider-independent; only the backend changes)."""
-    import time
-
-    from streamingdemo_spark.streaming.listener import (
-        attach_run_log,
-        detach_run_log,
-    )
-
-    def run_with(provider):
-        if provider:
-            monkeypatch.setenv("STREAMINGDEMO_STATE_PROVIDER", provider)
-        else:
-            monkeypatch.delenv("STREAMINGDEMO_STATE_PROVIDER", raising=False)
-        listener = attach_run_log(spark)
-        try:
-            rows = _rows(
-                QUERIES["stream_tumbling"](spark, sf_dir),
-                "ws", "n", "val_sum",
-            )
-            # the listener bus is async: progress events can trail the
-            # query's stop by a beat
-            deadline = time.monotonic() + 15
-            while time.monotonic() < deadline:
-                ops = [
-                    op
-                    for e in listener.entries
-                    for op in e.get("state_operators", [])
-                ]
-                if ops and any(
-                    e["event"] == "terminated" for e in listener.entries
-                ):
-                    break
-                time.sleep(0.2)
-        finally:
-            detach_run_log(spark, listener)
-        assert ops, f"no state-operator metrics recorded under {provider}"
-        return rows, ops
-
-    rows_hdfs, ops_hdfs = run_with(None)
-    rows_rocks, ops_rocks = run_with("rocksdb")
-    assert rows_rocks == rows_hdfs and len(rows_rocks) > 0
-
-    def metric_names(ops):
-        return {m for op in ops for m in op["custom_metrics"]}
-
-    hdfs_metrics = metric_names(ops_hdfs)
-    rocks_metrics = metric_names(ops_rocks)
-    assert not any(m.startswith("rocksdb") for m in hdfs_metrics), (
-        f"default provider unexpectedly reported rocksdb metrics: "
-        f"{sorted(hdfs_metrics)[:5]}"
-    )
-    assert any(m.startswith("rocksdb") for m in rocks_metrics), (
-        f"rocksdb run reported no rocksdb metrics — toggle did not "
-        f"engage: {sorted(rocks_metrics)[:5]}"
-    )
-    # same replay -> same final state volume, backend-independent
-    assert max(op["num_rows_total"] for op in ops_hdfs) == max(
-        op["num_rows_total"] for op in ops_rocks
-    )
 
 
 def test_timeout_sessions_state_bounded_and_drained(spark, sf_dir):
