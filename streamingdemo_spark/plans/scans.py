@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from streamingdemo_spark.io import load_tables, register_views, table_path
 from streamingdemo_spark.registry import dsum, opoly, osum, query
+from streamingdemo_spark.streaming.runner import replay
 
 
 @query(
@@ -1062,18 +1063,7 @@ def src_txn_log_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             deltas[v] = (n_add, n_rem, c_add - c_rem)
 
-    ckpt = scratch_dir(prefix="ckpt_txnlog_inc_")
-    query_handle = (
-        actions_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query_handle.awaitTermination(300):
-            raise TimeoutError("txn-log incremental replay exceeded 300s")
-    finally:
-        query_handle.stop()
+    replay(actions_stream.writeStream.foreachBatch(handle), spark)
 
     rows, net = [], 0
     for v in sorted(deltas):
@@ -1798,18 +1788,7 @@ def snk_txn_log_stream_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(incoming, "src*"))
     )
-    ckpt = scratch_dir(prefix="ckpt_txnlog_stream_")
-    handle = (
-        stream.writeStream.foreachBatch(commit_epoch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not handle.awaitTermination(300):
-            raise TimeoutError("stream-commit replay exceeded 300s")
-    finally:
-        handle.stop()
+    replay(stream.writeStream.foreachBatch(commit_epoch), spark)
 
     n_epochs = _txn_log_commit_count(log_dir)
     if n_epochs < 2 or skips:
@@ -1921,18 +1900,7 @@ def snk_txn_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(log_a)
         .select("add")
     )
-    ckpt = scratch_dir(prefix="ckpt_txnlog_pipe_")
-    handle_q = (
-        actions_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not handle_q.awaitTermination(300):
-            raise TimeoutError("pipeline replay exceeded 300s")
-    finally:
-        handle_q.stop()
+    replay(actions_stream.writeStream.foreachBatch(handle), spark)
 
     n_epochs = _txn_log_commit_count(log_b)
     if n_epochs < 2 or skips:

@@ -33,37 +33,11 @@ class RunLogListener(StreamingQueryListener):
         self._record({"event": "started", "id": str(event.id), "name": event.name})
 
     def onQueryProgress(self, event) -> None:
-        p = event.progress
-        entry = {
-            "event": "progress",
-            "id": str(p.id),
-            "batch_id": p.batchId,
-            "num_input_rows": p.numInputRows,
-        }
-        # State-store metrics per stateful operator: row counts prove
-        # the operator ran and bound its state; the custom-metric names
-        # identify the PROVIDER (RocksDB emits rocksdb* metrics, the
-        # default HDFS-backed provider emits loadedMapCache*) — the
-        # observable the provider-toggle test pins. Best-effort: absent
-        # on stateless queries.
-        try:
-            ops = []
-            for so in p.stateOperators or []:
-                ops.append(
-                    {
-                        "operator": getattr(so, "operatorName", ""),
-                        "num_rows_total": so.numRowsTotal,
-                        "num_rows_updated": so.numRowsUpdated,
-                        "custom_metrics": sorted(
-                            (so.customMetrics or {}).keys()
-                        ),
-                    }
-                )
-            if ops:
-                entry["state_operators"] = ops
-        except Exception:  # noqa: BLE001 - metrics shape is advisory
-            pass
-        self._record(entry)
+        # the full StreamingQueryProgress, in the shape the runner's
+        # LAST_STREAM_PROGRESS holds: batch phases (durationMs) and,
+        # per stateful operator, row counts, commit/update times and
+        # the provider's custom metrics (RocksDB emits rocksdb*)
+        self._record({"event": "progress", **json.loads(event.progress.json)})
 
     def onQueryTerminated(self, event) -> None:
         self._record(

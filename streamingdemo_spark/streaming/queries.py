@@ -23,7 +23,12 @@ from pyspark.sql import functions as F
 
 from streamingdemo_spark.io import load_tables, parquet_rows
 from streamingdemo_spark.registry import dsum, osum, query
-from streamingdemo_spark.streaming.runner import run_to_memory
+from streamingdemo_spark.scratch import scratch_dir
+from streamingdemo_spark.streaming.runner import (
+    CHECKPOINT_ROOT,
+    replay,
+    run_to_memory,
+)
 from streamingdemo_spark.streaming.sources import events_stream
 
 
@@ -597,8 +602,6 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     transactional support — MERGE/upsert per epoch keyed on a stable
     id. State lives in the target table, not the stream.
     """
-    from streamingdemo_spark.scratch import scratch_dir
-
     out = scratch_dir(prefix="feb_sink_") + "/events_merged"
     stream = events_stream(spark, sf_dir, "dups", n_chunks=4, files_per_trigger=2)
 
@@ -609,17 +612,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    ckpt = scratch_dir(prefix="ckpt_feb_")
-    query = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination(300)
-    finally:
-        query.stop()
+    replay(stream.writeStream.foreachBatch(sink), spark)
     return (
         spark.read.parquet(out)
         .orderBy("epoch")
@@ -831,8 +824,6 @@ def snk_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``files_per_trigger`` so each commit is a few well-sized files,
     not thousands of small ones.
     """
-    from streamingdemo_spark.scratch import scratch_dir
-
     stream = events_stream(spark, sf_dir, "ordered", files_per_trigger=4)
     proj = stream.select(
         "event_id",
@@ -842,23 +833,8 @@ def snk_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", F.col("ts")).alias("day"),
     )
     out = scratch_dir(prefix="snk_stream_parquet_")
-    query = (
-        proj.writeStream.format("parquet")
-        .option("path", out + "/data")
-        .option("checkpointLocation", out + "/chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout (no exception):
-        # reading the sink then would see a partially-committed
-        # directory while the query keeps writing — same guard as
-        # run_to_memory.
-        if not query.awaitTermination(300):
-            raise TimeoutError("snk_stream_parquet replay exceeded 300s")
-    finally:
-        query.stop()
-    return spark.read.parquet(out + "/data")
+    replay(proj.writeStream.format("parquet").option("path", out), spark)
+    return spark.read.parquet(out)
 
 
 def _has_tws_protobuf() -> bool:
@@ -1016,7 +992,6 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    from streamingdemo_spark.scratch import scratch_dir
 
     from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
 
@@ -1026,7 +1001,7 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = scratch_dir(prefix="inc_src_")
     target = os.path.join(scratch_dir(prefix="inc_tgt_"), "partials")
-    ckpt = scratch_dir(prefix="ckpt_inc_")
+    ckpt = scratch_dir(prefix="ckpt_inc_", dir=CHECKPOINT_ROOT)
     _LAST_INCREMENTAL.update(source=src, partials=target, checkpoint=ckpt)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1053,16 +1028,7 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+        replay(stream.writeStream.foreachBatch(sink), spark, checkpoint=ckpt)
 
     for f in files[: len(files) // 2]:
         shutil.copy(os.path.join(built, f), src)
@@ -1747,7 +1713,6 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    from streamingdemo_spark.scratch import scratch_dir
 
     from streamingdemo_spark.registry import poly_hash
     from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
@@ -1756,7 +1721,7 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = sorted(f for f in os.listdir(built) if f.endswith(".parquet"))
     src = scratch_dir(prefix="botk_src_")
     sketch_dir = os.path.join(scratch_dir(prefix="botk_tgt_"), "sketch")
-    ckpt = scratch_dir(prefix="ckpt_botk_")
+    ckpt = scratch_dir(prefix="ckpt_botk_", dir=CHECKPOINT_ROOT)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_bot = (
@@ -1800,16 +1765,7 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+        replay(stream.writeStream.foreachBatch(sink), spark, checkpoint=ckpt)
 
     for f in files[: len(files) // 2]:
         shutil.copy(os.path.join(built, f), src)
@@ -1967,13 +1923,11 @@ def stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both legs score the identical statistic.
     """
     import os
-    from streamingdemo_spark.scratch import scratch_dir
 
     from streamingdemo_spark.extensions.corpus import boot_weight_partials
     from streamingdemo_spark.streaming.sources import documents_stream
 
     target = os.path.join(scratch_dir(prefix="boot_tgt_"), "partials")
-    ckpt = scratch_dir(prefix="ckpt_boot_")
 
     def partials(batch_df: DataFrame, epoch_id: int) -> None:
         (
@@ -1989,17 +1943,7 @@ def stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(partials)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        q.stop()
+    replay(documents_stream(spark, sf_dir).writeStream.foreachBatch(partials), spark)
 
     per_rep = (
         spark.read.parquet(target)

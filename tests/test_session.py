@@ -150,3 +150,20 @@ def test_engine_reads_only_deployment_env():
             else:
                 found.add(f"<non-literal in {path.name}: {ast.unparse(name)}>")
     assert found == ALLOWED_ENV
+
+
+def test_only_the_runner_waits_on_a_stream():
+    """Every bounded stream runs through ``streaming.runner.replay``; a
+    module calling ``.awaitTermination(`` itself is a second lifecycle
+    (the Kafka sink operator is unbounded, not a replay). No Spark."""
+    import pathlib
+
+    import streamingdemo_spark
+
+    root = pathlib.Path(streamingdemo_spark.__file__).parent
+    found = {
+        path.relative_to(root).as_posix()
+        for path in root.rglob("*.py")
+        if ".awaitTermination(" in path.read_text()
+    }
+    assert found <= {"streaming/runner.py", "operators/builtin.py"}, found

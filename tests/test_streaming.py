@@ -133,8 +133,15 @@ class TestRunLogListener:
             detach_run_log(spark, listener)
         kinds = [e["event"] for e in listener.entries]
         assert "started" in kinds and "terminated" in kinds
-        assert any(e["event"] == "progress" and e["num_input_rows"] > 0
-                   for e in listener.entries)
+        progress = [e for e in listener.entries if e["event"] == "progress"]
+        assert any(e["numInputRows"] > 0 for e in progress)
+        # the full progress dict: batch phases and state-store timings
+        assert all("triggerExecution" in e["durationMs"] for e in progress)
+        assert any(
+            "commitTimeMs" in op and "allUpdatesTimeMs" in op
+            for e in progress
+            for op in e["stateOperators"]
+        )
         terminated = [e for e in listener.entries if e["event"] == "terminated"]
         assert all(e["status"] == "success" for e in terminated)
         json.loads("[" + ",".join(listener.to_json_lines().splitlines()) + "]")
@@ -150,6 +157,7 @@ class TestCheckpointResume:
         import os
         import shutil
 
+        from streamingdemo_spark.streaming.runner import replay
         from streamingdemo_spark.streaming.sources import (
             EVENTS_SCHEMA,
             _build,
@@ -166,15 +174,9 @@ class TestCheckpointResume:
 
         def run_phase():
             stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
-            q = (
-                stream.select("event_id", "user_id")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(120)
+            writer = stream.select("event_id", "user_id").writeStream
+            replay(writer.format("parquet").option("path", out), spark,
+                   checkpoint=ckpt, timeout_sec=120)
 
         for f in files[: len(files) // 2]:
             shutil.copy(os.path.join(src_all, f), staged)
@@ -205,6 +207,7 @@ def test_anomaly_state_survives_checkpoint_resume(spark, sf_dir, tmp_path):
 
     from streamingdemo_spark.registry import QUERIES
     from streamingdemo_spark.streaming.queries import apply_anomaly_screen
+    from streamingdemo_spark.streaming.runner import replay
     from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
 
     src_all = _build(sf_dir, "ordered", 8)
@@ -221,15 +224,9 @@ def test_anomaly_state_survives_checkpoint_resume(spark, sf_dir, tmp_path):
 
     def run_phase():
         stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
-        q = (
-            apply_anomaly_screen(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
+        writer = apply_anomaly_screen(stream).writeStream.foreachBatch(sink)
+        replay(writer.outputMode("update"), spark, checkpoint=ckpt,
+               timeout_sec=180)
 
     for f in files[: len(files) // 2]:
         shutil.copy(os.path.join(src_all, f), staged)
@@ -329,7 +326,7 @@ def test_stateful_stream_runs_on_rocksdb_state_store(spark, sf_dir):
                 ops = [
                     op
                     for e in listener.entries
-                    for op in e.get("state_operators", [])
+                    for op in e.get("stateOperators", [])
                 ]
                 if ops and any(
                     e["event"] == "terminated" for e in listener.entries
@@ -359,7 +356,7 @@ def test_stateful_stream_runs_on_rocksdb_state_store(spark, sf_dir):
     assert got == baseline and len(got) > 0
 
     def metric_names(ops):
-        return {m for op in ops for m in op["custom_metrics"]}
+        return {m for op in ops for m in op["customMetrics"]}
 
     hdfs_metrics = metric_names(ops_hdfs)
     rocks_metrics = metric_names(ops_rocks)
@@ -372,8 +369,8 @@ def test_stateful_stream_runs_on_rocksdb_state_store(spark, sf_dir):
         f"not engage: {sorted(rocks_metrics)[:5]}"
     )
     # same replay -> same final state volume, backend-independent
-    assert max(op["num_rows_total"] for op in ops_hdfs) == max(
-        op["num_rows_total"] for op in ops_rocks
+    assert max(op["numRowsTotal"] for op in ops_hdfs) == max(
+        op["numRowsTotal"] for op in ops_rocks
     )
 
 
@@ -633,28 +630,6 @@ def test_stream_dedup_embedding_is_multibatch_and_consistent(spark, sf_dir):
     assert out  # jittered fixtures always share some sign buckets
 
 
-def test_processing_time_trigger_fires_repeated_batches(spark, sf_dir):
-    """B4's wall-clock cadence (the reference's one hard performance
-    fact: a fixed batch interval, OpContainer.java:47-49) must have a
-    RUNTIME witness, not just a config string: drive the shared runner
-    with trigger(processingTime='1 second') over the rate source and
-    assert at least TWO DISTINCT micro-batches completed — the
-    liveness contract of a cadence trigger. availableNow replays cover
-    every deterministic facet of B4; this covers the clock."""
-    from streamingdemo_spark.streaming import runner
-
-    stream = spark.readStream.format("rate").option(
-        "rowsPerSecond", 20
-    ).load()
-    runner.run_to_memory(
-        stream, timeout_sec=30, processing_time="1 second", min_batches=2
-    )
-    batch_ids = {
-        p.get("batchId") for p in runner.LAST_STREAM_PROGRESS
-    } - {None}
-    assert len(batch_ids) >= 2, runner.LAST_STREAM_PROGRESS
-
-
 def test_progress_dict_accepts_both_shapes():
     """r12 ADVICE: the cadence poll loop assumed StreamingQueryProgress
     objects while the capture path defended dict-shaped progress
@@ -668,6 +643,106 @@ def test_progress_dict_accepts_both_shapes():
         json = '{"batchId": 9}'
 
     assert _progress_dict(_Obj())["batchId"] == 9
+
+
+def _session_partitions(spark, n):
+    """Set the session's shuffle partitions; returns the undo."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    return lambda: spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_processing_time_replay_is_live_and_keeps_session_conf(spark):
+    """B4's wall-clock cadence (the reference's one hard performance
+    fact: a fixed batch interval, OpContainer.java:47-49) has a RUNTIME
+    witness: a processingTime='1 second' replay over the rate source
+    completes min_batches DISTINCT micro-batches. The runner's 8 state
+    partitions must not leak into the session while that query runs,
+    where a concurrent query would plan with them: another thread
+    polls the session conf once the replay is past its first batch."""
+    import threading
+    import time
+
+    from streamingdemo_spark.streaming import runner
+
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 20)
+    done = []
+    t = threading.Thread(target=lambda: done.append(runner.run_to_memory(
+        stream.load(), timeout_sec=30, processing_time="1 second",
+        min_batches=3,
+    )))
+    undo, seen = _session_partitions(spark, 32), []
+    try:
+        t.start()
+        while t.is_alive():
+            if any(
+                (q.lastProgress or {}).get("batchId", 0) >= 1
+                for q in spark.streams.active
+            ):
+                seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+            time.sleep(0.05)
+    finally:
+        t.join(60)
+        undo()
+    assert done, "replay raised or hung"
+    batch_ids = {p.get("batchId") for p in runner.LAST_STREAM_PROGRESS}
+    assert len(batch_ids - {None}) >= 3, runner.LAST_STREAM_PROGRESS
+    assert seen and set(seen) == {"32"}, seen
+
+
+def test_state_partitions_reach_the_query_not_the_session(spark, sf_dir):
+    """Restoring the conf straight after start() keeps the query's own
+    8 state partitions: the query plans on a clone of the session."""
+    import os
+
+    from streamingdemo_spark.streaming import runner
+
+    sf001 = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+    undo = _session_partitions(spark, 32)
+    try:
+        QUERIES["stream_tumbling"](spark, sf001).count()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        undo()
+    ops = [p["stateOperators"][0] for p in runner.LAST_STREAM_PROGRESS]
+    assert ops and all(op["numShufflePartitions"] == 8 for op in ops), ops
+
+
+def test_run_to_memory_leaves_no_table(spark, sf_dir):
+    """The memory sink's view is dropped once the result frame is
+    bound: a replay adds no table to the session, and the frame still
+    reads the sink's rows."""
+    from streamingdemo_spark.streaming import runner
+    from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
+
+    src = _build(sf_dir, "ordered", 4)
+    n_tables = len(spark.catalog.listTables())
+    out = runner.run_to_memory(
+        spark.readStream.schema(EVENTS_SCHEMA).parquet(src).select("event_id")
+    )
+    assert len(spark.catalog.listTables()) == n_tables
+    want = _rows(spark.read.schema(EVENTS_SCHEMA).parquet(src), "event_id")
+    assert _rows(out, "event_id") == want and want
+
+
+def test_replay_timeout_raises_and_stops_the_query(spark, sf_dir):
+    """A replay that outruns its bound raises instead of handing back
+    a partly written sink, and stops its query on the way out."""
+    import time
+
+    import pytest
+
+    from streamingdemo_spark.streaming import runner
+    from streamingdemo_spark.streaming.sources import events_stream
+
+    writer = events_stream(spark, sf_dir, n_chunks=2).writeStream
+    with pytest.raises(TimeoutError):
+        runner.replay(
+            writer.foreachBatch(lambda df, epoch: time.sleep(5)),
+            spark,
+            timeout_sec=1,
+        )
+    assert spark.streams.active == []
 
 
 def test_cache_gc_is_scoped_per_source_file(sf_dir, monkeypatch, tmp_path):

@@ -7,7 +7,9 @@ N reps of a noop-sink drain (guide §1.4 — computes every column of
 every row without sink cost). Streaming keys (whose builder executes
 the replay and returns a memory table) are timed end-to-end around the
 builder instead, and their captured runtime plan
-(``runner.STREAM_PLANS``) is written as the artifact.
+(``runner.LAST_STREAM_PLAN``) is written as the artifact. A key that
+runs two replays (``stream_incremental_agg``, ``stream_sample_bottomk``)
+records the plan of its last one.
 
 Usage:
     python tools/opt_measure.py --keys k1,k2 [--label before]
@@ -81,21 +83,18 @@ def main() -> None:
         for rep in range(args.reps):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{key} [{args.label}]")
-            n_streams_before = len(runner.STREAM_PLANS)
+            runner.LAST_STREAM_PLAN = ""
             t0 = time.perf_counter()
             df = queries[key](spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             walls.append(time.perf_counter() - t0)
             if rep == 0 and not args.no_plan:
-                if len(runner.STREAM_PLANS) > n_streams_before:
+                if runner.LAST_STREAM_PLAN:
                     # streaming key: runtime plan captured by the runner
-                    new = list(runner.STREAM_PLANS)[n_streams_before:]
-                    plan_txt = "\n\n".join(
-                        runner.STREAM_PLANS[n] for n in new
-                    )
                     plan_txt = (
-                        "== Streaming runtime plan(s) via "
-                        "StreamingQuery.explain() ==\n" + plan_txt
+                        "== Streaming runtime plan via "
+                        "StreamingQuery.explain() ==\n"
+                        + runner.LAST_STREAM_PLAN
                         + "\n\n== Post-replay batch plan ==\n"
                         + _capture_plan(df)
                     )
