@@ -387,7 +387,8 @@ def _derive_order() -> list[str]:
     # Proven block, ordered by regression risk: keys whose implementing
     # module — or any of the shared helper modules EVERY key flows
     # through (registry's sum/hash helpers, the table loader, the
-    # session config, the streaming runner/sources) — changed since the
+    # session config, the streaming runner/sources, the txn-log format
+    # every txn-log key reads and writes through) — changed since the
     # round that earned their last green row first, then
     # oldest-green-first, priority order as the tiebreak — so the
     # re-run budget lands where a regression could actually hide. The
@@ -400,6 +401,7 @@ def _derive_order() -> list[str]:
         "streamingdemo_spark/session.py",
         "streamingdemo_spark/streaming/runner.py",
         "streamingdemo_spark/streaming/sources.py",
+        "streamingdemo_spark/plans/txn_log.py",
     ]
     shared_ts = max(
         (_change_ts(p) for p in shared if (_REPO / p).exists()),

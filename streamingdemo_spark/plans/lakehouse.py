@@ -3,8 +3,9 @@ reference C6 write path, ``SparkSQLOperator.java:23``): multi-
 dimensional clustering (OPTIMIZE ZORDER BY) and incremental
 materialized-view maintenance from the change feed.
 
-``plans/scans.py`` holds the protocol core (atomic commit, read-set
-validation, COW MERGE, compaction, vacuum/restore); this module builds
+``plans/txn_log.py`` owns the log format and protocol (atomic commit,
+read-set validation, vacuum) and ``plans/scans.py`` the core keys (COW
+MERGE, compaction, restore); this module builds
 the two capabilities on top that make a 100 TB table *queryable* and
 *derivable* without full rescans:
 
@@ -19,7 +20,6 @@ the two capabilities on top that make a 100 TB table *queryable* and
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -28,14 +28,11 @@ from pyspark.sql import functions as F
 from streamingdemo_spark.io import load_tables
 from streamingdemo_spark.registry import query
 from streamingdemo_spark.scratch import scratch_dir
+from streamingdemo_spark.plans import txn_log
 from streamingdemo_spark.plans.scans import (
     _stage_with_quantiles,
     _cow_merge_txn,
     _footer_stats,
-    _txn_log_commit_count,
-    _txn_log_replay,
-    _txn_log_replay_actions,
-    _txn_log_try_commit,
 )
 
 _MORTON_SPREADS = (
@@ -62,6 +59,18 @@ def _morton2(x: Column, y: Column) -> Column:
     which is exactly what turns one-dimensional per-file min/max
     stats into a two-dimensional prune."""
     return _morton_spread(x).bitwiseOR(F.shiftleft(_morton_spread(y), 1))
+
+
+def _add_2d(path: str, st: dict[str, tuple[int, int]]) -> dict:
+    """Add action carrying per-file min/max for BOTH clustering
+    columns."""
+    return {
+        "add": path,
+        "min_key": int(st["o_orderkey"][0]),
+        "max_key": int(st["o_orderkey"][1]),
+        "min_ck": int(st["o_custkey"][0]),
+        "max_ck": int(st["o_custkey"][1]),
+    }
 
 
 def _zorder_stage(
@@ -100,31 +109,16 @@ def _zorder_stage(
         for d in os.listdir(data_dir)
         if d.startswith("b=")
     }
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
-    lines = []
-    for part in sorted(stats):
-        st = stats[part]
-        lines.append(
-            json.dumps(
-                {
-                    "add": f"data/b={part}",
-                    "min_key": int(st["o_orderkey"][0]),
-                    "max_key": int(st["o_orderkey"][1]),
-                    "min_ck": int(st["o_custkey"][0]),
-                    "max_ck": int(st["o_custkey"][1]),
-                }
-            )
-            + "\n"
-        )
-    if not _txn_log_try_commit(log_dir, 0, lines):
-        raise RuntimeError("staging commit 0 failed")
+    log_dir = txn_log.create(
+        os.path.join(base, "_txn_log"),
+        [[_add_2d(f"data/b={part}", stats[part]) for part in sorted(stats)]],
+    )
     return base, log_dir
 
 
 def _zorder_txn(
     spark: SparkSession, base: str, log_dir: str, n_files: int = 8
-) -> tuple[int, set[str], list[str]]:
+) -> txn_log.Plan:
     """Plan + stage one OPTIMIZE ZORDER transaction against the
     CURRENT snapshot: read every live file (clustering is a full
     rewrite of the optimized span — here the whole table), sort by
@@ -134,7 +128,7 @@ def _zorder_txn(
     ``n_files`` equal z-ranges, and land the rewrite with fresh 2-D
     per-file stats. Data-identical by contract (clustering is purely
     physical), enforced loudly. Returns ``(base_version,
-    planned_removes, commit action lines)`` for the optimistic-commit
+    planned_removes, commit actions)`` for the optimistic-commit
     loop — Z-ORDER commits exactly like compaction and must lose to
     an overlapping row-changing writer.
 
@@ -145,8 +139,8 @@ def _zorder_txn(
     arithmetic on the code, which a production writer replaces with
     repartitionByRange + target file sizing without changing the
     transaction."""
-    base_version = _txn_log_commit_count(log_dir)
-    live = _txn_log_replay_actions(log_dir)
+    base_version = txn_log.next_version(log_dir)
+    live = txn_log.snapshot(log_dir)
     src = spark.read.parquet(
         *(os.path.join(base, p) for p in live)
     ).select("o_orderkey", "o_custkey", "o_totalprice")
@@ -218,17 +212,8 @@ def _zorder_txn(
         raise RuntimeError(
             f"Z-ORDER must be data-identical: read {n_in}, wrote {n_out}"
         )
-    actions = [json.dumps({"remove": p}) + "\n" for p in live] + [
-        json.dumps(
-            {
-                "add": f"{out_name}/zb={part}",
-                "min_key": int(st["o_orderkey"][0]),
-                "max_key": int(st["o_orderkey"][1]),
-                "min_ck": int(st["o_custkey"][0]),
-                "max_ck": int(st["o_custkey"][1]),
-            }
-        )
-        + "\n"
+    actions = [{"remove": p} for p in live] + [
+        _add_2d(f"{out_name}/zb={part}", st)
         for part, (_n, st) in sorted(stats.items())
     ]
     return base_version, set(live), actions
@@ -302,16 +287,16 @@ def snk_txn_log_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         base, log_dir = stage_fut.result()
     qlo, qhi = int(row["qs"][0]), int(row["qs"][1])
-    before = _txn_log_replay_actions(log_dir)
+    before = txn_log.snapshot(log_dir)
     if len(_ck_prune(before, qlo, qhi)) != len(before):
         raise RuntimeError(
             "staged pre-OPTIMIZE layout must be unprunable on "
             "o_custkey, or this key proves nothing"
         )
     b_ver, removes, actions = _zorder_txn(spark, base, log_dir)
-    if not _txn_log_try_commit(log_dir, b_ver, actions):
+    if not txn_log.try_commit(log_dir, b_ver, actions):
         raise RuntimeError("uncontended Z-ORDER commit failed")
-    live = _txn_log_replay_actions(log_dir)
+    live = txn_log.snapshot(log_dir)
     keep = _ck_prune(live, qlo, qhi)
     if not keep or len(keep) >= len(live):
         raise RuntimeError(
@@ -336,17 +321,10 @@ def _mv_delta(
     added files the postimage — the immutable store keeps both).
     Returns (delta frame with columns (o_orderstatus, n_orders,
     sum_cents), number of delta files read)."""
-    removed, added = [], []
-    with open(os.path.join(log_dir, f"{version:08d}.json")) as f:
-        for line in f:
-            a = json.loads(line)
-            if "remove" in a:
-                removed.append(os.path.join(base, a["remove"]))
-            if "add" in a:
-                added.append(os.path.join(base, a["add"]))
+    removed, added = txn_log.commit_files(log_dir, version)
     sign = [(added, 1), (removed, -1)]
     parts = [
-        spark.read.parquet(*paths)
+        spark.read.parquet(*(os.path.join(base, p) for p in paths))
         .groupBy("o_orderstatus")
         .agg(
             (F.count("*") * s).alias("n_orders"),
@@ -421,9 +399,9 @@ def snk_txn_log_incr_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         v, _, actions = _cow_merge_txn(
             spark, base, log_dir, ulo, uhi, num, 10, out
         )
-        if not _txn_log_try_commit(log_dir, v, actions):
+        if not txn_log.try_commit(log_dir, v, actions):
             raise RuntimeError(f"uncontended merge {out} failed")
-    v0 = _txn_log_replay(log_dir, as_of=0)
+    v0 = txn_log.snapshot(log_dir, as_of=0)
     mv = (
         spark.read.parquet(*(os.path.join(base, p) for p in v0))
         .groupBy("o_orderstatus")
@@ -432,7 +410,7 @@ def snk_txn_log_incr_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr(_CENTS)).alias("sum_cents"),
         )
     )
-    n_live = len(_txn_log_replay(log_dir))
+    n_live = len(txn_log.snapshot(log_dir))
     for version in (1, 2):
         delta, n_delta = _mv_delta(spark, base, log_dir, version)
         if n_delta >= n_live:
@@ -486,8 +464,6 @@ def src_txn_log_partition_evolution(
     metadata change for new data instead of an O(table) rewrite, and
     query planning stays per-file-spec — each generation prunes
     under its own scheme, old files age out through compaction."""
-    import json as _json
-
     o = load_tables(spark, sf_dir, ("orders",))["orders"].select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -506,30 +482,24 @@ def src_txn_log_partition_evolution(
         r["o_orderstatus"]
         for r in gen2.select("o_orderstatus").distinct().collect()
     )  # |status domain| rows — writer-side partition listing
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
-    c0 = [
-        _json.dumps(
-            {"add": f"gen1/b={i}", "spec": "bucket4(o_orderkey)"}
-        )
-        + "\n"
-        for i in range(4)
-    ]
-    c1 = [
-        _json.dumps(
-            {
-                "add": f"gen2/o_orderstatus={s}",
-                "spec": "identity(o_orderstatus)",
-                "pv": {"o_orderstatus": s},
-            }
-        )
-        + "\n"
-        for s in statuses
-    ]
-    for v, lines in enumerate((c0, c1)):
-        if not _txn_log_try_commit(log_dir, v, lines):
-            raise RuntimeError(f"staging commit {v} failed")
-    live = _txn_log_replay_actions(log_dir)
+    log_dir = txn_log.create(
+        os.path.join(base, "_txn_log"),
+        [
+            [
+                {"add": f"gen1/b={i}", "spec": "bucket4(o_orderkey)"}
+                for i in range(4)
+            ],
+            [
+                {
+                    "add": f"gen2/o_orderstatus={s}",
+                    "spec": "identity(o_orderstatus)",
+                    "pv": {"o_orderstatus": s},
+                }
+                for s in statuses
+            ],
+        ],
+    )
+    live = txn_log.snapshot(log_dir)
     want = "F"
     keep_old = [
         p for p, a in sorted(live.items()) if "pv" not in a
@@ -641,23 +611,18 @@ def _bloom_stage(
     blooms: dict[int, dict[int, int]] = {}
     for r in words:
         blooms.setdefault(int(r["b"]), {})[int(r["w"])] = int(r["word"])
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
-    lines = []
-    for part in sorted(blooms):
-        packed = "".join(
-            format(blooms[part].get(w, 0) & 0xFFFFFFFFFFFFFFFF, "016x")
-            for w in range(m // 64)
-        )
-        lines.append(
-            json.dumps(
-                {"add": f"data/b={part}", "bloom_ck": packed, "m": m}
-            )
-            + "\n"
-        )
-    if not _txn_log_try_commit(log_dir, 0, lines):
-        raise RuntimeError("staging commit 0 failed")
-    return base, log_dir, m
+    adds = [
+        {
+            "add": f"data/b={part}",
+            "bloom_ck": "".join(
+                format(blooms[part].get(w, 0) & 0xFFFFFFFFFFFFFFFF, "016x")
+                for w in range(m // 64)
+            ),
+            "m": m,
+        }
+        for part in sorted(blooms)
+    ]
+    return base, txn_log.create(os.path.join(base, "_txn_log"), [adds]), m
 
 
 def _bloom_might_contain(action: dict, key: int) -> bool:
@@ -719,7 +684,7 @@ def src_txn_log_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .collect()[0]["o_custkey"]
     )  # 1 scalar — the query's own parameter
-    live = _txn_log_replay_actions(log_dir)
+    live = txn_log.snapshot(log_dir)
     keep = [
         p
         for p, a in sorted(live.items())

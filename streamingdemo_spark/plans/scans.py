@@ -9,8 +9,6 @@ SQL — the reference's Hive-table reads, ``SparkSQLOperator.java:18``);
 from __future__ import annotations
 
 import os
-import re
-
 
 from streamingdemo_spark.scratch import scratch_dir
 
@@ -18,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamingdemo_spark.io import load_tables, register_views, table_path
+from streamingdemo_spark.plans import txn_log
 from streamingdemo_spark.registry import dsum, opoly, osum, query
 from streamingdemo_spark.streaming.runner import replay
 
@@ -544,14 +543,12 @@ def _footer_stats(
     return n_rows, {c: (mins[c], maxs[c]) for c in mins}
 
 
-def _txn_log_stage(
+def _stage_parts(
     spark: SparkSession, sf_dir: str, prefix: str, commits: list[list[dict]]
 ) -> tuple[str, str]:
     """Stage the minimal lakehouse fixture shared by the txn-log keys:
-    orders hash-partitioned into part0..part3 data directories plus an
-    ordered JSON commit log of add/remove actions. Returns
-    (table base dir, log dir)."""
-    import json
+    orders hash-partitioned into part0..part3 data directories plus a
+    log holding ``commits``. Returns (table base dir, log dir)."""
     from concurrent.futures import ThreadPoolExecutor
 
     base = scratch_dir(prefix=prefix)
@@ -571,154 +568,18 @@ def _txn_log_stage(
     # overlap independent jobs). pool.map re-raises any write error.
     with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(_write_part, range(4)))
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
-    for i, actions in enumerate(commits):
-        with open(os.path.join(log_dir, f"{i:08d}.json"), "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
-    return base, log_dir
+    return base, txn_log.create(os.path.join(base, "_txn_log"), commits)
 
 
-def _txn_log_replay(log_dir: str, as_of: int | None = None) -> set[str]:
-    """Replay the ordered commit log into the live file set — metadata
-    only, never row data. ``as_of`` cuts the LOG at that version (the
-    time-travel read); None replays to the latest snapshot."""
-    import json
-
-    live: set[str] = set()
-    for name in sorted(os.listdir(log_dir)):
-        # only pure commit files participate in a full replay —
-        # checkpoint artifacts (NNNNNNNN.checkpoint.json,
-        # _last_checkpoint) are derived state, not history
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        if as_of is not None and int(name.split(".")[0]) > as_of:
-            break
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                if "add" in a:
-                    live.add(a["add"])
-                if "remove" in a:
-                    live.discard(a["remove"])
-    return live
-
-
-def _txn_log_replay_actions(
-    log_dir: str, as_of: int | None = None
-) -> dict[str, dict]:
-    """Action-preserving replay: live ``{path: add-action dict}`` —
-    the add action carries whatever the writer recorded (per-file
-    stats, partition values), and a checkpoint must preserve ALL of
-    it, or checkpointed tables silently lose file skipping."""
-    import json
-
-    live: dict[str, dict] = {}
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        if as_of is not None and int(name.split(".")[0]) > as_of:
-            break
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                if "add" in a:
-                    live[a["add"]] = a
-                if "remove" in a:
-                    live.pop(a["remove"], None)
-    return live
-
-
-def _txn_log_write_checkpoint(log_dir: str, version: int) -> None:
-    """Materialize a checkpoint of the live-file set as of ``version``
-    and point ``_last_checkpoint`` at it — the Delta ``_last_checkpoint``
-    convention: readers resolve checkpoint + commit suffix instead of
-    replaying the whole log. The checkpoint is derived purely from the
-    log (a pure function of commits 0..version), so writing it is
-    idempotent and needs no coordination with concurrent committers.
-    Add actions are preserved VERBATIM (stats and all), so file
-    skipping survives checkpointing."""
-    import json
-
-    live_actions = _txn_log_replay_actions(log_dir, as_of=version)
-    # the checkpoint also carries the txn ledger (max committed
-    # version per appId over the prefix) — Delta's convention, so the
-    # idempotent-writer lookup is O(suffix) too, not O(n_commits)
-    txns: dict[str, int] = {}
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        if int(name.split(".")[0]) > version:
-            break
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                t = json.loads(line).get("txn")
-                if t:
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
-                    )
-    ckpt = os.path.join(log_dir, f"{version:08d}.checkpoint.json")
-    with open(ckpt, "w") as f:
-        for p in sorted(live_actions):
-            f.write(json.dumps(live_actions[p]) + "\n")
-        for app in sorted(txns):
-            f.write(
-                json.dumps({"txn": {"appId": app, "version": txns[app]}})
-                + "\n"
-            )
-    # _last_checkpoint is a single tiny pointer object, atomically
-    # replaced (os.replace) so readers never observe a partial write
-    tmp = os.path.join(log_dir, "_last_checkpoint.tmp")
-    with open(tmp, "w") as f:
-        f.write(json.dumps({"version": version}))
-    os.replace(tmp, os.path.join(log_dir, "_last_checkpoint"))
-
-
-def _txn_log_replay_checkpointed(
-    log_dir: str,
-) -> tuple[set[str], list[str]]:
-    """Resolve the latest snapshot via ``_last_checkpoint``: load the
-    checkpointed live set, then apply only commits AFTER the
-    checkpoint version. Returns ``(live set, log files opened)`` — the
-    opened list is the O(suffix) contract the tests pin (a full replay
-    opens every commit; this opens checkpoint + suffix only). Falls
-    back to full replay when no checkpoint exists."""
-    import json
-
-    opened: list[str] = []
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if not os.path.exists(ptr):
-        live = _txn_log_replay(log_dir)
-        return live, sorted(
-            n
-            for n in os.listdir(log_dir)
-            if re.fullmatch(r"\d{8}\.json", n)
-        )
-    with open(ptr) as f:
-        ckpt_version = int(json.load(f)["version"])
-    ckpt_name = f"{ckpt_version:08d}.checkpoint.json"
-    opened.append(ckpt_name)
-    live: set[str] = set()
-    with open(os.path.join(log_dir, ckpt_name)) as f:
-        for line in f:
-            a = json.loads(line)
-            if "add" in a:  # checkpoints also carry txn-ledger rows
-                live.add(a["add"])
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue  # checkpoints/pointer are not commit history
-        if int(name.split(".")[0]) <= ckpt_version:
-            continue  # pre-checkpoint commits are never opened
-        opened.append(name)
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                if "add" in a:
-                    live.add(a["add"])
-                if "remove" in a:
-                    live.discard(a["remove"])
-    return live, opened
+def _overlapping(live: dict[str, dict], lo: int, hi: int) -> list[str]:
+    """Stats-based file skipping: the live paths whose logged
+    ``[min_key, max_key]`` can overlap ``[lo, hi]`` — log metadata
+    only, driver-side by design."""
+    return [
+        p
+        for p, a in sorted(live.items())
+        if not (a["max_key"] < lo or a["min_key"] > hi)
+    ]
 
 
 @query(
@@ -730,25 +591,21 @@ def _txn_log_replay_checkpointed(
 )
 def src_txn_log_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log checkpointing for the minimal lakehouse format — the
-    ``_last_checkpoint`` mechanism that keeps snapshot resolution
-    O(checkpoint + commit suffix) instead of O(n_commits)
-    (``_txn_log_replay`` re-reads every commit; Delta solves exactly
-    this with periodic parquet checkpoints + a ``_last_checkpoint``
-    pointer, Iceberg with snapshot manifests). At 100 TB a table
-    accretes millions of commits; without checkpoints every reader's
-    PLANNING cost grows with table history — with them it is bounded
-    by the checkpoint cadence regardless of age.
+    checkpoint + pointer mechanism (``plans/txn_log.py``) that keeps
+    snapshot resolution O(checkpoint + commit suffix) instead of
+    O(n_commits) (Delta solves exactly this with periodic parquet
+    checkpoints + a pointer file, Iceberg with snapshot manifests). At
+    100 TB a table accretes millions of commits; without checkpoints
+    every reader's PLANNING cost grows with table history — with them
+    it is bounded by the checkpoint cadence regardless of age.
 
     Writer side: the staged history (8 commits of add/remove churn
-    over 4 parts) checkpoints on cadence — after every 5th commit the
-    full live set is materialized as ``NNNNNNNN.checkpoint.json`` and
-    ``_last_checkpoint`` atomically re-pointed (the checkpoint is a
-    pure function of the log prefix, so it needs no coordination with
-    concurrent committers). Reader side: resolve = pointer read +
-    checkpoint load + replay of commits 5..7 ONLY — the key raises
-    loudly if any pre-checkpoint commit file was opened, and
-    tests/test_plans.py pins the opened-file list plus
-    checkpointed-equals-full-replay equivalence on the same log.
+    over 4 parts) checkpoints on cadence — after every 5th commit.
+    Reader side: resolve = pointer read + checkpoint load + replay of
+    commits 5..7 ONLY — the key raises loudly if any pre-checkpoint
+    commit file was opened, and tests/test_plans.py pins the
+    opened-file list plus checkpointed-equals-full-replay equivalence
+    on the same log.
 
     Churn history is chosen so correctness is visible: part 0 is
     removed then re-added BEFORE the checkpoint (a reader that merges
@@ -757,7 +614,7 @@ def src_txn_log_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
     live set {part0, part1, part2} — the oracle asserts the logical
     equivalent (keys with ``o_orderkey % 4 != 3``).
     """
-    base, log_dir = _txn_log_stage(
+    base, log_dir = _stage_parts(
         spark,
         sf_dir,
         "txnlog_ckpt_",
@@ -774,70 +631,24 @@ def src_txn_log_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
             [{"add": "part1"}],
         ],
     )
-    _txn_log_write_checkpoint(log_dir, version=4)
-    live, opened = _txn_log_replay_checkpointed(log_dir)
+    txn_log.write_checkpoint(log_dir, version=4)
+    live, opened = txn_log.resolve(log_dir)
     # O(suffix) invariant, raised explicitly (the whole point of the
     # key): only the checkpoint and the 3 post-checkpoint commits may
     # be opened — never the 5 pre-checkpoint commit files
-    expected_opened = [
-        "00000004.checkpoint.json",
-        "00000005.json",
-        "00000006.json",
-        "00000007.json",
+    expected_opened = [txn_log.checkpoint_name(4)] + [
+        txn_log.commit_name(v) for v in (5, 6, 7)
     ]
     if opened != expected_opened:
         raise RuntimeError(
             f"checkpointed resolve opened {opened}, "
             f"expected exactly {expected_opened}"
         )
-    if live != _txn_log_replay(log_dir):
+    if live != txn_log.snapshot(log_dir):
         raise RuntimeError(
             "checkpointed snapshot diverged from full replay"
         )
     return spark.read.parquet(*(os.path.join(base, p) for p in sorted(live)))
-
-
-def _txn_log_stats_replay_checkpointed(
-    log_dir: str,
-) -> tuple[list[tuple[str, int, int]], list[str]]:
-    """Stats-carrying snapshot resolve via ``_last_checkpoint``:
-    returns (live ``(path, min, max)`` list, log files opened) — the
-    composition of O(suffix) planning and stats-based file skipping.
-    Falls back to full stats replay when no checkpoint exists."""
-    import json
-
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if not os.path.exists(ptr):
-        return _txn_log_stats_replay(log_dir), sorted(
-            n for n in os.listdir(log_dir) if re.fullmatch(r"\d{8}\.json", n)
-        )
-    with open(ptr) as f:
-        ckpt_version = int(json.load(f)["version"])
-    ckpt_name = f"{ckpt_version:08d}.checkpoint.json"
-    opened = [ckpt_name]
-    live: dict[str, tuple[int, int]] = {}
-
-    def apply(a: dict) -> None:
-        if "add" in a:
-            live[a["add"]] = (a["min_key"], a["max_key"])
-        if "remove" in a:
-            live.pop(a["remove"], None)
-
-    with open(os.path.join(log_dir, ckpt_name)) as f:
-        for line in f:
-            a = json.loads(line)
-            if "add" in a:
-                apply(a)
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        if int(name.split(".")[0]) <= ckpt_version:
-            continue
-        opened.append(name)
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                apply(json.loads(line))
-    return [(p, mn, mx) for p, (mn, mx) in sorted(live.items())], opened
 
 
 @query(
@@ -866,7 +677,7 @@ def src_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers that listed the log before commit 1 keep reading part 0's
     still-present file.
     """
-    base, log_dir = _txn_log_stage(
+    base, log_dir = _stage_parts(
         spark,
         sf_dir,
         "txnlog_",
@@ -875,7 +686,7 @@ def src_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             [{"add": "part3"}, {"remove": "part0"}],
         ],
     )
-    live = _txn_log_replay(log_dir)
+    live = txn_log.snapshot(log_dir)
     return spark.read.parquet(*(os.path.join(base, p) for p in sorted(live)))
 
 
@@ -906,7 +717,7 @@ def src_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the snapshot key; commit 2's data files exist on disk and must
     not be touched by the scan.
     """
-    base, log_dir = _txn_log_stage(
+    base, log_dir = _stage_parts(
         spark,
         sf_dir,
         "txnlog_tt_",
@@ -918,7 +729,7 @@ def src_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # AS OF version 1: replay commits 0..1 only — the version cut is a
     # filename comparison on the ordered log, nothing else changes
-    live = _txn_log_replay(log_dir, as_of=1)
+    live = txn_log.snapshot(log_dir, as_of=1)
     return spark.read.parquet(*(os.path.join(base, p) for p in sorted(live)))
 
 
@@ -989,7 +800,7 @@ def src_txn_log_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds parts 0-1, commit 1 adds part 2 / removes part 0, commit 2
     adds part 3 / removes part 1.
     """
-    base, log_dir = _txn_log_stage(
+    base, log_dir = _stage_parts(
         spark,
         sf_dir,
         "txnlog_inc_",
@@ -1115,14 +926,13 @@ def src_txn_log_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals the logical table's answer: skipping must be
     invisible to query semantics.
     """
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     qlo = lo + span * 3 // 10
     qhi = lo + span * 9 // 20
     keep = [
         os.path.join(base, p)
-        for p, mn, mx in _txn_log_stats_replay(log_dir)
-        if not (mx < qlo or mn > qhi)
+        for p in _overlapping(txn_log.snapshot(log_dir), qlo, qhi)
     ]
     return (
         spark.read.parquet(*keep)
@@ -1131,7 +941,7 @@ def src_txn_log_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _txn_log_stats_stage(
+def _stage_stats(
     spark: SparkSession, sf_dir: str, n_files: int = 8
 ) -> tuple[str, str, int, int]:
     """Stage orders as a stats-carrying txn-log table: n_files tight
@@ -1140,8 +950,6 @@ def _txn_log_stats_stage(
     (writer-side stats, the Delta convention). Shared by the
     stats-prune read key and the copy-on-write MERGE key. Returns
     (base dir, log dir, key lo, key hi)."""
-    import json
-
     o = load_tables(spark, sf_dir, ("orders",))["orders"].select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1171,41 +979,16 @@ def _txn_log_stats_stage(
         for d in os.listdir(data_dir)
         if d.startswith("b=")
     }
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
-    with open(os.path.join(log_dir, "00000000.json"), "w") as f:
-        for part in sorted(stats):
-            mn, mx = stats[part]
-            f.write(
-                json.dumps(
-                    {"add": f"data/b={part}", "min_key": mn, "max_key": mx}
-                )
-                + "\n"
-            )
+    log_dir = txn_log.create(
+        os.path.join(base, "_txn_log"),
+        [
+            [
+                {"add": f"data/b={part}", "min_key": mn, "max_key": mx}
+                for part, (mn, mx) in sorted(stats.items())
+            ]
+        ],
+    )
     return base, log_dir, lo, hi
-
-
-def _txn_log_stats_replay(log_dir: str) -> list[tuple[str, int, int]]:
-    """Replay a stats-carrying log into the live (path, min, max) set —
-    metadata only, add/remove actions in commit order."""
-    import json
-
-    live: dict[str, tuple[int, int]] = {}
-    for name in sorted(os.listdir(log_dir)):
-        # same commit-filename guard as _txn_log_replay: checkpoint
-        # artifacts (NNNNNNNN.checkpoint.json, _last_checkpoint) are
-        # derived state, never history — parsing them here would
-        # double-apply adds (and break on a future checkpoint format)
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                if "add" in a:
-                    live[a["add"]] = (a["min_key"], a["max_key"])
-                if "remove" in a:
-                    live.pop(a["remove"], None)
-    return [(p, mn, mx) for p, (mn, mx) in sorted(live.items())]
 
 
 @query(
@@ -1241,119 +1024,43 @@ def snk_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits (they list the log, not the directory), and contention
     costs one log re-read per retry.
 
-    Object-store mapping: ``O_CREAT|O_EXCL`` here stands in for the
-    store's conditional create — S3 ``PutObject`` with
-    ``If-None-Match: *``, GCS ``x-goog-if-generation-match: 0``,
-    Azure ``If-None-Match: *`` — or, on stores without a
-    conditional put, an external commit coordinator (DynamoDB
-    conditional write à la S3A committers / Delta's S3 LogStore).
-    The protocol is unchanged: exactly one writer may materialize
-    log version N; everyone else observes the existing object and
-    re-reads. ``snk_txn_log_conflict`` builds the read-set
-    validation that runs between losing the race and retrying.
+    The atomic claim and its object-store mapping are described in
+    ``plans/txn_log.py``. ``snk_txn_log_conflict`` builds the
+    read-set validation that runs between losing the race and
+    retrying.
     """
-    base, log_dir = _txn_log_stage(
+    base, log_dir = _stage_parts(
         spark,
         sf_dir,
         "txnlog_commit_",
-        [[{"add": "part0"}, {"add": "part1"}]],
+        # the rival writer's commit is already durable at version 1
+        [[{"add": "part0"}, {"add": "part1"}], [{"add": "part2"}]],
     )
-    # the rival writer's commit is already durable at version 1
-    with open(os.path.join(log_dir, "00000001.json"), "w") as f:
-        f.write('{"add": "part2"}\n')
 
     # our transaction: append part3 (data already on disk from the
     # staging write — invisible until the commit lands). Our log read
     # happened BEFORE the rival's commit landed, so the next version
-    # per our (stale) view is 1 — which the rival now holds. The
-    # atomic claim itself is the shared _txn_log_try_commit swap.
+    # per our (stale) view is 1 — which the rival now holds.
     conflicts = 0
     version = 1
-    while not _txn_log_try_commit(log_dir, version, ['{"add": "part3"}\n']):
+    while not txn_log.try_commit(log_dir, version, [{"add": "part3"}]):
         conflicts += 1
         if conflicts >= 10:
             raise RuntimeError("commit retry runaway")
         # conflict: re-read the log, re-validate (appends commute —
         # nothing to check for a blind insert), retry at the next free
         # version
-        version = _txn_log_commit_count(log_dir)
+        version = txn_log.next_version(log_dir)
     # protocol invariants raised explicitly (a bare assert vanishes
     # under python -O, silently passing a broken retry path)
     if conflicts != 1:
         raise RuntimeError(
             f"expected exactly one staged conflict, got {conflicts}"
         )
-    live = _txn_log_replay(log_dir)
+    live = set(txn_log.snapshot(log_dir))
     if live != {"part0", "part1", "part2", "part3"}:
         raise RuntimeError(f"lost a commit: live set {live}")
     return spark.read.parquet(*(os.path.join(base, p) for p in sorted(live)))
-
-
-class TxnConflictError(RuntimeError):
-    """A concurrent commit invalidated this transaction's read set —
-    the loser must abort or rebase, never blind-retry (a blind retry
-    of a COW MERGE planned against a stale snapshot re-removes files
-    a rival already rewrote and commits a rewrite computed from
-    pre-rival data: the rival's update is silently lost — the classic
-    lakehouse serializability bug)."""
-
-
-def _txn_log_try_commit(log_dir: str, version: int, lines: list[str]) -> bool:
-    """Atomic claim of log version N: ``O_CREAT|O_EXCL`` is the swap —
-    exactly one writer can create the file (conditional-put on an
-    object store; see ``snk_txn_log_commit``'s docstring for the
-    mapping)."""
-    path = os.path.join(log_dir, f"{version:08d}.json")
-    try:
-        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-    except FileExistsError:
-        return False
-    with os.fdopen(fd, "w") as f:
-        f.writelines(lines)
-    return True
-
-
-def _txn_log_commit_count(log_dir: str) -> int:
-    return len(
-        [n for n in os.listdir(log_dir) if re.fullmatch(r"\d{8}\.json", n)]
-    )
-
-
-def _txn_log_validate_read_set(
-    log_dir: str, base_version: int, planned_removes: set[str]
-) -> None:
-    """Read-set/write-set validation between losing a commit race and
-    retrying: replay every commit that landed AFTER this transaction's
-    base snapshot and raise :class:`TxnConflictError` if any of them
-    removed OR re-added a file this transaction planned to rewrite
-    (remove-vs-remove — the rows we read and are about to replace were
-    already replaced by someone else). Blind appends that touch none
-    of our files commute and validate clean (``snk_txn_log_commit``'s
-    case)."""
-    import json
-
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        version = int(name.split(".")[0])
-        if version < base_version:
-            continue
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                # remove and add are tested INDEPENDENTLY: coalescing
-                # with `or` would validate only the remove of an action
-                # that carried both keys, and an empty-string remove
-                # (falsy) would shadow a conflicting add
-                for field in ("remove", "add"):
-                    touched = a.get(field)
-                    if touched in planned_removes:
-                        raise TxnConflictError(
-                            f"commit {version} {field}d {touched!r}, "
-                            f"which this transaction read at base "
-                            f"version {base_version} and planned to "
-                            f"rewrite"
-                        )
 
 
 def _cow_merge_txn(
@@ -1365,27 +1072,22 @@ def _cow_merge_txn(
     mult_num: int,
     mult_den: int,
     out_name: str,
-) -> tuple[int, set[str], list[str]]:
+) -> txn_log.Plan:
     """Plan + stage one copy-on-write MERGE transaction against the
     CURRENT snapshot: stats-prune the update span to the affected
     files (the transaction's READ SET), land the rewrite data file
     (invisible until committed), and return
-    ``(base_version, planned_removes, commit action lines)`` for the
+    ``(base_version, planned_removes, commit actions)`` for the
     optimistic-commit loop. The price update is exact integer cents
     arithmetic (``(cents * num) DIV den``, non-negative operands)."""
-    import json
-
-    base_version = _txn_log_commit_count(log_dir)
-    live = _txn_log_stats_replay(log_dir)
-    affected = [
-        (p, mn, mx) for p, mn, mx in live if not (mx < ulo or mn > uhi)
-    ]
+    base_version = txn_log.next_version(log_dir)
+    affected = _overlapping(txn_log.snapshot(log_dir), ulo, uhi)
     updated_cents = F.expr(
         f"(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) "
         f"* {mult_num}) DIV {mult_den}"
     )
     rewritten = (
-        spark.read.parquet(*(os.path.join(base, p) for p, _, _ in affected))
+        spark.read.parquet(*(os.path.join(base, p) for p in affected))
         .select(
             "o_orderkey",
             "o_orderstatus",
@@ -1405,25 +1107,16 @@ def _cow_merge_txn(
         [os.path.join(base, out_name)], ("o_orderkey",)
     )
     mn, mx = fstats["o_orderkey"]
-    actions = [
-        json.dumps({"remove": p}) + "\n" for p, _, _ in affected
-    ] + [
-        json.dumps(
-            {
-                "add": out_name,
-                "min_key": int(mn),
-                "max_key": int(mx),
-            }
-        )
-        + "\n"
+    actions = [{"remove": p} for p in affected] + [
+        {"add": out_name, "min_key": int(mn), "max_key": int(mx)}
     ]
-    return base_version, {p for p, _, _ in affected}, actions
+    return base_version, set(affected), actions
 
 
 def _stage_with_quantiles(
     spark: SparkSession, sf_dir: str, *fracs: float
 ) -> tuple[str, str, int, int, list[int]]:
-    """``_txn_log_stats_stage`` and ``_orderkey_quantiles`` run over
+    """``_stage_stats`` and ``_orderkey_quantiles`` run over
     the same source but neither reads the other's output — run the
     staging write on a worker thread while the quantile pass runs on
     the main thread, so the fixture-staging wall is max(stage,
@@ -1433,7 +1126,7 @@ def _stage_with_quantiles(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        stage_fut = pool.submit(_txn_log_stats_stage, spark, sf_dir)
+        stage_fut = pool.submit(_stage_stats, spark, sf_dir)
         qs = _orderkey_quantiles(spark, sf_dir, *fracs)
         base, log_dir, lo, hi = stage_fut.result()
     return base, log_dir, lo, hi, qs
@@ -1545,28 +1238,28 @@ def snk_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"staged race must overlap: {a_removes} vs {b_removes}"
         )
     # writer A wins the race at version 1
-    if not _txn_log_try_commit(log_dir, a_base, a_actions):
+    if not txn_log.try_commit(log_dir, a_base, a_actions):
         raise RuntimeError("writer A's uncontended commit failed")
     # writer B: loses the claim, re-reads the log, validation MUST
     # detect the remove-vs-remove overlap and abort the transaction
     aborted = False
-    if _txn_log_try_commit(log_dir, b_base, b_actions):
+    if txn_log.try_commit(log_dir, b_base, b_actions):
         raise RuntimeError("writer B claimed a version A already holds")
     try:
-        _txn_log_validate_read_set(log_dir, b_base, b_removes)
-    except TxnConflictError:
+        txn_log.validate_read_set(log_dir, b_base, b_removes)
+    except txn_log.TxnConflictError:
         aborted = True  # the ONLY correct outcome: abort, commit nothing
     if not aborted:
         raise RuntimeError(
             "read-set validation missed the remove-vs-remove conflict"
         )
-    if _txn_log_commit_count(log_dir) != 2:
+    if txn_log.next_version(log_dir) != 2:
         raise RuntimeError("aborted writer must leave no commit behind")
-    final = _txn_log_stats_replay(log_dir)
-    if any(p == "rewriteB" for p, _, _ in final):
+    final = sorted(txn_log.snapshot(log_dir))
+    if "rewriteB" in final:
         raise RuntimeError("aborted writer's rewrite leaked into the log")
     return spark.read.parquet(
-        *(os.path.join(base, p) for p, _, _ in final)
+        *(os.path.join(base, p) for p in final)
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
 
 
@@ -1634,16 +1327,16 @@ def snk_txn_log_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_base, b_removes, b_stale_actions = _cow_merge_txn(
         spark, base, log_dir, blo, bhi, 9, 10, "rewriteB_stale"
     )
-    if not _txn_log_try_commit(log_dir, a_base, a_actions):
+    if not txn_log.try_commit(log_dir, a_base, a_actions):
         raise RuntimeError("writer A's uncontended commit failed")
-    if _txn_log_try_commit(log_dir, b_base, b_stale_actions):
+    if txn_log.try_commit(log_dir, b_base, b_stale_actions):
         raise RuntimeError("writer B claimed a version A already holds")
     try:
-        _txn_log_validate_read_set(log_dir, b_base, b_removes)
+        txn_log.validate_read_set(log_dir, b_base, b_removes)
         raise RuntimeError(
             "read-set validation missed the remove-vs-remove conflict"
         )
-    except TxnConflictError:
+    except txn_log.TxnConflictError:
         pass  # detected — now rebase instead of aborting
     # rebase: fresh plan against the CURRENT snapshot (A's rewrite is
     # now part of the read set), then commit at the next version
@@ -1654,50 +1347,13 @@ def snk_txn_log_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"rebased plan must read the winner's rewrite: {rb_removes}"
         )
-    _txn_log_validate_read_set(log_dir, rb_base, rb_removes)
-    if not _txn_log_try_commit(log_dir, rb_base, rb_actions):
+    txn_log.validate_read_set(log_dir, rb_base, rb_removes)
+    if not txn_log.try_commit(log_dir, rb_base, rb_actions):
         raise RuntimeError("rebased commit lost an impossible race")
-    final = _txn_log_stats_replay(log_dir)
+    final = sorted(txn_log.snapshot(log_dir))
     return spark.read.parquet(
-        *(os.path.join(base, p) for p, _, _ in final)
+        *(os.path.join(base, p) for p in final)
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-
-
-def _txn_log_last_txn_version(log_dir: str, app_id: str) -> int:
-    """Highest ``{"txn": {"appId", "version"}}`` action recorded for
-    ``app_id``, or -1 — the Delta ``txn``-action idempotence ledger a
-    streaming writer consults before committing an epoch. Metadata
-    only, and O(checkpoint + suffix) when a checkpoint exists: the
-    ledger rides the checkpoint (``_txn_log_write_checkpoint``), so
-    only commits after the checkpoint version are scanned — pinned by
-    a test that DELETES the pre-checkpoint commits and still gets the
-    right answer."""
-    import json
-
-    last = -1
-    after = -1
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            after = int(json.load(f)["version"])
-        with open(
-            os.path.join(log_dir, f"{after:08d}.checkpoint.json")
-        ) as f:
-            for line in f:
-                t = json.loads(line).get("txn")
-                if t and t.get("appId") == app_id:
-                    last = max(last, int(t["version"]))
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        if int(name.split(".")[0]) <= after:
-            continue  # pre-checkpoint commits never opened
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                t = json.loads(line).get("txn")
-                if t and t.get("appId") == app_id:
-                    last = max(last, int(t["version"]))
-    return last
 
 
 @query(
@@ -1738,8 +1394,6 @@ def snk_txn_log_stream_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomically or not at all — no partial batches, no duplicates,
     across arbitrary retries.
     """
-    import json
-
     base = scratch_dir(prefix="txnlog_stream_")
     incoming = os.path.join(base, "incoming")
     o = load_tables(spark, sf_dir, ("orders",))["orders"].select(
@@ -1759,8 +1413,7 @@ def snk_txn_log_stream_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(_stage_src, range(4)))
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
+    log_dir = txn_log.create(os.path.join(base, "_txn_log"), [])
     app_id = "orders_ingest"
     skips: list[int] = []
 
@@ -1769,17 +1422,16 @@ def snk_txn_log_stream_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deterministic per-epoch path + overwrite = idempotent data
         # write; the file stays invisible until the commit lands
         batch_df.write.mode("overwrite").parquet(os.path.join(base, out))
-        if _txn_log_last_txn_version(log_dir, app_id) >= epoch_id:
+        if txn_log.last_txn_version(log_dir, app_id) >= epoch_id:
             skips.append(epoch_id)  # retry of a committed epoch
             return
         actions = [
-            json.dumps({"add": out}) + "\n",
-            json.dumps({"txn": {"appId": app_id, "version": epoch_id}})
-            + "\n",
+            {"add": out},
+            {"txn": {"appId": app_id, "version": epoch_id}},
         ]
-        version = _txn_log_commit_count(log_dir)
-        while not _txn_log_try_commit(log_dir, version, actions):
-            version = _txn_log_commit_count(log_dir)
+        version = txn_log.next_version(log_dir)
+        while not txn_log.try_commit(log_dir, version, actions):
+            version = txn_log.next_version(log_dir)
 
     stream = (
         spark.readStream.schema(
@@ -1790,7 +1442,7 @@ def snk_txn_log_stream_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     replay(stream.writeStream.foreachBatch(commit_epoch), spark)
 
-    n_epochs = _txn_log_commit_count(log_dir)
+    n_epochs = txn_log.next_version(log_dir)
     if n_epochs < 2 or skips:
         raise RuntimeError(
             f"staging expects >=2 clean epochs, got {n_epochs} "
@@ -1806,11 +1458,11 @@ def snk_txn_log_stream_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_epoch(retry_batch, 0)
     if skips != [0]:
         raise RuntimeError(f"retry of epoch 0 was not skipped: {skips}")
-    if _txn_log_commit_count(log_dir) != n_epochs:
+    if txn_log.next_version(log_dir) != n_epochs:
         raise RuntimeError("retry must not append a commit")
-    if _txn_log_last_txn_version(log_dir, app_id) != n_epochs - 1:
+    if txn_log.last_txn_version(log_dir, app_id) != n_epochs - 1:
         raise RuntimeError("txn ledger out of step with epoch count")
-    live = _txn_log_replay(log_dir)
+    live = txn_log.snapshot(log_dir)
     return spark.read.parquet(*(os.path.join(base, p) for p in sorted(live)))
 
 
@@ -1852,17 +1504,14 @@ def snk_txn_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(checkpoint + suffix) — every property certified separately by
     this family, composed here end to end.
     """
-    import json
-
-    base_a, log_a = _txn_log_stage(
+    base_a, log_a = _stage_parts(
         spark,
         sf_dir,
         "txnlog_pipe_a_",
         [[{"add": f"part{i}"}] for i in range(4)],  # append-only source
     )
     base_b = scratch_dir(prefix="txnlog_pipe_b_")
-    log_b = os.path.join(base_b, "_txn_log")
-    os.makedirs(log_b)
+    log_b = txn_log.create(os.path.join(base_b, "_txn_log"), [])
     app_id = "pipeline_a_to_b"
     skips: list[int] = []
     seen: dict[int, list[str]] = {}
@@ -1881,18 +1530,15 @@ def snk_txn_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .write.mode("overwrite")  # idempotent epoch rewrite
                 .parquet(os.path.join(base_b, out))
             )
-        if _txn_log_last_txn_version(log_b, app_id) >= epoch_id:
+        if txn_log.last_txn_version(log_b, app_id) >= epoch_id:
             skips.append(epoch_id)
             return
-        actions = (
-            [json.dumps({"add": out}) + "\n"] if adds else []
-        ) + [
-            json.dumps({"txn": {"appId": app_id, "version": epoch_id}})
-            + "\n"
+        actions = ([{"add": out}] if adds else []) + [
+            {"txn": {"appId": app_id, "version": epoch_id}}
         ]
-        version = _txn_log_commit_count(log_b)
-        while not _txn_log_try_commit(log_b, version, actions):
-            version = _txn_log_commit_count(log_b)
+        version = txn_log.next_version(log_b)
+        while not txn_log.try_commit(log_b, version, actions):
+            version = txn_log.next_version(log_b)
 
     actions_stream = (
         spark.readStream.schema("add string, remove string")
@@ -1902,7 +1548,7 @@ def snk_txn_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     replay(actions_stream.writeStream.foreachBatch(handle), spark)
 
-    n_epochs = _txn_log_commit_count(log_b)
+    n_epochs = txn_log.next_version(log_b)
     if n_epochs < 2 or skips:
         raise RuntimeError(
             f"staging expects >=2 clean epochs, got {n_epochs} "
@@ -1911,17 +1557,17 @@ def snk_txn_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B is a first-class table: checkpoint it, then replay epoch 0
     # (whatever source commit that epoch actually carried) — the skip
     # decision must come from the checkpoint-aware ledger
-    _txn_log_write_checkpoint(log_b, version=n_epochs - 1)
+    txn_log.write_checkpoint(log_b, version=n_epochs - 1)
     replay_batch = spark.createDataFrame(
         [(p,) for p in seen[0]] or [(None,)], "add string"
     )
     handle(replay_batch, 0)
     if skips != [0]:
         raise RuntimeError(f"retry of epoch 0 was not skipped: {skips}")
-    if _txn_log_commit_count(log_b) != n_epochs:
+    if txn_log.next_version(log_b) != n_epochs:
         raise RuntimeError("retry must not append a commit")
-    live, opened = _txn_log_replay_checkpointed(log_b)
-    if opened != [f"{n_epochs - 1:08d}.checkpoint.json"]:
+    live, opened = txn_log.resolve(log_b)
+    if opened != [txn_log.checkpoint_name(n_epochs - 1)]:
         raise RuntimeError(
             f"B's readers must resolve from the checkpoint alone: {opened}"
         )
@@ -1984,28 +1630,19 @@ def src_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sound because COW passes untouched doubles through parquet
     bit-exactly.
     """
-    import json
-
     base, log_dir, _, _, (alo, ahi) = _stage_with_quantiles(
         spark, sf_dir, 0.40, 0.60
     )
     b_ver, _, actions = _cow_merge_txn(
         spark, base, log_dir, alo, ahi, 11, 10, "rewrite1"
     )
-    if not _txn_log_try_commit(log_dir, b_ver, actions):
+    if not txn_log.try_commit(log_dir, b_ver, actions):
         raise RuntimeError("uncontended merge commit failed")
-    removed, added = [], []
-    with open(os.path.join(log_dir, f"{b_ver:08d}.json")) as f:
-        for line in f:
-            a = json.loads(line)
-            if "remove" in a:
-                removed.append(os.path.join(base, a["remove"]))
-            if "add" in a:
-                added.append(os.path.join(base, a["add"]))
-    pre = spark.read.parquet(*removed).select(
+    removed, added = txn_log.commit_files(log_dir, b_ver)
+    pre = spark.read.parquet(*(os.path.join(base, p) for p in removed)).select(
         "o_orderkey", F.col("o_totalprice").alias("pre_price")
     )
-    post = spark.read.parquet(*added).select(
+    post = spark.read.parquet(*(os.path.join(base, p) for p in added)).select(
         "o_orderkey", F.col("o_totalprice").alias("post_price")
     )
     changed = pre.join(post, "o_orderkey").filter(
@@ -2065,8 +1702,6 @@ def src_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema from (some) files, or that dropped old files it couldn't
     "fully" read, flips the hash.
     """
-    import json
-
     schema_v0 = "o_orderkey bigint, o_orderstatus string, o_totalprice double"
     schema_v1 = schema_v0 + ", o_orderpriority string"
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
@@ -2088,27 +1723,28 @@ def src_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("b")
         .parquet(os.path.join(base, "new"))
     )
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
-    with open(os.path.join(log_dir, "00000000.json"), "w") as f:
-        f.write(json.dumps({"metaData": {"schemaString": schema_v0}}) + "\n")
-        f.write(json.dumps({"add": "old/b=0"}) + "\n")
-        f.write(json.dumps({"add": "old/b=1"}) + "\n")
-    with open(os.path.join(log_dir, "00000001.json"), "w") as f:
-        f.write(json.dumps({"metaData": {"schemaString": schema_v1}}) + "\n")
-        f.write(json.dumps({"add": "new/b=2"}) + "\n")
-        f.write(json.dumps({"add": "new/b=3"}) + "\n")
+    log_dir = txn_log.create(
+        os.path.join(base, "_txn_log"),
+        [
+            [
+                {"metaData": {"schemaString": schema_v0}},
+                {"add": "old/b=0"},
+                {"add": "old/b=1"},
+            ],
+            [
+                {"metaData": {"schemaString": schema_v1}},
+                {"add": "new/b=2"},
+                {"add": "new/b=3"},
+            ],
+        ],
+    )
     # replay file actions AND the schema (both are log state)
-    live = _txn_log_replay(log_dir)
+    live = txn_log.snapshot(log_dir)
     schema = None
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                if "metaData" in a:
-                    schema = a["metaData"]["schemaString"]
+    for _, actions in txn_log.commits(log_dir):
+        for a in actions:
+            if "metaData" in a:
+                schema = a["metaData"]["schemaString"]
     if schema != schema_v1:
         raise RuntimeError(f"schema replay resolved {schema!r}")
     return spark.read.schema(schema).parquet(
@@ -2160,19 +1796,15 @@ def src_txn_log_stats_prune_checkpointed(
     m_ver, _, actions = _cow_merge_txn(
         spark, base, log_dir, alo, ahi, 11, 10, "rewrite1"
     )
-    if not _txn_log_try_commit(log_dir, m_ver, actions):
+    if not txn_log.try_commit(log_dir, m_ver, actions):
         raise RuntimeError("uncontended merge commit failed")
-    _txn_log_write_checkpoint(log_dir, version=m_ver)
-    live, opened = _txn_log_stats_replay_checkpointed(log_dir)
-    if opened != [f"{m_ver:08d}.checkpoint.json"]:
+    txn_log.write_checkpoint(log_dir, version=m_ver)
+    live, opened = txn_log.resolve(log_dir)
+    if opened != [txn_log.checkpoint_name(m_ver)]:
         raise RuntimeError(
             f"resolve must read the checkpoint alone, opened {opened}"
         )
-    keep = [
-        os.path.join(base, p)
-        for p, mn, mx in live
-        if not (mx < qlo or mn > qhi)
-    ]
+    keep = [os.path.join(base, p) for p in _overlapping(live, qlo, qhi)]
     if not keep or len(keep) >= len(live):
         raise RuntimeError(
             f"stats skipping degraded: kept {len(keep)} of {len(live)}"
@@ -2225,21 +1857,18 @@ def snk_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     table size — the stats prune is what makes a 100-row update on a
     100 TB table a 2-file job.
     """
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     ulo = lo + span * 11 // 20
     uhi = lo + span * 13 // 20
-    live = _txn_log_stats_replay(log_dir)
-    affected = [
-        (p, mn, mx) for p, mn, mx in live if not (mx < ulo or mn > uhi)
-    ]
+    affected = _overlapping(txn_log.snapshot(log_dir), ulo, uhi)
     # copy-on-write: read ONLY the affected files, apply the update,
     # land the rewrite (invisible until committed)
     updated_cents = F.expr(
         "(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) * 11) DIV 10"
     )
     rewritten = (
-        spark.read.parquet(*(os.path.join(base, p) for p, _, _ in affected))
+        spark.read.parquet(*(os.path.join(base, p) for p in affected))
         .select(
             "o_orderkey",
             "o_orderstatus",
@@ -2258,68 +1887,17 @@ def snk_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         [os.path.join(base, "rewrite1")], ("o_orderkey",)
     )
     mn_r, mx_r = fstats["o_orderkey"]
-    import json
-
-    with open(os.path.join(log_dir, "00000001.json"), "w") as f:
-        for p, _, _ in affected:
-            f.write(json.dumps({"remove": p}) + "\n")
-        f.write(
-            json.dumps(
-                {
-                    "add": "rewrite1",
-                    "min_key": int(mn_r),
-                    "max_key": int(mx_r),
-                }
-            )
-            + "\n"
-        )
-    final = _txn_log_stats_replay(log_dir)
+    if not txn_log.try_commit(
+        log_dir,
+        1,
+        [{"remove": p} for p in affected]
+        + [{"add": "rewrite1", "min_key": int(mn_r), "max_key": int(mx_r)}],
+    ):
+        raise RuntimeError("uncontended merge commit failed")
+    final = sorted(txn_log.snapshot(log_dir))
     return spark.read.parquet(
-        *(os.path.join(base, p) for p, _, _ in final)
+        *(os.path.join(base, p) for p in final)
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-
-
-def _txn_log_version_at_ts(log_dir: str, cutoff_ms: int) -> int:
-    """Resolve the latest version whose commit timestamp is at or
-    before ``cutoff_ms`` — Delta's ``TIMESTAMP AS OF`` resolution,
-    including its monotonicity guard: commit timestamps come from
-    writer clocks (or object-store mtimes) and are NOT guaranteed
-    monotone across writers, so each commit's effective timestamp is
-    clamped to ``max(raw, previous effective + 1)`` (the Delta
-    convention). Without the clamp, a clock-skewed later commit with
-    an earlier raw timestamp would be INCLUDED by a cutoff that
-    predates it — time travel would resolve to a snapshot that never
-    existed in commit order (the classic defect this key stages).
-    Metadata only: one pass over the ordered commit files."""
-    import json
-
-    best: int | None = None
-    prev_eff: int | None = None
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        version = int(name.split(".")[0])
-        ts: int | None = None
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                ci = json.loads(line).get("commitInfo")
-                if ci is not None:
-                    ts = int(ci["timestamp"])
-        if ts is None:
-            raise RuntimeError(
-                f"commit {version} carries no commitInfo timestamp — "
-                f"timestamp time travel is undefined on this log"
-            )
-        eff = ts if prev_eff is None else max(ts, prev_eff + 1)
-        prev_eff = eff
-        if eff <= cutoff_ms:
-            best = version
-    if best is None:
-        raise ValueError(
-            f"cutoff {cutoff_ms} predates the first commit — no "
-            f"snapshot existed yet (Delta raises the same way)"
-        )
-    return best
 
 
 @query(
@@ -2334,7 +1912,7 @@ def src_txn_log_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn-log table — the version-based read of
     ``src_txn_log_time_travel`` resolved through commit TIMESTAMPS
     instead, with the monotonicity guard non-monotone writer clocks
-    force (``_txn_log_version_at_ts``).
+    force (``txn_log.version_at_ts``).
 
     Staged history: commit 0 (ts 1000) adds parts 0-1; commit 1
     (ts 3000) adds part 2, removes part 0; commit 2 adds part 3 and
@@ -2353,7 +1931,7 @@ def src_txn_log_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed with ``src_txn_log_checkpointed``); row data moves only
     through the parquet scan of the resolved live set.
     """
-    base, log_dir = _txn_log_stage(
+    base, log_dir = _stage_parts(
         spark,
         sf_dir,
         "txnlog_tts_",
@@ -2376,14 +1954,14 @@ def src_txn_log_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         ],
     )
-    version = _txn_log_version_at_ts(log_dir, 3000)
+    version = txn_log.version_at_ts(log_dir, 3000)
     if version != 1:
         raise RuntimeError(
             f"monotonicity guard failed: ts 3000 resolved to version "
             f"{version}, expected 1 (commit 2's skewed clock must be "
             f"clamped past the cutoff)"
         )
-    live = _txn_log_replay(log_dir, as_of=version)
+    live = txn_log.snapshot(log_dir, as_of=version)
     return spark.read.parquet(*(os.path.join(base, p) for p in sorted(live)))
 
 
@@ -2394,29 +1972,24 @@ def _compaction_txn(
     clo: int,
     chi: int,
     out_name: str,
-) -> tuple[int, set[str], list[str], int]:
+) -> tuple[int, set[str], list[dict], int]:
     """Plan + stage one OPTIMIZE (compaction) transaction against the
     CURRENT snapshot: stats-select the small files overlapping
     [clo, chi] (the transaction's READ SET — compaction reads what it
     rewrites, exactly like a MERGE), rewrite them as ONE data file
     with rows byte-identical (no transform — compaction is a purely
     physical operation), and return ``(base_version, planned_removes,
-    commit action lines, input row count)`` for the optimistic-commit
+    commit actions, input row count)`` for the optimistic-commit
     loop. At 100 TB the single ``coalesce(1)`` becomes bin-packing to
     a target file size; the transaction shape is unchanged."""
-    import json
-
-    base_version = _txn_log_commit_count(log_dir)
-    live = _txn_log_stats_replay(log_dir)
-    affected = [
-        (p, mn, mx) for p, mn, mx in live if not (mx < clo or mn > chi)
-    ]
+    base_version = txn_log.next_version(log_dir)
+    affected = _overlapping(txn_log.snapshot(log_dir), clo, chi)
     if len(affected) < 2:
         raise RuntimeError(
             f"compaction needs >= 2 input files, got {affected}"
         )
     src = spark.read.parquet(
-        *(os.path.join(base, p) for p, _, _ in affected)
+        *(os.path.join(base, p) for p in affected)
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
     src.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(base, out_name)
@@ -2428,7 +2001,7 @@ def _compaction_txn(
     # passes per compaction) collapse into driver-side footer reads —
     # and the check now compares real input bytes against real output
     # bytes instead of one lineage against itself.
-    n_in, _ = _footer_stats([os.path.join(base, p) for p, _, _ in affected])
+    n_in, _ = _footer_stats([os.path.join(base, p) for p in affected])
     n_out, fstats = _footer_stats(
         [os.path.join(base, out_name)], ("o_orderkey",)
     )
@@ -2438,19 +2011,10 @@ def _compaction_txn(
             f"wrote {n_out}"
         )
     mn, mx = fstats["o_orderkey"]
-    actions = [
-        json.dumps({"remove": p}) + "\n" for p, _, _ in affected
-    ] + [
-        json.dumps(
-            {
-                "add": out_name,
-                "min_key": int(mn),
-                "max_key": int(mx),
-            }
-        )
-        + "\n"
+    actions = [{"remove": p} for p in affected] + [
+        {"add": out_name, "min_key": int(mn), "max_key": int(mx)}
     ]
-    return base_version, {p for p, _, _ in affected}, actions, n_in
+    return base_version, set(affected), actions, n_in
 
 
 @query(
@@ -2518,18 +2082,18 @@ def snk_txn_log_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"staged race must overlap: {c_removes} vs {a_removes}"
         )
     # writer A wins the race at version 1
-    if not _txn_log_try_commit(log_dir, a_base, a_actions):
+    if not txn_log.try_commit(log_dir, a_base, a_actions):
         raise RuntimeError("writer A's uncontended commit failed")
-    n_after_a = len(_txn_log_stats_replay(log_dir))
+    n_after_a = len(txn_log.snapshot(log_dir))
     # compactor: loses the claim, detects the conflict, rebases
-    if _txn_log_try_commit(log_dir, c_base, c_actions):
+    if txn_log.try_commit(log_dir, c_base, c_actions):
         raise RuntimeError("compactor claimed a version A already holds")
     try:
-        _txn_log_validate_read_set(log_dir, c_base, c_removes)
+        txn_log.validate_read_set(log_dir, c_base, c_removes)
         raise RuntimeError(
             "read-set validation missed the OPTIMIZE-vs-writer conflict"
         )
-    except TxnConflictError:
+    except txn_log.TxnConflictError:
         pass  # detected — rebase instead of blind-retrying
     rb_base, rb_removes, rb_actions, _ = _compaction_txn(
         spark, base, log_dir, clo, chi, "compact0"
@@ -2539,58 +2103,18 @@ def snk_txn_log_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"rebased compaction must read the winner's rewrite: "
             f"{rb_removes}"
         )
-    _txn_log_validate_read_set(log_dir, rb_base, rb_removes)
-    if not _txn_log_try_commit(log_dir, rb_base, rb_actions):
+    txn_log.validate_read_set(log_dir, rb_base, rb_removes)
+    if not txn_log.try_commit(log_dir, rb_base, rb_actions):
         raise RuntimeError("rebased compaction lost an impossible race")
-    final = _txn_log_stats_replay(log_dir)
+    final = sorted(txn_log.snapshot(log_dir))
     if len(final) >= n_after_a:
         raise RuntimeError(
             f"compaction must shrink the live file count: "
             f"{n_after_a} -> {len(final)}"
         )
     return spark.read.parquet(
-        *(os.path.join(base, p) for p, _, _ in final)
+        *(os.path.join(base, p) for p in final)
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-
-
-def _txn_log_commit_with_retry(
-    log_dir: str,
-    plan: tuple[int, set[str], list[str]],
-    replan,
-    max_attempts: int = 8,
-    after_rebase=None,
-) -> int:
-    """The general optimistic-commit loop every txn-log writer runs —
-    ``snk_txn_log_rebase``'s one-loser/one-rebase flow generalized to
-    N contending writers: claim the next version; on losing the race,
-    validate the read set against the commits that landed since; if
-    they commute (blind appends), retry the SAME staged actions at the
-    next free version; if they conflict, REBASE — re-plan against the
-    current snapshot via ``replan()`` and retry. Returns the number of
-    rebases taken. ``after_rebase(n)`` is a test seam: the staged
-    multi-writer race injects a rival's commit between a re-plan and
-    its claim — the window where real concurrent commits land.
-    Bounded: ``max_attempts`` turns livelock into a loud error (each
-    retry costs one metadata re-read; progress is guaranteed because
-    some writer's claim succeeds at every contended version)."""
-    base_version, removes, actions = plan
-    rebases = 0
-    for _ in range(max_attempts):
-        if _txn_log_try_commit(log_dir, base_version, actions):
-            return rebases
-        try:
-            _txn_log_validate_read_set(log_dir, base_version, removes)
-            # commutes with everything that landed: same actions, next
-            # free version (snk_txn_log_commit's blind-append case)
-            base_version = _txn_log_commit_count(log_dir)
-        except TxnConflictError:
-            rebases += 1
-            base_version, removes, actions = replan()
-            if after_rebase is not None:
-                after_rebase(rebases)
-    raise RuntimeError(
-        f"commit retry budget exhausted after {max_attempts} attempts"
-    )
 
 
 @query(
@@ -2630,7 +2154,7 @@ def _txn_log_commit_with_retry(
 )
 def snk_txn_log_multiwriter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N contending writers serializing through the bounded
-    validate -> rebase -> retry loop (``_txn_log_commit_with_retry``)
+    validate -> rebase -> retry loop (``txn_log.commit_with_retry``)
     — ``snk_txn_log_rebase`` generalized from one loser/one rebase to
     a three-writer pile-up where the last writer must rebase TWICE,
     each time onto a snapshot that already contains the previous
@@ -2700,7 +2224,7 @@ def snk_txn_log_multiwriter(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not (lhs & rhs):
             raise RuntimeError(f"staged pile-up must overlap: {name}")
     # writer A wins the first race uncontended
-    if not _txn_log_try_commit(log_dir, a_plan[0], a_plan[2]):
+    if not txn_log.try_commit(log_dir, a_plan[0], a_plan[2]):
         raise RuntimeError("writer A's uncontended commit failed")
 
     b_rebases: list[int] = []
@@ -2717,7 +2241,7 @@ def snk_txn_log_multiwriter(spark: SparkSession, sf_dir: str) -> DataFrame:
         if b_rebases:
             return  # B commits exactly once, on C's first rebase window
         b_rebases.append(
-            _txn_log_commit_with_retry(log_dir, b_plan[:3], b_replan)
+            txn_log.commit_with_retry(log_dir, b_plan[:3], b_replan)
         )
 
     c_replans = 0
@@ -2729,7 +2253,7 @@ def snk_txn_log_multiwriter(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, log_dir, clo, chi, 21, 20, f"rewriteC_rb{c_replans}"
         )[:3]
 
-    c_rebases = _txn_log_commit_with_retry(
+    c_rebases = txn_log.commit_with_retry(
         log_dir, c_plan[:3], c_replan, after_rebase=land_b
     )
     if b_rebases != [1]:
@@ -2741,63 +2265,18 @@ def snk_txn_log_multiwriter(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"writer C must rebase twice (once onto A, once onto B), "
             f"got {c_rebases}"
         )
-    if _txn_log_commit_count(log_dir) != 4:
+    if txn_log.next_version(log_dir) != 4:
         raise RuntimeError(
             f"exactly-once violated: expected 4 commits, got "
-            f"{_txn_log_commit_count(log_dir)}"
+            f"{txn_log.next_version(log_dir)}"
         )
-    final = _txn_log_stats_replay(log_dir)
-    live_names = {p for p, _, _ in final}
-    stale = {n for n in live_names if "stale" in n or n == "rewriteC_rb1"}
+    final = sorted(txn_log.snapshot(log_dir))
+    stale = {n for n in final if "stale" in n or n == "rewriteC_rb1"}
     if stale:
         raise RuntimeError(f"stale rewrites leaked into the log: {stale}")
     return spark.read.parquet(
-        *(os.path.join(base, p) for p, _, _ in final)
+        *(os.path.join(base, p) for p in final)
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-
-
-def _txn_log_vacuum(
-    base: str, log_dir: str, retain_from_version: int
-) -> tuple[set[str], set[str]]:
-    """Physically delete data files unreferenced by every RETAINED
-    snapshot (versions >= ``retain_from_version``) — the Delta VACUUM /
-    Iceberg remove_orphan_files lifecycle step. Immutable-file tables
-    never delete at write time (remove actions are logical), so storage
-    grows with every COW rewrite until something reclaims it; the only
-    safe reclaim is subtractive over the LOG: candidates are every file
-    any commit ever added (the log is the complete provenance of the
-    data directory), survivors are the union of live sets of all
-    retained versions — so a reader of any retained snapshot is
-    unaffected, and time travel BEFORE the horizon is the documented
-    casualty. Returns ``(deleted, kept)`` path sets. Metadata-only
-    scan plus one filesystem delete per dead file; cost is independent
-    of row data."""
-    import json
-    import shutil
-
-    latest = _txn_log_commit_count(log_dir) - 1
-    # candidates: every path ANY commit ever added — one linear pass
-    # over the raw action stream (the log is the complete provenance
-    # of the data directory; an object-store implementation lists the
-    # prefix instead and additionally sweeps never-committed orphans)
-    ever_added: set[str] = set()
-    for name in sorted(os.listdir(log_dir)):
-        if not re.fullmatch(r"\d{8}\.json", name):
-            continue
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                if "add" in a:
-                    ever_added.add(a["add"])
-    referenced: set[str] = set()
-    for v in range(retain_from_version, latest + 1):
-        referenced |= _txn_log_replay(log_dir, as_of=v)
-    dead = ever_added - referenced
-    for p in sorted(dead):
-        target = os.path.join(base, p)
-        if os.path.exists(target):
-            shutil.rmtree(target)
-    return dead, referenced
 
 
 @query(
@@ -2828,7 +2307,7 @@ def snk_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     depend on them), so a 100 TB table under steady update churn grows
     without bound until dead files are reclaimed. Safe reclamation is
     defined over the LOG, never the directory: a file is dead iff NO
-    retained version references it (``_txn_log_vacuum``).
+    retained version references it (``txn_log.vacuum``).
 
     Staged lifecycle: commit 0 = 8 stats buckets; commit 1 = COW
     update (+10% on the [10%, 20%] key span) rewriting its affected
@@ -2849,7 +2328,7 @@ def snk_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract that makes concurrent readers safe (any reader pinned to
     a retained snapshot never loses a file mid-scan).
     """
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     # two disjoint-span COW updates (geometric spans are fine here —
     # disjointness at 2/20..4/20 vs 15/20..17/20 holds under any key
@@ -2861,10 +2340,10 @@ def snk_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         v, removes, actions = _cow_merge_txn(
             spark, base, log_dir, ulo, uhi, num, den, out
         )
-        if not _txn_log_try_commit(log_dir, v, actions):
+        if not txn_log.try_commit(log_dir, v, actions):
             raise RuntimeError("staged sequential commit lost a race")
-    before = _txn_log_replay(log_dir)
-    dead, referenced = _txn_log_vacuum(base, log_dir, retain_from_version=1)
+    before = set(txn_log.snapshot(log_dir))
+    dead, referenced = txn_log.vacuum(base, log_dir, retain_from_version=1)
     if not dead:
         raise RuntimeError("staged lifecycle must produce dead files")
     if dead & referenced:
@@ -2876,16 +2355,16 @@ def snk_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not os.path.exists(os.path.join(base, p)):
             raise RuntimeError(f"retained file lost to vacuum: {p}")
     # inside the horizon: version-1 travel still scans
-    v1 = _txn_log_replay(log_dir, as_of=1)
+    v1 = txn_log.snapshot(log_dir, as_of=1)
     spark.read.parquet(*(os.path.join(base, p) for p in sorted(v1))).take(1)
     # outside the horizon: version 0 must now be broken (else the
     # vacuum deleted nothing it claimed to)
-    v0 = _txn_log_replay(log_dir, as_of=0)
+    v0 = txn_log.snapshot(log_dir, as_of=0)
     if all(os.path.exists(os.path.join(base, p)) for p in v0):
         raise RuntimeError(
             "pre-horizon snapshot survived vacuum — no reclamation"
         )
-    if _txn_log_replay(log_dir) != before:
+    if set(txn_log.snapshot(log_dir)) != before:
         raise RuntimeError("vacuum must not change the current snapshot")
     return spark.read.parquet(
         *(os.path.join(base, p) for p in sorted(before))
@@ -2923,9 +2402,7 @@ def snk_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention permitting), which is why lakehouse rollback is instant
     at any table size.
     """
-    import json
-
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     v, removes, actions = _cow_merge_txn(
         spark,
@@ -2937,31 +2414,30 @@ def snk_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         10,
         "rewrite_bad",
     )
-    if not _txn_log_try_commit(log_dir, v, actions):
+    if not txn_log.try_commit(log_dir, v, actions):
         raise RuntimeError("staged bad write lost a race")
-    target = _txn_log_replay_actions(log_dir, as_of=0)
-    current = _txn_log_replay(log_dir)
+    target = txn_log.snapshot(log_dir, as_of=0)
+    current = set(txn_log.snapshot(log_dir))
     restore_actions = [
-        json.dumps({"remove": p}) + "\n" for p in sorted(current - set(target))
+        {"remove": p} for p in sorted(current - set(target))
     ] + [
         # re-adds carry the ORIGINAL add action verbatim (stats and
         # all), so file skipping survives the restore
-        json.dumps(target[p]) + "\n"
+        target[p]
         for p in sorted(set(target) - current)
     ]
-    if not _txn_log_try_commit(
-        log_dir, _txn_log_commit_count(log_dir), restore_actions
+    if not txn_log.try_commit(
+        log_dir, txn_log.next_version(log_dir), restore_actions
     ):
         raise RuntimeError("restore commit lost a race")
-    if _txn_log_replay(log_dir) != set(target):
+    if set(txn_log.snapshot(log_dir)) != set(target):
         raise RuntimeError("restore must reproduce the target live set")
-    if _txn_log_commit_count(log_dir) != 3:
+    if txn_log.next_version(log_dir) != 3:
         raise RuntimeError("restore must append, never rewrite history")
     # the bad version remains queryable (append-only history)
-    v1 = _txn_log_replay(log_dir, as_of=1)
-    if "rewrite_bad" not in v1:
+    if "rewrite_bad" not in txn_log.snapshot(log_dir, as_of=1):
         raise RuntimeError("restore erased the bad write from history")
-    live = _txn_log_replay(log_dir)
+    live = txn_log.snapshot(log_dir)
     return spark.read.parquet(
         *(os.path.join(base, p) for p in sorted(live))
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamingdemo_spark.io import load_tables
+from streamingdemo_spark.plans import txn_log
+from streamingdemo_spark.plans.scans import _stage_parts
 from streamingdemo_spark.registry import dsum, osum, query
 
 
@@ -773,80 +775,38 @@ _LAST_VACUUM: dict[str, object] = {}
 def snk_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VACUUM with a retention window over the minimal lakehouse
     format of ``src_txn_log_snapshot`` (plans/scans.py): physically
-    delete data files whose REMOVE action is older than the retention
-    horizon, keeping newer tombstones on disk so recent snapshots stay
-    time-travelable — the Delta/Iceberg `VACUUM` / `expire_snapshots`
-    contract that bounds object-store cost without breaking readers
-    inside the window.
+    delete data files that no snapshot inside the retention window
+    references, keeping newer tombstones on disk so recent snapshots
+    stay time-travelable — the Delta/Iceberg `VACUUM` /
+    `expire_snapshots` contract that bounds object-store cost without
+    breaking readers inside the window.
 
     Staged history (orders in 4 hash parts): c0 adds parts 0-2; c1
     adds part 3 and removes part 0; c2 removes part 1. With
-    ``retain_last=1`` commit, vacuum deletes files removed at or
-    before commit latest-1 — part 0 goes (its tombstone aged out),
-    part 1 survives on disk (still inside the window, so the c1
+    ``retain_last=1`` commit, vacuum keeps every file referenced by
+    versions latest-1 and later — part 0 goes (its tombstone aged
+    out), part 1 survives on disk (still inside the window, so the c1
     snapshot {1,2,3} remains readable) — and the CURRENT snapshot
     replay yields live set {2,3}, which must hash-equal the logical
     table at ``o_orderkey % 4 IN (2, 3)``: retention mechanics, zero
-    content drift. Vacuum is metadata-driven (log scan + file
-    deletes); no data file is ever rewritten, and at 100 TB it runs as
-    a driver-side listing diff exactly like this.
+    content drift. Vacuum is metadata-driven (``txn_log.vacuum``: log
+    scan + file deletes); no data file is ever rewritten.
     """
-    import json
-    import shutil
-
     retain_last = 1
-    base = scratch_dir(prefix="vacuum_")
-    o = load_tables(spark, sf_dir, ("orders",))["orders"].select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
+    base, log_dir = _stage_parts(
+        spark,
+        sf_dir,
+        "vacuum_",
+        [
+            [{"add": "part0"}, {"add": "part1"}, {"add": "part2"}],
+            [{"add": "part3"}, {"remove": "part0"}],
+            [{"remove": "part1"}],
+        ],
     )
-    # stage all 4 hash parts in ONE scan via a partitioned write (a
-    # per-part filter loop would re-scan orders 4 times), then rename
-    # the pk= leaf dirs to the log's part names — the partition column
-    # is layout-only and not part of the table schema
-    staged = os.path.join(base, "_staging")
-    (
-        o.withColumn("pk", F.col("o_orderkey") % 4)
-        .write.partitionBy("pk")
-        .mode("overwrite")
-        .parquet(staged)
+    latest = txn_log.next_version(log_dir) - 1
+    vacuumed, _ = txn_log.vacuum(
+        base, log_dir, retain_from_version=latest - retain_last
     )
-    import shutil as _sh
-
-    for part in range(4):
-        _sh.move(
-            os.path.join(staged, f"pk={part}"),
-            os.path.join(base, f"part{part}"),
-        )
-    log_dir = os.path.join(base, "_txn_log")
-    os.makedirs(log_dir)
-    commits = [
-        [{"add": "part0"}, {"add": "part1"}, {"add": "part2"}],
-        [{"add": "part3"}, {"remove": "part0"}],
-        [{"remove": "part1"}],
-    ]
-    for i, actions in enumerate(commits):
-        with open(os.path.join(log_dir, f"{i:08d}.json"), "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
-    # vacuum: replay the log tracking (file, remove_commit); delete
-    # files whose tombstone is at or before the horizon
-    live: set[str] = set()
-    removed_at: dict[str, int] = {}
-    names = sorted(os.listdir(log_dir))
-    latest = len(names) - 1
-    for seq, name in enumerate(names):
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                a = json.loads(line)
-                if "add" in a:
-                    live.add(a["add"])
-                    removed_at.pop(a["add"], None)
-                if "remove" in a:
-                    live.discard(a["remove"])
-                    removed_at[a["remove"]] = seq
-    horizon = latest - retain_last
-    vacuumed = sorted(p for p, seq in removed_at.items() if seq <= horizon)
-    for p in vacuumed:
-        shutil.rmtree(os.path.join(base, p), ignore_errors=True)
-    _LAST_VACUUM.update(base=base, live=sorted(live), vacuumed=vacuumed)
-    return spark.read.parquet(*(os.path.join(base, p) for p in sorted(live)))
+    live = sorted(txn_log.snapshot(log_dir))
+    _LAST_VACUUM.update(base=base, live=live, vacuumed=sorted(vacuumed))
+    return spark.read.parquet(*(os.path.join(base, p) for p in live))

@@ -1178,13 +1178,9 @@ def test_txn_log_checkpoint_resolves_suffix_only(spark, sf_dir):
     import shutil
     import tempfile
 
-    from streamingdemo_spark.plans.scans import (
-        _txn_log_replay,
-        _txn_log_replay_checkpointed,
-        _txn_log_write_checkpoint,
-    )
+    from streamingdemo_spark.plans import txn_log
 
-    log_dir = tempfile.mkdtemp(prefix="ckpt_unit_")
+    tmp = tempfile.mkdtemp(prefix="ckpt_unit_")
     try:
         # 12 commits of churn over 5 parts, incl. remove/re-add cycles
         history = [
@@ -1193,26 +1189,21 @@ def test_txn_log_checkpoint_resolves_suffix_only(spark, sf_dir):
             [{"remove": "p2"}], [{"add": "p4"}], [{"remove": "p0"}],
             [{"add": "p2"}], [{"remove": "p3"}], [{"add": "p0"}],
         ]
-        import json
-
-        for i, actions in enumerate(history):
-            with open(os.path.join(log_dir, f"{i:08d}.json"), "w") as f:
-                for a in actions:
-                    f.write(json.dumps(a) + "\n")
-        full = _txn_log_replay(log_dir)
+        log_dir = txn_log.create(os.path.join(tmp, "_txn_log"), history)
+        full = txn_log.snapshot(log_dir)
         # no checkpoint yet: fallback = full replay, opens every commit
-        live, opened = _txn_log_replay_checkpointed(log_dir)
+        live, opened = txn_log.resolve(log_dir)
         assert live == full
         assert len(opened) == len(history)
         for v in range(len(history)):  # checkpoint at every position
-            _txn_log_write_checkpoint(log_dir, version=v)
-            live, opened = _txn_log_replay_checkpointed(log_dir)
+            txn_log.write_checkpoint(log_dir, version=v)
+            live, opened = txn_log.resolve(log_dir)
             assert live == full, f"diverged with checkpoint at v{v}"
             assert opened[0] == f"{v:08d}.checkpoint.json"
             suffix = [f"{i:08d}.json" for i in range(v + 1, len(history))]
             assert opened[1:] == suffix, (v, opened)
     finally:
-        shutil.rmtree(log_dir, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_txn_log_checkpointed_key_scan_matches_live_set(spark, sf_dir):
@@ -1236,14 +1227,14 @@ def _stage_conflict_race(spark, sf_dir, first, second):
     """Stage the overlapping-COW-merge race with ``first`` winning the
     commit and ``second`` losing it; returns (loser base_version,
     loser planned removes, log_dir)."""
+    from streamingdemo_spark.plans import txn_log
     from streamingdemo_spark.plans.scans import (
         _cow_merge_txn,
         _orderkey_quantile_span,
-        _txn_log_stats_stage,
-        _txn_log_try_commit,
+        _stage_stats,
     )
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     spans = {
         "A": (*_orderkey_quantile_span(spark, sf_dir, 0.40, 0.60), 11, 10),
         "B": (*_orderkey_quantile_span(spark, sf_dir, 0.50, 0.70), 9, 10),
@@ -1257,8 +1248,8 @@ def _stage_conflict_race(spark, sf_dir, first, second):
         spark, base, log_dir, s_lo, s_hi, s_n, s_d, f"rewrite{second}"
     )
     assert f_removes & s_removes, "race must overlap"
-    assert _txn_log_try_commit(log_dir, f_base, f_actions)
-    assert not _txn_log_try_commit(log_dir, s_base, s_actions)
+    assert txn_log.try_commit(log_dir, f_base, f_actions)
+    assert not txn_log.try_commit(log_dir, s_base, s_actions)
     return s_base, s_removes, log_dir
 
 
@@ -1269,16 +1260,13 @@ def test_txn_log_conflict_detected_in_both_interleavings(
     """Whichever writer wins the race, the LOSER's read-set validation
     must raise on the remove-vs-remove overlap — conflict detection
     cannot depend on commit order."""
-    from streamingdemo_spark.plans.scans import (
-        TxnConflictError,
-        _txn_log_validate_read_set,
-    )
+    from streamingdemo_spark.plans import txn_log
 
     s_base, s_removes, log_dir = _stage_conflict_race(
         spark, sf_dir, first, second
     )
-    with pytest.raises(TxnConflictError):
-        _txn_log_validate_read_set(log_dir, s_base, s_removes)
+    with pytest.raises(txn_log.TxnConflictError):
+        txn_log.validate_read_set(log_dir, s_base, s_removes)
 
 
 def test_txn_log_validation_passes_disjoint_writers(spark, sf_dir):
@@ -1286,16 +1274,10 @@ def test_txn_log_validation_passes_disjoint_writers(spark, sf_dir):
     staged bucket layout separates [0%,10%] from [85%,95%]): the loser
     re-validates clean and its retry commit must land — conflict
     detection must not serialize writers that actually commute."""
-    from streamingdemo_spark.plans.scans import (
-        _cow_merge_txn,
-        _txn_log_commit_count,
-        _txn_log_stats_replay,
-        _txn_log_stats_stage,
-        _txn_log_try_commit,
-        _txn_log_validate_read_set,
-    )
+    from streamingdemo_spark.plans import txn_log
+    from streamingdemo_spark.plans.scans import _cow_merge_txn, _stage_stats
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     a = _cow_merge_txn(
         spark, base, log_dir,
@@ -1306,11 +1288,11 @@ def test_txn_log_validation_passes_disjoint_writers(spark, sf_dir):
         lo + span * 17 // 20, lo + span * 19 // 20, 9, 10, "rewriteB",
     )
     assert not (a[1] & b[1]), "spans must prune to disjoint files"
-    assert _txn_log_try_commit(log_dir, a[0], a[2])
-    assert not _txn_log_try_commit(log_dir, b[0], b[2])
-    _txn_log_validate_read_set(log_dir, b[0], b[1])  # must NOT raise
-    assert _txn_log_try_commit(log_dir, _txn_log_commit_count(log_dir), b[2])
-    live = {p for p, _, _ in _txn_log_stats_replay(log_dir)}
+    assert txn_log.try_commit(log_dir, a[0], a[2])
+    assert not txn_log.try_commit(log_dir, b[0], b[2])
+    txn_log.validate_read_set(log_dir, b[0], b[1])  # must NOT raise
+    assert txn_log.try_commit(log_dir, txn_log.next_version(log_dir), b[2])
+    live = set(txn_log.snapshot(log_dir))
     assert {"rewriteA", "rewriteB"} <= live
 
 
@@ -1318,40 +1300,73 @@ def test_txn_ledger_tracks_per_app_versions(spark, sf_dir):
     """The txn-action ledger must be per-appId (two writers' epochs
     don't collide) and report -1 for an unknown app — the invariant
     snk_txn_log_stream_commit's skip decision rides on."""
-    import json
     import os
     import tempfile
 
-    from streamingdemo_spark.plans.scans import (
-        _txn_log_last_txn_version,
-        _txn_log_try_commit,
-    )
+    from streamingdemo_spark.plans import txn_log
 
     log_dir = tempfile.mkdtemp(prefix="txn_ledger_")
-    assert _txn_log_last_txn_version(log_dir, "a") == -1
+    assert txn_log.last_txn_version(log_dir, "a") == -1
     for v, (app, epoch) in enumerate([("a", 0), ("b", 5), ("a", 1)]):
-        assert _txn_log_try_commit(
-            log_dir,
-            v,
-            [json.dumps({"txn": {"appId": app, "version": epoch}}) + "\n"],
+        assert txn_log.try_commit(
+            log_dir, v, [{"txn": {"appId": app, "version": epoch}}]
         )
-    assert _txn_log_last_txn_version(log_dir, "a") == 1
-    assert _txn_log_last_txn_version(log_dir, "b") == 5
-    assert _txn_log_last_txn_version(log_dir, "c") == -1
+    assert txn_log.last_txn_version(log_dir, "a") == 1
+    assert txn_log.last_txn_version(log_dir, "b") == 5
+    assert txn_log.last_txn_version(log_dir, "c") == -1
     # checkpointing makes the ledger O(suffix): the txn state rides
     # the checkpoint, so pre-checkpoint commits are NEVER opened —
     # proven by deleting them outright
-    from streamingdemo_spark.plans.scans import _txn_log_write_checkpoint
-
-    assert _txn_log_try_commit(
-        log_dir, 3, [json.dumps({"txn": {"appId": "a", "version": 2}}) + "\n"]
+    assert txn_log.try_commit(
+        log_dir, 3, [{"txn": {"appId": "a", "version": 2}}]
     )
-    _txn_log_write_checkpoint(log_dir, version=2)  # covers commits 0..2
+    txn_log.write_checkpoint(log_dir, version=2)  # covers commits 0..2
     for v in range(3):
         os.unlink(os.path.join(log_dir, f"{v:08d}.json"))
-    assert _txn_log_last_txn_version(log_dir, "a") == 2  # ckpt(1) + c3(2)
-    assert _txn_log_last_txn_version(log_dir, "b") == 5  # checkpoint only
-    assert _txn_log_last_txn_version(log_dir, "c") == -1
+    assert txn_log.last_txn_version(log_dir, "a") == 2  # ckpt(1) + c3(2)
+    assert txn_log.last_txn_version(log_dir, "b") == 5  # checkpoint only
+    assert txn_log.last_txn_version(log_dir, "c") == -1
+
+
+def test_next_version_survives_pre_checkpoint_cleanup():
+    """Commits at or before a checkpoint may be cleaned up (the ledger
+    test above does exactly that). The next commit must still land
+    ABOVE the checkpoint: claiming a version below it would be skipped
+    by every checkpointed reader, silently losing the commit. No
+    Spark."""
+    import os
+    import shutil
+    import tempfile
+
+    from streamingdemo_spark.plans import txn_log
+
+    tmp = tempfile.mkdtemp(prefix="txn_cleanup_")
+    try:
+        log_dir = txn_log.create(
+            os.path.join(tmp, "_txn_log"),
+            [[{"add": f"p{v}"}] for v in range(4)],
+        )
+        txn_log.write_checkpoint(log_dir, version=2)
+        for v in range(3):
+            os.unlink(os.path.join(log_dir, f"{v:08d}.json"))
+        assert txn_log.next_version(log_dir) == 4
+
+        def no_replan():
+            raise AssertionError("a blind append must never re-plan")
+
+        # a writer planned against the stale version 3 retries past it
+        rebases = txn_log.commit_with_retry(
+            log_dir, (3, set(), [{"add": "p4"}]), no_replan
+        )
+        assert rebases == 0
+        assert os.path.exists(os.path.join(log_dir, "00000004.json"))
+        live, opened = txn_log.resolve(log_dir)
+        assert opened == [
+            "00000002.checkpoint.json", "00000003.json", "00000004.json"
+        ]
+        assert set(live) == {"p0", "p1", "p2", "p3", "p4"}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_compression_invariants_single_arrow_projection(spark, sf_dir):
@@ -1405,20 +1420,17 @@ def test_checkpoint_preserves_add_action_stats(spark, sf_dir):
     (path, min, max) live set as the full stats replay — a checkpoint
     that strips stats silently turns every post-checkpoint query into
     a full-table scan."""
-    from streamingdemo_spark.plans.scans import (
-        _txn_log_stats_replay,
-        _txn_log_stats_replay_checkpointed,
-        _txn_log_stats_stage,
-        _txn_log_write_checkpoint,
-    )
+    from streamingdemo_spark.plans import txn_log
+    from streamingdemo_spark.plans.scans import _stage_stats
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
-    full = _txn_log_stats_replay(log_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
+    full = txn_log.snapshot(log_dir)
+    assert all("min_key" in a and "max_key" in a for a in full.values())
     # fallback path (no checkpoint): full replay, opens the commit
-    live, opened = _txn_log_stats_replay_checkpointed(log_dir)
+    live, opened = txn_log.resolve(log_dir)
     assert live == full and opened == ["00000000.json"]
-    _txn_log_write_checkpoint(log_dir, version=0)
-    live, opened = _txn_log_stats_replay_checkpointed(log_dir)
+    txn_log.write_checkpoint(log_dir, version=0)
+    live, opened = txn_log.resolve(log_dir)
     assert live == full, "stats lost through the checkpoint"
     assert opened == ["00000000.checkpoint.json"]
 
@@ -1444,31 +1456,31 @@ def test_txn_log_ts_resolution_clamps_skewed_clocks():
     timestamps, never raw writer clocks: a later commit with a skewed
     earlier raw ts is clamped past its predecessor, and a cutoff before
     the first commit raises instead of returning an empty snapshot."""
-    import json
     import os
     import tempfile
 
-    from streamingdemo_spark.plans.scans import _txn_log_version_at_ts
+    from streamingdemo_spark.plans import txn_log
 
-    log_dir = tempfile.mkdtemp(prefix="txn_ts_")
     stamps = [1000, 3000, 2500, 2600]  # v2/v3 skew backward
-    for v, ts in enumerate(stamps):
-        with open(os.path.join(log_dir, f"{v:08d}.json"), "w") as f:
-            f.write(json.dumps({"commitInfo": {"timestamp": ts}}) + "\n")
-            f.write(json.dumps({"add": f"part{v}"}) + "\n")
+    log_dir = txn_log.create(
+        os.path.join(tempfile.mkdtemp(prefix="txn_ts_"), "_txn_log"),
+        [
+            [{"commitInfo": {"timestamp": ts}}, {"add": f"part{v}"}]
+            for v, ts in enumerate(stamps)
+        ],
+    )
     # effective timestamps: 1000, 3000, 3001, 3002
-    assert _txn_log_version_at_ts(log_dir, 1000) == 0
-    assert _txn_log_version_at_ts(log_dir, 2999) == 0
-    assert _txn_log_version_at_ts(log_dir, 3000) == 1
-    assert _txn_log_version_at_ts(log_dir, 3001) == 2
-    assert _txn_log_version_at_ts(log_dir, 10_000) == 3
+    assert txn_log.version_at_ts(log_dir, 1000) == 0
+    assert txn_log.version_at_ts(log_dir, 2999) == 0
+    assert txn_log.version_at_ts(log_dir, 3000) == 1
+    assert txn_log.version_at_ts(log_dir, 3001) == 2
+    assert txn_log.version_at_ts(log_dir, 10_000) == 3
     with pytest.raises(ValueError):
-        _txn_log_version_at_ts(log_dir, 999)  # predates the table
+        txn_log.version_at_ts(log_dir, 999)  # predates the table
     # a commit without a timestamp makes ts-travel undefined — loudly
-    with open(os.path.join(log_dir, "00000004.json"), "w") as f:
-        f.write(json.dumps({"add": "part4"}) + "\n")
+    assert txn_log.try_commit(log_dir, 4, [{"add": "part4"}])
     with pytest.raises(RuntimeError):
-        _txn_log_version_at_ts(log_dir, 10_000)
+        txn_log.version_at_ts(log_dir, 10_000)
 
 
 @pytest.mark.parametrize("first", ["writer", "compactor"])
@@ -1478,19 +1490,16 @@ def test_txn_log_compaction_race_both_interleavings(spark, sf_dir, first):
     overlap), the loser's rebase must read the winner's output file,
     and the final logical table must equal the writer's update applied
     exactly once — compaction is data-identical regardless of order."""
+    from streamingdemo_spark.plans import txn_log
     from streamingdemo_spark.plans.scans import (
-        TxnConflictError,
         _compaction_txn,
         _cow_merge_txn,
         _orderkey_quantiles,
-        _txn_log_stats_replay,
-        _txn_log_stats_stage,
-        _txn_log_try_commit,
-        _txn_log_validate_read_set,
+        _stage_stats,
     )
     import os
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     alo, ahi, clo, chi = _orderkey_quantiles(
         spark, sf_dir, 0.40, 0.60, 0.35, 0.65
     )
@@ -1504,10 +1513,10 @@ def test_txn_log_compaction_race_both_interleavings(spark, sf_dir, first):
     winner, loser = (
         (w_plan, c_plan) if first == "writer" else (c_plan, w_plan)
     )
-    assert _txn_log_try_commit(log_dir, winner[0], winner[2])
-    assert not _txn_log_try_commit(log_dir, loser[0], loser[2])
-    with pytest.raises(TxnConflictError):
-        _txn_log_validate_read_set(log_dir, loser[0], loser[1])
+    assert txn_log.try_commit(log_dir, winner[0], winner[2])
+    assert not txn_log.try_commit(log_dir, loser[0], loser[2])
+    with pytest.raises(txn_log.TxnConflictError):
+        txn_log.validate_read_set(log_dir, loser[0], loser[1])
     # rebase: re-plan the LOSER against the post-winner snapshot
     if first == "writer":
         rb = _compaction_txn(spark, base, log_dir, clo, chi, "compact0")[:3]
@@ -1519,12 +1528,10 @@ def test_txn_log_compaction_race_both_interleavings(spark, sf_dir, first):
         assert "compact_stale" in rb[1], (
             "rebased writer must read the compacted file"
         )
-    _txn_log_validate_read_set(log_dir, rb[0], rb[1])  # clean now
-    assert _txn_log_try_commit(log_dir, rb[0], rb[2])
-    final = _txn_log_stats_replay(log_dir)
-    got = spark.read.parquet(
-        *(os.path.join(base, p) for p, _, _ in final)
-    )
+    txn_log.validate_read_set(log_dir, rb[0], rb[1])  # clean now
+    assert txn_log.try_commit(log_dir, rb[0], rb[2])
+    final = txn_log.snapshot(log_dir)
+    got = spark.read.parquet(*(os.path.join(base, p) for p in final))
     from pyspark.sql import functions as F
 
     cents = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
@@ -1552,15 +1559,10 @@ def test_txn_log_retry_loop_commutes_without_rebase(spark, sf_dir):
     """The generalized retry loop must NOT re-plan when the rival
     commits commute (disjoint files): one lost claim, zero rebases,
     same staged actions land at the next version."""
-    from streamingdemo_spark.plans.scans import (
-        _cow_merge_txn,
-        _txn_log_commit_count,
-        _txn_log_commit_with_retry,
-        _txn_log_stats_stage,
-        _txn_log_try_commit,
-    )
+    from streamingdemo_spark.plans import txn_log
+    from streamingdemo_spark.plans.scans import _cow_merge_txn, _stage_stats
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     a = _cow_merge_txn(
         spark, base, log_dir, lo, lo + span * 2 // 20, 11, 10, "rewriteA"
@@ -1570,45 +1572,42 @@ def test_txn_log_retry_loop_commutes_without_rebase(spark, sf_dir):
         lo + span * 17 // 20, lo + span * 19 // 20, 9, 10, "rewriteB",
     )
     assert not (a[1] & b[1])
-    assert _txn_log_try_commit(log_dir, a[0], a[2])
+    assert txn_log.try_commit(log_dir, a[0], a[2])
 
     def no_replan():
         raise AssertionError("commuting writers must never re-plan")
 
-    rebases = _txn_log_commit_with_retry(log_dir, b, no_replan)
+    rebases = txn_log.commit_with_retry(log_dir, b, no_replan)
     assert rebases == 0
-    assert _txn_log_commit_count(log_dir) == 3
+    assert txn_log.next_version(log_dir) == 3
 
 
 def test_txn_log_retry_loop_bounded(spark, sf_dir):
     """Livelock turns into a loud error: a rival that steals every
     version exhausts max_attempts instead of spinning forever."""
-    import json
     import os
     import tempfile
 
-    from streamingdemo_spark.plans.scans import (
-        _txn_log_commit_count,
-        _txn_log_commit_with_retry,
-    )
+    from streamingdemo_spark.plans import txn_log
 
-    log_dir = tempfile.mkdtemp(prefix="txn_livelock_")
-    with open(os.path.join(log_dir, "00000000.json"), "w") as f:
-        f.write(json.dumps({"add": "part0"}) + "\n")
+    log_dir = txn_log.create(
+        os.path.join(tempfile.mkdtemp(prefix="txn_livelock_"), "_txn_log"),
+        [[{"add": "part0"}]],
+    )
 
     def rival_steals():
         # the rival both steals the next version AND conflicts (it
         # removes the file we plan to rewrite), so every re-plan is
         # immediately invalidated again — a true livelock
-        v = _txn_log_commit_count(log_dir)
-        with open(os.path.join(log_dir, f"{v:08d}.json"), "w") as f:
-            f.write(json.dumps({"remove": "part0"}) + "\n")
-            f.write(json.dumps({"add": f"rival{v}"}) + "\n")
-        return v, {"part0"}, [json.dumps({"remove": "part0"}) + "\n"]
+        v = txn_log.next_version(log_dir)
+        assert txn_log.try_commit(
+            log_dir, v, [{"remove": "part0"}, {"add": f"rival{v}"}]
+        )
+        return v, {"part0"}, [{"remove": "part0"}]
 
     plan = rival_steals()  # rival lands one ahead of every claim
     with pytest.raises(RuntimeError, match="retry budget"):
-        _txn_log_commit_with_retry(
+        txn_log.commit_with_retry(
             log_dir, plan, rival_steals, max_attempts=3
         )
 
@@ -1619,31 +1618,26 @@ def test_txn_log_vacuum_retention_and_idempotence(spark, sf_dir):
     is idempotent, and never touches the transaction log itself."""
     import os
 
-    from streamingdemo_spark.plans.scans import (
-        _cow_merge_txn,
-        _txn_log_replay,
-        _txn_log_stats_stage,
-        _txn_log_try_commit,
-        _txn_log_vacuum,
-    )
+    from streamingdemo_spark.plans import txn_log
+    from streamingdemo_spark.plans.scans import _cow_merge_txn, _stage_stats
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     v, _, actions = _cow_merge_txn(
         spark, base, log_dir,
         lo + span * 11 // 20, lo + span * 13 // 20, 11, 10, "rewrite1",
     )
-    assert _txn_log_try_commit(log_dir, v, actions)
+    assert txn_log.try_commit(log_dir, v, actions)
     log_before = sorted(os.listdir(log_dir))
 
     # retain everything -> nothing is dead
-    dead, _ = _txn_log_vacuum(base, log_dir, retain_from_version=0)
+    dead, _ = txn_log.vacuum(base, log_dir, retain_from_version=0)
     assert dead == set()
 
     # horizon at the latest version -> exactly the rewritten buckets die
-    v0 = _txn_log_replay(log_dir, as_of=0)
-    v1 = _txn_log_replay(log_dir, as_of=1)
-    dead, referenced = _txn_log_vacuum(base, log_dir, retain_from_version=1)
+    v0 = set(txn_log.snapshot(log_dir, as_of=0))
+    v1 = set(txn_log.snapshot(log_dir, as_of=1))
+    dead, referenced = txn_log.vacuum(base, log_dir, retain_from_version=1)
     assert dead == v0 - v1 and dead
     assert referenced == v1
     for p in dead:
@@ -1652,7 +1646,7 @@ def test_txn_log_vacuum_retention_and_idempotence(spark, sf_dir):
         assert os.path.exists(os.path.join(base, p))
 
     # idempotent: a second vacuum at the same horizon finds nothing new
-    dead2, _ = _txn_log_vacuum(base, log_dir, retain_from_version=1)
+    dead2, _ = txn_log.vacuum(base, log_dir, retain_from_version=1)
     assert dead2 == dead  # same logical dead set, already gone from disk
     # the log is history, not data — vacuum must never touch it
     assert sorted(os.listdir(log_dir)) == log_before
@@ -1663,49 +1657,39 @@ def test_txn_log_restore_round_trip(spark, sf_dir):
     'rolling forward' to v1 again are two MORE commits, every
     intermediate state stays time-travelable, and the final live set
     equals v1's exactly."""
-    import json
-    import os
+    from streamingdemo_spark.plans import txn_log
+    from streamingdemo_spark.plans.scans import _cow_merge_txn, _stage_stats
 
-    from streamingdemo_spark.plans.scans import (
-        _cow_merge_txn,
-        _txn_log_commit_count,
-        _txn_log_replay,
-        _txn_log_replay_actions,
-        _txn_log_stats_stage,
-        _txn_log_try_commit,
-    )
+    def live_at(version=None):
+        return set(txn_log.snapshot(log_dir, as_of=version))
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     span = hi - lo + 1
     v, _, actions = _cow_merge_txn(
         spark, base, log_dir,
         lo + span * 11 // 20, lo + span * 13 // 20, 11, 10, "rewrite1",
     )
-    assert _txn_log_try_commit(log_dir, v, actions)
+    assert txn_log.try_commit(log_dir, v, actions)
 
     def restore_to(version):
-        target = _txn_log_replay_actions(log_dir, as_of=version)
-        current = _txn_log_replay(log_dir)
-        lines = [
-            json.dumps({"remove": p}) + "\n"
-            for p in sorted(current - set(target))
-        ] + [
-            json.dumps(target[p]) + "\n"
-            for p in sorted(set(target) - current)
-        ]
-        assert _txn_log_try_commit(
-            log_dir, _txn_log_commit_count(log_dir), lines
+        target = txn_log.snapshot(log_dir, as_of=version)
+        current = live_at()
+        actions = [
+            {"remove": p} for p in sorted(current - set(target))
+        ] + [target[p] for p in sorted(set(target) - current)]
+        assert txn_log.try_commit(
+            log_dir, txn_log.next_version(log_dir), actions
         )
         return set(target)
 
-    v0_live = _txn_log_replay(log_dir, as_of=0)
-    v1_live = _txn_log_replay(log_dir, as_of=1)
-    assert restore_to(0) == _txn_log_replay(log_dir) == v0_live
-    assert restore_to(1) == _txn_log_replay(log_dir) == v1_live
-    assert _txn_log_commit_count(log_dir) == 4  # nothing erased
+    v0_live = live_at(0)
+    v1_live = live_at(1)
+    assert restore_to(0) == live_at() == v0_live
+    assert restore_to(1) == live_at() == v1_live
+    assert txn_log.next_version(log_dir) == 4  # nothing erased
     # every historical state remains resolvable
-    assert _txn_log_replay(log_dir, as_of=2) == v0_live
-    assert _txn_log_replay(log_dir, as_of=3) == v1_live
+    assert live_at(2) == v0_live
+    assert live_at(3) == v1_live
 
 
 def test_txn_log_zorder_race_rebase_and_stats_gap(spark, sf_dir):
@@ -1721,36 +1705,25 @@ def test_txn_log_zorder_race_rebase_and_stats_gap(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from streamingdemo_spark.plans import txn_log
     from streamingdemo_spark.plans.lakehouse import (
         _ck_prune,
         _zorder_stage,
         _zorder_txn,
     )
-    import json
-
     from streamingdemo_spark.plans.scans import (
-        TxnConflictError,
         _orderkey_quantile_span,
-        _txn_log_commit_count,
-        _txn_log_replay,
-        _txn_log_replay_actions,
-        _txn_log_stats_replay,
-        _txn_log_try_commit,
-        _txn_log_validate_read_set,
+        _overlapping,
     )
 
     def cow_merge(base, log_dir, ulo, uhi, out_name):
         """Schema-preserving COW MERGE on the zorder table (+10% on
         [ulo, uhi]) whose add action records orderkey stats ONLY —
         the single-sort-column writer every mixed fleet has."""
-        bv = _txn_log_commit_count(log_dir)
-        affected = [
-            (p, mn, mx)
-            for p, mn, mx in _txn_log_stats_replay(log_dir)
-            if not (mx < ulo or mn > uhi)
-        ]
+        bv = txn_log.next_version(log_dir)
+        affected = _overlapping(txn_log.snapshot(log_dir), ulo, uhi)
         rewritten = spark.read.parquet(
-            *(os.path.join(base, p) for p, _, _ in affected)
+            *(os.path.join(base, p) for p in affected)
         ).select(
             "o_orderkey",
             "o_custkey",
@@ -1771,44 +1744,39 @@ def test_txn_log_zorder_race_rebase_and_stats_gap(spark, sf_dir):
         st = rewritten.agg(
             F.min("o_orderkey").alias("mn"), F.max("o_orderkey").alias("mx")
         ).collect()[0]
-        actions = [
-            json.dumps({"remove": p}) + "\n" for p, _, _ in affected
-        ] + [
-            json.dumps(
-                {
-                    "add": out_name,
-                    "min_key": int(st["mn"]),
-                    "max_key": int(st["mx"]),
-                }
-            )
-            + "\n"
+        actions = [{"remove": p} for p in affected] + [
+            {
+                "add": out_name,
+                "min_key": int(st["mn"]),
+                "max_key": int(st["mx"]),
+            }
         ]
-        return bv, {p for p, _, _ in affected}, actions
+        return bv, set(affected), actions
 
     base, log_dir = _zorder_stage(spark, sf_dir)
     alo, ahi = _orderkey_quantile_span(spark, sf_dir, 0.40, 0.60)
     z_plan = _zorder_txn(spark, base, log_dir)
     w_plan = cow_merge(base, log_dir, alo, ahi, "rewriteW")
     assert z_plan[1] & w_plan[1], "zorder reads everything: must overlap"
-    assert _txn_log_try_commit(log_dir, w_plan[0], w_plan[2])
-    post_w = _txn_log_replay(log_dir)
+    assert txn_log.try_commit(log_dir, w_plan[0], w_plan[2])
+    post_w = txn_log.snapshot(log_dir)
     cents = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
     want = (
         spark.read.parquet(*(os.path.join(base, p) for p in post_w))
         .select("o_orderkey", F.expr(cents).alias("cents"))
     )
-    assert not _txn_log_try_commit(log_dir, z_plan[0], z_plan[2])
-    with pytest.raises(TxnConflictError):
-        _txn_log_validate_read_set(log_dir, z_plan[0], z_plan[1])
+    assert not txn_log.try_commit(log_dir, z_plan[0], z_plan[2])
+    with pytest.raises(txn_log.TxnConflictError):
+        txn_log.validate_read_set(log_dir, z_plan[0], z_plan[1])
     # the stats-less rewrite is unprunable — _ck_prune must keep it
-    live = _txn_log_replay_actions(log_dir)
+    live = txn_log.snapshot(log_dir)
     assert "min_ck" not in live["rewriteW"]
     assert "rewriteW" in _ck_prune(live, 1, 2)
     rb = _zorder_txn(spark, base, log_dir)
     assert "rewriteW" in rb[1], "rebase must read the winner's file"
-    _txn_log_validate_read_set(log_dir, rb[0], rb[1])
-    assert _txn_log_try_commit(log_dir, rb[0], rb[2])
-    final = _txn_log_replay(log_dir)
+    txn_log.validate_read_set(log_dir, rb[0], rb[1])
+    assert txn_log.try_commit(log_dir, rb[0], rb[2])
+    final = txn_log.snapshot(log_dir)
     got = (
         spark.read.parquet(*(os.path.join(base, p) for p in final))
         .select("o_orderkey", F.expr(cents).alias("cents"))
@@ -1817,9 +1785,7 @@ def test_txn_log_zorder_race_rebase_and_stats_gap(spark, sf_dir):
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
     # post-zorder, every live file carries fresh 2-D stats again
-    assert all(
-        "min_ck" in a for a in _txn_log_replay_actions(log_dir).values()
-    )
+    assert all("min_ck" in a for a in txn_log.snapshot(log_dir).values())
 
 
 def test_txn_log_zorder_result_matches_logical_table(spark, sf_dir):
@@ -1849,19 +1815,15 @@ def test_txn_log_incr_mv_applies_pure_append_delta(spark, sf_dir):
     (MV at v0) + delta == full recompute over the post-append
     snapshot — the composition a streaming foreachBatch consumer
     relies on."""
-    import json
     import os
 
     from pyspark.sql import functions as F
 
+    from streamingdemo_spark.plans import txn_log
     from streamingdemo_spark.plans.lakehouse import _CENTS, _mv_delta
-    from streamingdemo_spark.plans.scans import (
-        _txn_log_replay,
-        _txn_log_stats_stage,
-        _txn_log_try_commit,
-    )
+    from streamingdemo_spark.plans.scans import _stage_stats
 
-    base, log_dir, lo, hi = _txn_log_stats_stage(spark, sf_dir)
+    base, log_dir, lo, hi = _stage_stats(spark, sf_dir)
     appended = (
         spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1872,18 +1834,15 @@ def test_txn_log_incr_mv_applies_pure_append_delta(spark, sf_dir):
     st = appended.agg(
         F.min("o_orderkey").alias("mn"), F.max("o_orderkey").alias("mx")
     ).collect()[0]
-    assert _txn_log_try_commit(
+    assert txn_log.try_commit(
         log_dir,
         1,
         [
-            json.dumps(
-                {
-                    "add": "append0",
-                    "min_key": int(st["mn"]),
-                    "max_key": int(st["mx"]),
-                }
-            )
-            + "\n"
+            {
+                "add": "append0",
+                "min_key": int(st["mn"]),
+                "max_key": int(st["mx"]),
+            }
         ],
     )
 
@@ -1893,7 +1852,7 @@ def test_txn_log_incr_mv_applies_pure_append_delta(spark, sf_dir):
             F.sum(F.expr(_CENTS)).alias("sum_cents"),
         )
 
-    v0 = _txn_log_replay(log_dir, as_of=0)
+    v0 = txn_log.snapshot(log_dir, as_of=0)
     mv0 = agg(spark.read.parquet(*(os.path.join(base, p) for p in v0)))
     delta, n_files = _mv_delta(spark, base, log_dir, 1)
     assert n_files == 1  # preimage-free: only the appended file read
@@ -1905,7 +1864,7 @@ def test_txn_log_incr_mv_applies_pure_append_delta(spark, sf_dir):
             F.sum("sum_cents").alias("sum_cents"),
         )
     )
-    live = _txn_log_replay(log_dir)
+    live = txn_log.snapshot(log_dir)
     want = agg(spark.read.parquet(*(os.path.join(base, p) for p in live)))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -1957,10 +1916,10 @@ def test_txn_log_bloom_has_no_false_negatives_and_bounded_fp(
         _bloom_might_contain,
         _bloom_stage,
     )
-    from streamingdemo_spark.plans.scans import _txn_log_replay_actions
+    from streamingdemo_spark.plans import txn_log
 
     base, log_dir, m = _bloom_stage(spark, sf_dir)
-    live = _txn_log_replay_actions(log_dir)
+    live = txn_log.snapshot(log_dir)
     hi_ck = 0
     for path, action in live.items():
         keys = [

@@ -167,3 +167,22 @@ def test_only_the_runner_waits_on_a_stream():
         if ".awaitTermination(" in path.read_text()
     }
     assert found <= {"streaming/runner.py", "operators/builtin.py"}, found
+
+
+def test_only_txn_log_knows_the_log_format():
+    """``plans/txn_log.py`` owns the on-disk log format: no other module
+    may spell the commit file name or the checkpoint pointer, so every
+    txn-log key reads and writes the log through it. No Spark."""
+    import pathlib
+    import re
+
+    import streamingdemo_spark
+
+    root = pathlib.Path(streamingdemo_spark.__file__).parent
+    pattern = re.compile(r"\\d\{8\}|:08d\}|_last_checkpoint")
+    found = {
+        path.relative_to(root).as_posix()
+        for path in root.rglob("*.py")
+        if pattern.search(path.read_text())
+    }
+    assert found == {"plans/txn_log.py"}, found
