@@ -18,6 +18,11 @@ the BENCH_FULL_r{N}.json sidecar.
 Headline set: one representative per operator family, weighted toward
 the scale-critical paths (fact-table agg, star join, window, dedup,
 similarity, streaming replay).
+
+This module is also the tools' one measurement path:
+``tools/opt_measure.py`` times keys with ``warm_up``, ``timed_reps``
+and ``_drain``, and it and ``tools/driver_sim.py --stats`` read per-key
+stage metrics with ``stage_stats``.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ import json
 import os
 import sys
 import time
+
 
 def _drain(df) -> int:
     """Materialize every output column and return the row count.
@@ -46,6 +52,106 @@ def _drain(df) -> int:
         .collect()[0]
     )
     return row["n"]
+
+
+def warm_up(spark, queries, sf_dir: str) -> None:
+    """Warm the session once so per-key walls measure the engine, not
+    first-touch initialization: the JVM/codegen/broadcast machinery,
+    then the Python workers."""
+    queries["src_parquet_scan"](spark, sf_dir).collect()
+    queries["join_broadcast"](spark, sf_dir).collect()
+    # Fork one worker per core, import pandas/numpy, and write one
+    # ~16 MB numpy buffer per worker so each worker's malloc arena is
+    # faulted once up front (session.py pins the arena so those pages
+    # are then kept). Without this the FIRST UDF-bearing key's rep 1
+    # measures worker birth + kernel first-touch (5-10 s on
+    # first-touch-expensive kernels), not the engine; no query logic
+    # runs here and nothing is cached — the output is discarded.
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def _touch(s):
+        import numpy as np
+
+        arena = np.arange(2_000_000, dtype=np.int64)  # fault ~16 MB
+        return s * int(arena[0] + 1)
+
+    n_cores = spark.sparkContext.defaultParallelism
+    spark.range(n_cores * 4, numPartitions=n_cores).select(
+        _touch("id")
+    ).collect()
+
+
+def timed_reps(spark, build, sf_dir: str, reps: int):
+    """Time ``reps`` runs of ``build(spark, sf_dir)``, each from the
+    builder call to fully drained output. The cache is cleared per rep
+    so keys that persist intermediates (LSH signatures) are measured
+    cold. Returns the sorted walls, the last rep's row count and the
+    last rep's frame."""
+    walls, n, df = [], 0, None
+    for _ in range(reps):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        df = build(spark, sf_dir)
+        n = _drain(df)
+        walls.append(time.perf_counter() - t0)
+    return sorted(walls), n, df
+
+
+# stage_stats field -> Spark's StageData getter, summed per stage
+_STAGE_FIELDS = {
+    "shuffle_read_bytes": "shuffleReadBytes",
+    "shuffle_write_bytes": "shuffleWriteBytes",
+    "memory_spilled_bytes": "memoryBytesSpilled",
+    "disk_spilled_bytes": "diskBytesSpilled",
+    "input_bytes": "inputBytes",
+}
+
+
+def stage_stats(spark, group: str, seen: set) -> dict | None:
+    """Completed-stage totals for the jobs run under job group
+    ``group``: shuffle read/write bytes, spill, input bytes, stage and
+    task counts. They come from Spark's in-process status store, which
+    keeps them with the UI off. Returns None when the group ran no
+    stage outside ``seen``.
+
+    ``seen`` guards against cross-key attribution: a job can list a
+    stage that executed under an earlier group and was skipped here (a
+    reused exchange keeps its stage id), so every stage a call reads
+    is added to ``seen`` and never read again. Streaming keys run their
+    micro-batch jobs under the stream's own group, so their totals
+    cover only the driver-side batch work."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    # the store is fed by the listener bus; drain it so the last
+    # stage's completion and task metrics have landed
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids = set()
+    for job_id in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job_id)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    stage_ids -= seen
+    if not stage_ids:
+        return None
+    seen |= stage_ids
+    store = jsc.statusStore()
+    agg = dict.fromkeys([*_STAGE_FIELDS, "n_stages", "n_tasks"], 0)
+    for sid in sorted(stage_ids):
+        try:
+            stage = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # evicted past spark.ui.retainedStages
+            continue
+        if stage.status().toString() != "COMPLETE":
+            continue
+        for field, getter in _STAGE_FIELDS.items():
+            agg[field] += getattr(stage, getter)()
+        agg["n_stages"] += 1
+        agg["n_tasks"] += stage.numCompleteTasks()
+    return agg
 
 
 HEADLINE = [
@@ -138,54 +244,22 @@ def main() -> None:
     spark = get_spark(app_name="streamingdemo-bench")
     queries = entry_mod.queries()
 
-    # Warm the JVM/codegen/broadcast machinery once so per-query numbers
-    # measure the engine, not first-touch initialization.
-    queries["src_parquet_scan"](spark, sf_dir).collect()
-    queries["join_broadcast"](spark, sf_dir).collect()
-    # Warm the Python-worker machinery the same way: fork one worker
-    # per core, import pandas/numpy, and write one ~16 MB numpy buffer
-    # per worker so each worker's malloc arena is faulted once up
-    # front (session.py pins the arena so those pages are then kept).
-    # Without this the FIRST UDF-bearing key's rep 1 measures worker
-    # birth + kernel first-touch (5-10 s on first-touch-expensive
-    # kernels), not the engine; no query logic runs here and nothing
-    # is cached — the warmup output is discarded.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _touch(s):
-        import numpy as np
-
-        arena = np.arange(2_000_000, dtype=np.int64)  # fault ~16 MB
-        return s * int(arena[0] + 1)
-
-    n_cores = spark.sparkContext.defaultParallelism
-    spark.range(n_cores * 4, numPartitions=n_cores).select(
-        _touch("id")
-    ).collect()
+    warm_up(spark, queries, sf_dir)
 
     timings: dict[str, float] = {}
     for key in HEADLINE:
-        walls, n = [], 0
         # best-of-2: micro-batch scheduling and first-touch codegen add
         # seconds of run-to-run noise at this scale; the minimum is the
-        # reproducible engine cost. The cache is cleared per rep so ops
-        # that persist intermediates (LSH signatures) are measured cold.
-        # ANCHOR keys get a third rep and use the MEDIAN instead: their
-        # walls are sub-second, where scheduler jitter is a large
-        # fraction of the wall and a min-of-2 can masquerade noise as
-        # cross-round drift (r11's 1.24-1.31 uniform anchor inflation
-        # was box speed, but the artifact couldn't show it; switched in
-        # r12, so anchor ratios vs the r11 min-of-2 walls may read a
-        # few percent high — that is the named cause).
+        # reproducible engine cost. ANCHOR keys get a third rep and use
+        # the MEDIAN instead: their walls are sub-second, where
+        # scheduler jitter is a large fraction of the wall and a
+        # min-of-2 can masquerade noise as cross-round drift (r11's
+        # 1.24-1.31 uniform anchor inflation was box speed, but the
+        # artifact couldn't show it; switched in r12, so anchor ratios
+        # vs the r11 min-of-2 walls may read a few percent high — that
+        # is the named cause).
         reps = 3 if key in ANCHOR_KEYS else 2
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = queries[key](spark, sf_dir)
-            n = _drain(df)
-            walls.append(time.perf_counter() - t0)
-        walls.sort()
+        walls, n, _ = timed_reps(spark, queries[key], sf_dir, reps)
         timings[key] = round(
             walls[len(walls) // 2] if key in ANCHOR_KEYS else walls[0], 3
         )
@@ -342,10 +416,8 @@ def _registry_walls(
             )
             break
         try:
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _drain(queries[key](spark, sf_dir))
-            walls[key] = round(time.perf_counter() - t0, 3)
+            wall = timed_reps(spark, queries[key], sf_dir, 1)[0][0]
+            walls[key] = round(wall, 3)
         except Exception as exc:  # visible in the artifact, not silent
             print(f"# registry wall ERROR {key}: {exc}", file=sys.stderr)
             walls[key] = None

@@ -19,6 +19,8 @@ Scale design (the actual point of these operators at 100 TB):
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -139,6 +141,87 @@ def _shingles(toks: Column, k: int = 3) -> Column:
 _MH_N, _MH_BANDS = 12, 4
 _MH_A = [pow(48271, k + 1, POLY_MOD) for k in range(_MH_N)]
 _MH_B = [(16807 * (k + 1)) % POLY_MOD for k in range(_MH_N)]
+# LSH skew guard: band buckets above this size are dropped before
+# pairing. A low-vocabulary corpus (like this fixture) makes some
+# minhash values extremely common, and such buckets are
+# non-discriminative noise that would otherwise create a quadratic
+# pair blowup. The oracles spell the same cap.
+_MH_BUCKET_CAP = 100
+
+
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): each doc's distinct 3-token shingle hashes.
+
+    Integer shingles: hash each token once, then a shingle hash is the
+    131-combine of 3 adjacent token-hash longs — no shingle strings
+    are ever built, and every downstream stage (signatures, verify
+    sets) moves 8-byte longs instead of ~20-byte strings.
+    """
+    mod = F.lit(POLY_MOD)
+    toks = F.split("text", " ")
+    # Materialize token hashes in their own projection BEFORE the
+    # shingle transform references them: the shingle lambda reads the
+    # array 3x via element_at, and inlining the char-fold expression
+    # there re-evaluates every token's fold once per shingle —
+    # O(tokens²·chars) per doc, measured 74x slower at sf0.1.
+    with_th = docs.select("doc_id", F.transform(toks, poly_hash).alias("th"))
+    th = F.col("th")
+    n = F.size(th)
+    shingle_hashes = F.transform(
+        F.sequence(F.lit(1), F.greatest(n - 2, F.lit(1))),
+        lambda i: (
+            (F.element_at(th, i) * 131 + F.element_at(th, i + 1)) % mod * 131
+            + F.element_at(th, i + F.lit(2))
+        )
+        % mod,
+    )
+    return with_th.select(
+        "doc_id", F.array_distinct(shingle_hashes).alias("sh")
+    )
+
+
+def _lsh_bands(hashes: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) LSH rows from exploded shingle hashes
+    (doc_id, hs): the ``_MH_N`` affine permutations are evaluated once
+    per shingle and min-aggregated per doc (aggregate-form MinHash),
+    then folded into ``_MH_BANDS`` band buckets by 131-combines, with
+    buckets above ``_MH_BUCKET_CAP`` dropped."""
+    from pyspark.sql.window import Window
+
+    mod = F.lit(POLY_MOD)
+    rows_per_band = _MH_N // _MH_BANDS
+    sigs = (
+        hashes.select(
+            "doc_id",
+            *[
+                ((F.lit(_MH_A[k]) * F.col("hs") + F.lit(_MH_B[k])) % mod).alias(
+                    f"h{k}"
+                )
+                for k in range(_MH_N)
+            ],
+        )
+        .groupBy("doc_id")
+        .agg(*[F.min(f"h{k}").alias(f"h{k}") for k in range(_MH_N)])
+    )
+
+    def _band_bucket(b: int) -> Column:
+        acc: Column = F.col(f"h{b * rows_per_band}")
+        for r in range(1, rows_per_band):
+            acc = (acc * 131 + F.col(f"h{b * rows_per_band + r}")) % mod
+        return acc
+
+    banded = sigs.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[_band_bucket(b) for b in range(_MH_BANDS)])
+        ).alias("band", "bucket"),
+    )
+    bucket_sizes = Window.partitionBy("band", "bucket")
+    return (
+        banded.withColumn("bucket_n", F.count(F.lit(1)).over(bucket_sizes))
+        .filter(F.col("bucket_n") <= _MH_BUCKET_CAP)
+        .drop("bucket_n")
+    )
 
 
 def _minhash_oracle() -> str:
@@ -247,83 +330,20 @@ def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     them); at cluster scale these are exactly the datasets you
     checkpoint. Single-consumer intermediates (signatures, candidate
     pairs) are NOT cached — caching them paid a cache-write pass for
-    zero reuse. Buckets above ``_BUCKET_CAP`` are
-    dropped before pairing — a low-vocabulary corpus (like this
-    fixture) makes some minhash values extremely common, and such
-    buckets are non-discriminative noise that would otherwise create a
-    quadratic pair blowup (the LSH skew guard).
+    zero reuse. Buckets above ``_MH_BUCKET_CAP`` are
+    dropped before pairing (the LSH skew guard).
     """
     # 4 bands x 3 rows: P(candidate) at jaccard .85 = 1-(1-.85^3)^4 ≈ .98,
     # at jaccard .3 ≈ .10 — a sharper sensitivity curve than 4x4 with 25%
-    # fewer hash evaluations.
-    n_hashes, bands = _MH_N, _MH_BANDS
-    rows_per_band = n_hashes // bands
-    _BUCKET_CAP = 100
-    mod = F.lit(POLY_MOD)
-    # Integer shingles: hash each token once, then a shingle hash is the
-    # 131-combine of 3 adjacent token-hash longs — no shingle strings
-    # are ever built, and every downstream stage (signatures, verify
-    # sets) moves 8-byte longs instead of ~20-byte strings.
-    toks = F.split("text", " ")
-    # Materialize token hashes in their own projection BEFORE the
-    # shingle transform references them: the shingle lambda reads the
-    # array 3x via element_at, and inlining the char-fold expression
-    # there re-evaluates every token's fold once per shingle —
-    # O(tokens²·chars) per doc, measured 74x slower at sf0.1.
-    with_th = _docs_with_mutants(spark, sf_dir).select(
-        "doc_id", F.transform(toks, poly_hash).alias("th")
-    )
-    th = F.col("th")
-    n = F.size(th)
-    shingle_hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 2, F.lit(1))),
-        lambda i: (
-            (F.element_at(th, i) * 131 + F.element_at(th, i + 1)) % mod * 131
-            + F.element_at(th, i + F.lit(2))
-        )
-        % mod,
-    )
-    docs = with_th.select(
-        "doc_id", F.array_distinct(shingle_hashes).alias("sh")
-    ).cache()
+    # fewer hash evaluations (``_MH_N``, ``_MH_BANDS``).
+    docs = _shingle_sets(_docs_with_mutants(spark, sf_dir)).cache()
     based = docs.select("doc_id", F.explode("sh").alias("hs"))
-    sigs = (
-        based.select(
-            "doc_id",
-            *[
-                ((F.lit(_MH_A[k]) * F.col("hs") + F.lit(_MH_B[k])) % mod).alias(
-                    f"h{k}"
-                )
-                for k in range(n_hashes)
-            ],
-        )
-        .groupBy("doc_id")
-        .agg(*[F.min(f"h{k}").alias(f"h{k}") for k in range(n_hashes)])
-    )
-    # sigs and cand are single-consumer (banded resp. the verify join),
-    # so caching them bought nothing and paid the cache-write pass on
-    # every run (r13-opt: dropped; docs and banded keep their caches —
-    # each is read by 2-3 distinct consumers, and the no-cache form
-    # measured 38-48 s vs ~2.5 s at sf0.1).
-
-    def _band_bucket(b: int) -> Column:
-        acc: Column = F.col(f"h{b * rows_per_band}")
-        for r in range(1, rows_per_band):
-            acc = (acc * 131 + F.col(f"h{b * rows_per_band + r}")) % mod
-        return acc
-
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_band_bucket(b) for b in range(bands)])
-        ).alias("band", "bucket"),
-    )
-    from pyspark.sql.window import Window
-
-    bucket_sizes = Window.partitionBy("band", "bucket")
-    banded = banded.withColumn(
-        "bucket_n", F.count(F.lit(1)).over(bucket_sizes)
-    ).filter(F.col("bucket_n") <= _BUCKET_CAP).drop("bucket_n").cache()
+    # The signatures and cand are single-consumer (the banding resp.
+    # the verify join), so caching them bought nothing and paid the
+    # cache-write pass on every run (r13-opt: dropped; docs and banded
+    # keep their caches — each is read by 2-3 distinct consumers, and
+    # the no-cache form measured 38-48 s vs ~2.5 s at sf0.1).
+    banded = _lsh_bands(based).cache()
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -1528,6 +1548,11 @@ def _cluster_oracle() -> str:
     """
 
 
+# Bound on the wait for min_label_components' per-round Observation
+# (normally milliseconds) before it falls back to an explicit sum.
+_OBSERVATION_WAIT_S = 10.0
+
+
 def min_label_components(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     """Connected components of an undirected edge list
     ``(doc_a, doc_b)`` via min-label propagation with pointer doubling:
@@ -1599,9 +1624,16 @@ def min_label_components(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
         if not numeric_label:
             return df.localCheckpoint(eager=True), None
         obs = Observation()
-        ck = df.observe(
-            obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).localCheckpoint(eager=True)
+        label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        ck = df.observe(obs, label_sum).localCheckpoint(eager=True)
+        # The metric arrives through the listener bus after the job
+        # ends; obs.get would wait for it forever. Wait a bounded time
+        # (getRowOrEmpty waits up to 100 ms per call), then pay one
+        # explicit scan-and-reduce for the same sum instead.
+        deadline = time.monotonic() + _OBSERVATION_WAIT_S
+        while not obs._jo.getRowOrEmpty().isDefined():
+            if time.monotonic() >= deadline:
+                return ck, ck.agg(label_sum).first()["s"]
         return ck, obs.get["s"]
 
     labels, prev_sum = _checkpoint_with_sum(
@@ -1971,10 +2003,10 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ground truth on the slice: pairs sharing >= 1 shingle (all others
     have Jaccard 0), verified with exact set intersection at the 0.5
-    threshold the production key uses. Candidates: the identical
-    4x3-band pipeline (same permutation constants, same bucket cap) —
-    WITHOUT its verify step, because the evaluator measures the raw
-    banding selectivity. One output row: counts + rounded
+    threshold the production key uses. Candidates: the production
+    key's shingle and banding helpers (``_shingle_sets``,
+    ``_lsh_bands``) — WITHOUT its verify step, because the evaluator
+    measures the raw banding selectivity. One output row: counts + rounded
     precision/recall. Every hash is the portable convention, so the
     DuckDB oracle replays both sides bit-for-bit.
 
@@ -1982,27 +2014,10 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth join; at production scale the slice is a sampled partition,
     everything else is unchanged.
     """
-    mod = F.lit(POLY_MOD)
     sliced = _docs_with_mutants(spark, sf_dir).filter(
         F.pmod(F.col("doc_id"), F.lit(1_000_000)) < 400
     )
-    toks = F.split("text", " ")
-    with_th = sliced.select(
-        "doc_id", F.transform(toks, poly_hash).alias("th")
-    )
-    th = F.col("th")
-    n = F.size(th)
-    shingle_hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 2, F.lit(1))),
-        lambda i: (
-            (F.element_at(th, i) * 131 + F.element_at(th, i + 1)) % mod * 131
-            + F.element_at(th, i + F.lit(2))
-        )
-        % mod,
-    )
-    docs = with_th.select(
-        "doc_id", F.array_distinct(shingle_hashes).alias("sh")
-    ).cache()
+    docs = _shingle_sets(sliced).cache()
     ex = docs.select("doc_id", F.explode("sh").alias("hs"))
     truth_pairs = (
         ex.alias("a")
@@ -2027,42 +2042,7 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .cache()
     )
-    sigs = (
-        ex.select(
-            "doc_id",
-            *[
-                ((F.lit(_MH_A[k]) * F.col("hs") + F.lit(_MH_B[k])) % mod).alias(
-                    f"h{k}"
-                )
-                for k in range(_MH_N)
-            ],
-        )
-        .groupBy("doc_id")
-        .agg(*[F.min(f"h{k}").alias(f"h{k}") for k in range(_MH_N)])
-    )
-    rows_per_band = _MH_N // _MH_BANDS
-
-    def _band_bucket(b: int) -> Column:
-        acc: Column = F.col(f"h{b * rows_per_band}")
-        for r in range(1, rows_per_band):
-            acc = (acc * 131 + F.col(f"h{b * rows_per_band + r}")) % mod
-        return acc
-
-    from pyspark.sql.window import Window
-
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_band_bucket(b) for b in range(_MH_BANDS)])
-        ).alias("band", "bucket"),
-    )
-    banded = (
-        banded.withColumn(
-            "bn", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-        )
-        .filter(F.col("bn") <= 100)
-        .drop("bn")
-    )
+    banded = _lsh_bands(ex)
     cand = (
         banded.alias("a")
         .join(

@@ -95,13 +95,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Streaming: allow many concurrent short-lived queries in tests.
         .config("spark.sql.streaming.schemaInference", "true")
-        # Off in tests (port + heap overhead per session); the sweep's
-        # --stats audit turns it on to read per-key stage metrics
-        # (shuffle bytes, spill) from the REST API.
-        .config(
-            "spark.ui.enabled",
-            os.environ.get("SPARK_UI_ENABLED", "false"),
-        )
+        # Off: a port + heap per session. Per-stage metrics stay
+        # readable in-process (bench.stage_stats reads the status
+        # store); a deployment that wants the UI passes extra_conf.
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.debug.maxToStringFields", "200")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # The oracle-differential harness collects FULL query results

@@ -109,63 +109,52 @@ def _cache_dir(sf_dir: str, source_file: str, leaf: str) -> str:
     return os.path.join(root, cur, leaf)
 
 
-def _complete_atomically(tmp_dir: str, out_dir: str) -> bool:
-    """Publish a fully-written chunk dir with one rename: a crash
-    mid-build leaves only a .tmp dir (rebuilt next time), never a
-    half-full cache that os.listdir() would mistake for complete.
-    Returns False if another process won the race (out_dir appeared)."""
+def _publish(sf_dir: str, source_file: str, leaf: str, write) -> str:
+    """Return the chunk dir of ``source_file`` cached under ``leaf``,
+    building it on first use: ``write(tmp_dir)`` fills a private
+    ``.tmp-<pid>`` dir, and one rename publishes it. A crash mid-build
+    leaves only a .tmp dir (rebuilt next time), never a half-full
+    cache that os.listdir() would mistake for complete."""
+    out_dir = _cache_dir(sf_dir, source_file, leaf)
+    if os.path.isdir(out_dir):
+        return out_dir
+    tmp = f"{out_dir}.tmp-{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
     try:
-        os.rename(tmp_dir, out_dir)
-        return True
+        os.rename(tmp, out_dir)
     except OSError:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        return os.path.isdir(out_dir)
-
-
-def _chunked_replay(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    source_file: str,
-    columns: list[str],
-    sort_key: str,
-    schema: str,
-    tag: str,
-    n_chunks: int,
-    files_per_trigger: int | None,
-) -> DataFrame:
-    """Shared chunked-parquet replay builder behind
-    :func:`documents_stream` and :func:`embeddings_stream` (the events
-    side needs :func:`_build`'s variant logic): sort by the stable
-    key, write mod-time-ordered chunks once per (fixture fingerprint,
-    chunk count), read back as a file stream."""
-    out_dir = _cache_dir(sf_dir, source_file, f"{tag}-{n_chunks}")
-    if not os.path.isdir(out_dir):
-        tmp = f"{out_dir}.tmp-{os.getpid()}"
+        # another process published first; a lost race with no winner
+        # on disk is an error, not an empty replay
         shutil.rmtree(tmp, ignore_errors=True)
-        t = (
-            pq.read_table(
-                os.path.join(sf_dir, source_file), columns=columns
-            )
-            .sort_by([(sort_key, "ascending")])
-        )
-        _write_chunks(t, tmp, n_chunks)
-        if not _complete_atomically(tmp, out_dir):
+        if not os.path.isdir(out_dir):
             raise RuntimeError(f"chunk cache build raced and lost: {out_dir}")
+    return out_dir
+
+
+def _reader(
+    spark: SparkSession, schema: str, path: str, files_per_trigger: int | None
+) -> DataFrame:
+    """The file-stream reader over a published chunk dir: one trigger
+    per ``files_per_trigger`` files, or everything in one micro-batch
+    when None."""
     reader = spark.readStream.schema(schema)
     if files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    return reader.parquet(out_dir)
+    return reader.parquet(path)
 
 
-def _build(sf_dir: str, variant: str, n_chunks: int) -> str:
-    out_dir = _cache_dir(
-        sf_dir, "events.parquet", f"{variant}-{n_chunks}"
-    )
-    if os.path.isdir(out_dir):
-        return out_dir
-    final_dir, out_dir = out_dir, f"{out_dir}.tmp-{os.getpid()}"
-    shutil.rmtree(out_dir, ignore_errors=True)
+def _write_sorted(
+    sf_dir: str, source_file: str, columns: list[str], n_chunks: int, out_dir: str
+) -> None:
+    """``columns`` of a fixture, sorted by the first (the stable id),
+    as mod-time-ordered chunks."""
+    t = pq.read_table(os.path.join(sf_dir, source_file), columns=columns)
+    _write_chunks(t.sort_by([(columns[0], "ascending")]), out_dir, n_chunks)
+
+
+def _write_events(sf_dir: str, variant: str, n_chunks: int, out_dir: str) -> None:
+    """The events fixture in ts order as the replay ``variant``."""
     t = _events_sorted(sf_dir)
     if variant == "ordered":
         _write_chunks(t, out_dir, n_chunks)
@@ -221,9 +210,17 @@ def _build(sf_dir: str, variant: str, n_chunks: int) -> str:
             time.sleep(0.01)
     else:
         raise ValueError(f"unknown variant {variant!r}")
-    if not _complete_atomically(out_dir, final_dir):
-        raise RuntimeError(f"chunk cache build raced and lost: {final_dir}")
-    return final_dir
+
+
+def _build(sf_dir: str, variant: str, n_chunks: int) -> str:
+    """Publish the events replay ``variant`` as ``n_chunks`` chunk
+    files and return its dir."""
+    return _publish(
+        sf_dir,
+        "events.parquet",
+        f"{variant}-{n_chunks}",
+        lambda out_dir: _write_events(sf_dir, variant, n_chunks, out_dir),
+    )
 
 
 DOCS_SCHEMA = "doc_id long, text string"
@@ -242,17 +239,14 @@ def documents_stream(
     Same deterministic chunked-parquet mechanism as
     :func:`events_stream` (mod-time-ordered files, one trigger per
     file by default)."""
-    return _chunked_replay(
-        spark,
+    cols = ["doc_id", "text"]
+    path = _publish(
         sf_dir,
-        source_file="documents.parquet",
-        columns=["doc_id", "text"],
-        sort_key="doc_id",
-        schema=DOCS_SCHEMA,
-        tag="docs",
-        n_chunks=n_chunks,
-        files_per_trigger=files_per_trigger,
+        "documents.parquet",
+        f"docs-{n_chunks}",
+        lambda out: _write_sorted(sf_dir, "documents.parquet", cols, n_chunks, out),
     )
+    return _reader(spark, DOCS_SCHEMA, path, files_per_trigger)
 
 
 EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>"
@@ -269,17 +263,14 @@ def embeddings_stream(
     feeding an index build. Same deterministic chunked-parquet
     mechanism as :func:`events_stream` (mod-time-ordered files, one
     trigger per file by default)."""
-    return _chunked_replay(
-        spark,
+    cols = ["vec_id", "embedding"]
+    path = _publish(
         sf_dir,
-        source_file="embeddings.parquet",
-        columns=["vec_id", "embedding"],
-        sort_key="vec_id",
-        schema=EMB_STREAM_SCHEMA,
-        tag="emb",
-        n_chunks=n_chunks,
-        files_per_trigger=files_per_trigger,
+        "embeddings.parquet",
+        f"emb-{n_chunks}",
+        lambda out: _write_sorted(sf_dir, "embeddings.parquet", cols, n_chunks, out),
     )
+    return _reader(spark, EMB_STREAM_SCHEMA, path, files_per_trigger)
 
 
 def events_stream(
@@ -295,8 +286,5 @@ def events_stream(
     the final batch), 'dups' (duplicate event_ids in the final batch).
     ``files_per_trigger=None`` processes everything in one micro-batch.
     """
-    src = _build(sf_dir, variant, n_chunks)
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    return reader.parquet(src)
+    path = _build(sf_dir, variant, n_chunks)
+    return _reader(spark, EVENTS_SCHEMA, path, files_per_trigger)

@@ -17,6 +17,26 @@ def _planted_recall(df, id_a: str, id_b: str) -> tuple[int, int]:
     return len(planted), len(rows)
 
 
+def _union_find_labels(edges) -> dict:
+    """Driver-side reference for min_label_components: node -> the
+    minimum node of its component (path-halving union-find)."""
+    parent = {v: v for e in edges for v in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    low: dict = {}
+    for v in parent:
+        root = find(v)
+        low[root] = min(low.get(root, v), v)
+    return {v: low[find(v)] for v in parent}
+
+
 class TestDedup:
     def test_exact_dedup_finds_duplicated_round(self, spark, sf_dir):
         out = QUERIES["ext_dedup_exact"](spark, sf_dir)
@@ -419,27 +439,6 @@ class TestPipelineOps:
 
         from streamingdemo_spark.extensions.dedup import min_label_components
 
-        def expected(n_nodes, edges):
-            parent = list(range(n_nodes))
-
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in edges:
-                parent[find(a)] = find(b)
-            comp = {}
-            for v in range(n_nodes):
-                comp.setdefault(find(v), []).append(v)
-            out = {}
-            for members in comp.values():
-                m = min(members)
-                for v in members:
-                    out[v] = m
-            return out
-
         rng = random.Random(20260813)
         graphs = [
             [(i, (i + 1) % 12) for i in range(12)],          # ring, diam 6
@@ -455,9 +454,48 @@ class TestPipelineOps:
                 r["doc_id"]: r["label"]
                 for r in min_label_components(df).collect()
             }
-            nodes = {v for e in edges for v in e}
-            want = expected(max(nodes) + 1, edges)
-            assert got == {v: want[v] for v in nodes}, f"edges={edges}"
+            assert got == _union_find_labels(edges), f"edges={edges}"
+
+    def test_cluster_survives_an_observation_that_never_fires(
+        self, spark, sf_dir, monkeypatch
+    ):
+        """The per-round fixpoint probe rides the checkpoint job as an
+        Observation. If its metric never arrives, the loop must fall
+        back to an explicit sum after a bounded wait and still return
+        the union-find labels, not block forever in ``obs.get``."""
+        import threading
+
+        import pyspark.sql
+        from pyspark.sql import Observation
+
+        from streamingdemo_spark.extensions import dedup
+
+        class NeverFires(Observation):
+            # a real JVM Observation that is never attached to a plan
+            def _on(self, df, *exprs):
+                self._jvm = df._sc._jvm
+                self._jo = self._jvm.org.apache.spark.sql.Observation()
+                return df
+
+        monkeypatch.setattr(pyspark.sql, "Observation", NeverFires)
+        monkeypatch.setattr(dedup, "_OBSERVATION_WAIT_S", 0.2, raising=False)
+        edges = [(i, i + 1) for i in range(9)] + [(20, 21), (21, 22)]
+        df = spark.createDataFrame(
+            edges + [(b, a) for a, b in edges], "doc_a long, doc_b long"
+        )
+        got: dict = {}
+
+        def run():
+            got.update(
+                (r["doc_id"], r["label"])
+                for r in dedup.min_label_components(df).collect()
+            )
+
+        worker = threading.Thread(target=run, daemon=True)
+        worker.start()
+        worker.join(timeout=180)  # watchdog: the loop must not hang
+        assert not worker.is_alive(), "blocked on an Observation"
+        assert got == _union_find_labels(edges)
 
     def test_cluster_string_ids_use_join_probe_fallback(self, spark, sf_dir):
         """r13-opt: the fixpoint probe is an exact monotonic label-sum

@@ -11,6 +11,7 @@ def test_session_defaults(spark):
     assert conf.get("spark.sql.session.timeZone") == "UTC"
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     assert conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert conf.get("spark.ui.enabled") == "false"
 
 
 def test_session_is_reused(spark):
@@ -32,6 +33,39 @@ def test_child_allocator_env_defaults():
     for k, v in _CHILD_MALLOC_ENV.items():
         assert os.environ.get(k), f"{k} not exported"
         assert int(v) > 0  # defaults are sane positive byte counts
+
+
+def test_stage_stats_reads_the_status_store(spark):
+    """``bench.stage_stats`` reads a job group's completed stages from
+    Spark's in-process status store on the UI-off session, and its
+    seen-stage guard keeps a second read from counting them again."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    import bench
+
+    sc = spark.sparkContext
+    group = f"stage-stats-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        # map stage + reduce stage: a two-stage shuffle job
+        spark.range(0, 20_000, 1, 4).groupBy(
+            (F.col("id") % 7).alias("k")
+        ).count().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    seen: set = set()
+    stats = bench.stage_stats(spark, group, seen)
+    assert set(stats) == {
+        "shuffle_read_bytes", "shuffle_write_bytes", "memory_spilled_bytes",
+        "disk_spilled_bytes", "input_bytes", "n_stages", "n_tasks",
+    }
+    assert stats["n_stages"] >= 2
+    assert stats["n_tasks"] > 0
+    assert stats["shuffle_write_bytes"] > 0
+    assert bench.stage_stats(spark, group, seen) is None
 
 
 def test_parquet_rows_matches_count(spark, sf_dir):
@@ -105,7 +139,6 @@ ALLOWED_ENV = {
     "SPARK_GRAFT_SF_DIR",
     "SPARK_DRIVER_MEMORY",
     "SPARK_DRIVER_MAX_RESULT_SIZE",
-    "SPARK_UI_ENABLED",
     "STREAMINGDEMO_STREAM_CACHE",
     "STREAMINGDEMO_CKPT_ROOT",
     "STREAMINGDEMO_STREAM_TIMEOUT",

@@ -12,7 +12,12 @@ round-1 driver run stopped after 50 keys, almost certainly a time budget.
 
 Usage:
     python tools/driver_sim.py [sf_dir] [--keys k1,k2] [--out FILE]
-                               [--fast-hash] [--timeout SECS]
+                               [--fast-hash] [--timeout SECS] [--stats]
+
+``--stats`` adds each key's completed-stage totals (shuffle bytes,
+spill, input bytes, stage and task counts) to its record, read with
+``bench.stage_stats`` from the key's job group; ``tools/stats_gate.py``
+gates them.
 
 ``--timeout`` arms a per-key watchdog: when a key exceeds the budget,
 the in-flight phase is cancelled (Spark: job-group cancel; DuckDB:
@@ -48,10 +53,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb
 import pandas as pd
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from streamingdemo_spark.io import TABLES
 
 
 def _canon(pdf: pd.DataFrame):
@@ -121,13 +123,13 @@ def main() -> int:
             i += 2
         elif a == "--stats":
             stats = True
-            os.environ["SPARK_UI_ENABLED"] = "true"
             i += 1
         else:
             sf_dir = a
             i += 1
 
     import __spark_entry__ as entry
+    import bench
     from streamingdemo_spark.session import get_spark
 
     spark = get_spark()
@@ -258,7 +260,7 @@ def main() -> int:
                 done.set()
         rec["sec"] = round(time.perf_counter() - t0, 3)
         if stats:
-            st = _collect_stats(spark, key, stats_seen_stages)
+            st = bench.stage_stats(spark, key, stats_seen_stages)
             if st is not None:
                 rec["stats"] = st
         results[key] = rec
@@ -293,67 +295,6 @@ def main() -> int:
     if out_path:
         _flush_atomic(out_path, results)
     return 1 if n_fail else 0
-
-
-def _collect_stats(spark, key: str, seen_stages: set) -> dict | None:
-    """Planned-vs-actual execution audit for one key (--stats mode):
-    aggregate completed-stage metrics — shuffle read/write bytes,
-    spill, input volume, task count — over the jobs tagged with this
-    key's job group, read from the UI REST API immediately after the
-    key finishes (before stage eviction can matter). Streaming keys'
-    micro-batch jobs run under the stream's own group, so their rows
-    cover only the driver-side batch work — the state-store gate for
-    those lives in LAST_STREAM_PROGRESS assertions instead."""
-    import urllib.request
-
-    base = getattr(spark.sparkContext, "uiWebUrl", None)
-    if not base:
-        return None
-
-    def get(path: str):
-        with urllib.request.urlopen(
-            f"{base}/api/v1/{path}", timeout=10
-        ) as r:
-            return json.loads(r.read())
-
-    try:
-        app_id = get("applications")[0]["id"]
-        jobs = get(f"applications/{app_id}/jobs")
-        stage_ids = {
-            sid
-            for j in jobs
-            if j.get("jobGroup") == key
-            for sid in j.get("stageIds", [])
-        }
-        # a job can reference a stage that EXECUTED under an earlier
-        # key's group and was skipped here (cached/reused exchange) —
-        # Spark keeps the original stage id, so without this exclusion
-        # the same bytes would be attributed to every reusing key
-        stage_ids -= seen_stages
-        if not stage_ids:
-            return None
-        agg = {
-            "shuffle_read_bytes": 0,
-            "shuffle_write_bytes": 0,
-            "memory_spilled_bytes": 0,
-            "disk_spilled_bytes": 0,
-            "input_bytes": 0,
-            "n_stages": 0,
-            "n_tasks": 0,
-        }
-        for s in get(f"applications/{app_id}/stages?status=complete"):
-            if s.get("stageId") in stage_ids:
-                seen_stages.add(s["stageId"])
-                agg["shuffle_read_bytes"] += s.get("shuffleReadBytes", 0)
-                agg["shuffle_write_bytes"] += s.get("shuffleWriteBytes", 0)
-                agg["memory_spilled_bytes"] += s.get("memoryBytesSpilled", 0)
-                agg["disk_spilled_bytes"] += s.get("diskBytesSpilled", 0)
-                agg["input_bytes"] += s.get("inputBytes", 0)
-                agg["n_stages"] += 1
-                agg["n_tasks"] += s.get("numCompleteTasks", 0)
-        return agg
-    except Exception:
-        return None  # audit is additive — never fails a sweep row
 
 
 def _flush_atomic(out_path: str, results: dict) -> None:

@@ -1,20 +1,24 @@
 """Optimization-round measurement harness (guide §1).
 
-For each requested key: build the DataFrame, capture
-``.explain("formatted")`` to ``plans/$OPT_PLANS_DIR/<key>_<label>.txt``
-(``OPT_PLANS_DIR`` defaults to the current round's dir), and time
-N reps of a noop-sink drain (guide §1.4 — computes every column of
-every row without sink cost). Streaming keys (whose builder executes
-the replay and returns a memory table) are timed end-to-end around the
-builder instead, and their captured runtime plan
-(``runner.LAST_STREAM_PLAN``) is written as the artifact. A key that
-runs two replays (``stream_incremental_agg``, ``stream_sample_bottomk``)
+A thin CLI over ``bench.py``'s measurement path: the session is warmed
+with ``bench.warm_up``, and each requested key is timed with
+``bench.timed_reps`` (cache cleared per rep, timed from the builder
+call to the fully drained output), so its walls are comparable with
+the bench's. Each key runs under its own job group, and its record
+carries ``bench.stage_stats`` for that group, summed over the reps.
+
+Unless ``--no-plan``, the key's ``.explain("formatted")`` is written to
+``<plans-dir>/<key>_<label>.txt``. For a streaming key (whose builder
+executes the replay and returns a memory table) the captured runtime
+plan (``runner.LAST_STREAM_PLAN``) is written first; a key that runs
+two replays (``stream_incremental_agg``, ``stream_sample_bottomk``)
 records the plan of its last one.
 
 Usage:
     python tools/opt_measure.py --keys k1,k2 [--label before]
                                 [--sf /root/testdata/sf0.1] [--reps 2]
-                                [--no-plan]
+                                [--conf k=v ...] [--no-plan]
+                                [--plans-dir plans/r14]
 
 Timings go to stdout as one JSON line per key.
 """
@@ -25,16 +29,10 @@ import argparse
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-PLANS_DIR = (
-    Path(__file__).resolve().parent.parent
-    / "plans"
-    / os.environ.get("OPT_PLANS_DIR", "r14")
-)
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def _capture_plan(df) -> str:
@@ -60,66 +58,50 @@ def main() -> None:
         default=[],
         help="extra spark conf k=v (repeatable) for config A/B runs",
     )
+    ap.add_argument(
+        "--plans-dir",
+        type=Path,
+        default=ROOT / "plans" / "r14",
+        help="where the plan captures go",
+    )
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    import bench
     from streamingdemo_spark.session import get_spark
     from streamingdemo_spark.streaming import runner
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark(app_name="opt-measure", extra_conf=extra or None)
     queries = entry_mod.queries()
-    # warm the session like bench.py does
-    queries["src_parquet_scan"](spark, args.sf).collect()
-    queries["join_broadcast"](spark, args.sf).collect()
+    bench.warm_up(spark, queries, args.sf)
 
-    PLANS_DIR.mkdir(parents=True, exist_ok=True)
-    for key in args.keys.split(","):
-        key = key.strip()
-        if not key:
-            continue
-        walls = []
-        plan_txt = ""
-        for rep in range(args.reps):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"{key} [{args.label}]")
-            runner.LAST_STREAM_PLAN = ""
-            t0 = time.perf_counter()
-            df = queries[key](spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            walls.append(time.perf_counter() - t0)
-            if rep == 0 and not args.no_plan:
-                if runner.LAST_STREAM_PLAN:
-                    # streaming key: runtime plan captured by the runner
-                    plan_txt = (
-                        "== Streaming runtime plan via "
-                        "StreamingQuery.explain() ==\n"
-                        + runner.LAST_STREAM_PLAN
-                        + "\n\n== Post-replay batch plan ==\n"
-                        + _capture_plan(df)
-                    )
-                else:
-                    plan_txt = _capture_plan(df)
-        spark.sparkContext.setJobDescription(None)
-        walls.sort()
+    args.plans_dir.mkdir(parents=True, exist_ok=True)
+    seen: set = set()
+    for key in filter(None, (k.strip() for k in args.keys.split(","))):
+        spark.sparkContext.setJobGroup(key, f"{key} [{args.label}]")
+        runner.LAST_STREAM_PLAN = ""
+        walls, _, df = bench.timed_reps(spark, queries[key], args.sf, args.reps)
         rec = {
             "key": key,
             "label": args.label,
             "wall_min": round(walls[0], 3),
             "walls": [round(w, 3) for w in walls],
+            "stage_stats": bench.stage_stats(spark, key, seen),
         }
-        if plan_txt:
-            out = PLANS_DIR / f"{key}_{args.label}.txt"
+        if not args.no_plan:
+            plan_txt = _capture_plan(df)
+            if runner.LAST_STREAM_PLAN:
+                plan_txt = (
+                    "== Streaming runtime plan via "
+                    "StreamingQuery.explain() ==\n"
+                    + runner.LAST_STREAM_PLAN
+                    + "\n\n== Post-replay batch plan ==\n"
+                    + plan_txt
+                )
+            out = args.plans_dir / f"{key}_{args.label}.txt"
             out.write_text(plan_txt)
-            rec["plan"] = str(out.relative_to(PLANS_DIR.parent.parent))
-            rec["n_exchange"] = plan_txt.count("Exchange")
-            rec["n_python"] = (
-                plan_txt.count("BatchEvalPython")
-                + plan_txt.count("ArrowEvalPython")
-                + plan_txt.count("MapInArrow")
-                + plan_txt.count("FlatMapGroupsInPandas")
-                + plan_txt.count("MapInPandas")
-            )
+            rec["plan"] = os.path.relpath(out, ROOT)
         print(json.dumps(rec), flush=True)
 
 
