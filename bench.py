@@ -21,8 +21,9 @@ similarity, streaming replay).
 
 This module is also the tools' one measurement path:
 ``tools/opt_measure.py`` times keys with ``warm_up``, ``timed_reps``
-and ``_drain``, and it and ``tools/driver_sim.py --stats`` read per-key
-stage metrics with ``stage_stats``.
+and ``_drain``, ``tools/scale_probe.py`` with ``warm_up`` and
+``key_wall``, and opt_measure and ``tools/driver_sim.py --stats`` read
+per-key stage metrics with ``stage_stats``.
 """
 
 from __future__ import annotations
@@ -96,6 +97,22 @@ def timed_reps(spark, build, sf_dir: str, reps: int):
         n = _drain(df)
         walls.append(time.perf_counter() - t0)
     return sorted(walls), n, df
+
+
+def key_wall(spark, build, sf_dir: str, anchor: bool) -> tuple[float, int]:
+    """One key's wall and row count under the bench rule, shared with
+    ``tools/scale_probe.py``. Best-of-2: micro-batch scheduling and
+    first-touch codegen add seconds of run-to-run noise at this scale,
+    and the minimum is the reproducible engine cost. ``anchor`` keys
+    get a third rep and use the MEDIAN instead: their walls are
+    sub-second, where scheduler jitter is a large fraction of the wall
+    and a min-of-2 can masquerade noise as cross-round drift (r11's
+    1.24-1.31 uniform anchor inflation was box speed, but the artifact
+    couldn't show it; switched in r12, so anchor ratios vs the r11
+    min-of-2 walls may read a few percent high — that is the named
+    cause)."""
+    walls, n, _ = timed_reps(spark, build, sf_dir, 3 if anchor else 2)
+    return (walls[1] if anchor else walls[0]), n
 
 
 # stage_stats field -> Spark's StageData getter, summed per stage
@@ -248,21 +265,8 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for key in HEADLINE:
-        # best-of-2: micro-batch scheduling and first-touch codegen add
-        # seconds of run-to-run noise at this scale; the minimum is the
-        # reproducible engine cost. ANCHOR keys get a third rep and use
-        # the MEDIAN instead: their walls are sub-second, where
-        # scheduler jitter is a large fraction of the wall and a
-        # min-of-2 can masquerade noise as cross-round drift (r11's
-        # 1.24-1.31 uniform anchor inflation was box speed, but the
-        # artifact couldn't show it; switched in r12, so anchor ratios
-        # vs the r11 min-of-2 walls may read a few percent high — that
-        # is the named cause).
-        reps = 3 if key in ANCHOR_KEYS else 2
-        walls, n, _ = timed_reps(spark, queries[key], sf_dir, reps)
-        timings[key] = round(
-            walls[len(walls) // 2] if key in ANCHOR_KEYS else walls[0], 3
-        )
+        wall, n = key_wall(spark, queries[key], sf_dir, key in ANCHOR_KEYS)
+        timings[key] = round(wall, 3)
         print(f"# {key}: {timings[key]}s ({n} rows)", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)

@@ -186,8 +186,8 @@ def parquet_sink(
     spark: SparkSession, params: dict, inputs: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
     """Terminal batch sink (KafkaOutput's role, ``KafkaOutput.java:
-    9-22`` — consumes its input, returns no ports). Also returns the
-    written data re-read, so downstream verification can chain."""
+    9-22``): writes its input to ``params["path"]`` and returns no
+    ports. A verifier reads the written parquet back itself."""
     (df,) = inputs.values()
     df.write.mode(params.get("mode", "overwrite")).parquet(params["path"])
     return {}

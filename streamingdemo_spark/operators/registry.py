@@ -4,9 +4,10 @@ The reference resolves operator ``mainClass`` strings from XML
 (``OpContainer.java:181-195``) or a MySQL table
 (``OpContainerTest.java:124-145``) and invokes them reflectively
 (``OpContainer.java:109-130``). Here: an in-process dict of callables,
-with dotted-path ``importlib`` resolution as the plugin escape hatch
-(the JDBC registry variant is intentionally not replicated — its
-string-concatenated SQL is an injection footgun, SURVEY appendix).
+with dotted-path ``importlib`` resolution as the plugin escape hatch.
+The table-backed variant lives in ``operators/db_registry.py``: it
+reads the rows through Spark's JDBC source with parameterized reader
+options instead of the reference's string-concatenated SQL.
 
 Operator contract (the engine's ``StreamingOperator.java:5-8``, but
 with the *reflective call site's* true signature,

@@ -1,8 +1,8 @@
 """ANN scale probe: recall + wall for LSH and IVF vs exact cosine at
 10x and 100x the sf0.1 embeddings corpus (SCALE.md methodology).
 
-Builds jittered replicas of /root/testdata/sf0.1/embeddings.parquet
-(copy k gets deterministic noise ~N(0, 0.02) from a fixed seed and
+Reads scale_probe's embeddings-only fixture (copy k of the sf0.1
+embeddings gets deterministic noise ~N(0, 0.02) from a fixed seed and
 vec_ids offset by k * base_n, so replicas are near- but not exact
 duplicates and neighborhoods stay nontrivial), then runs the three
 retrieval paths per scale and reports wall seconds + recall@5 vs the
@@ -14,47 +14,13 @@ Usage: python tools/ann_scale_probe.py [--scales 1,10,100]
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from pathlib import Path
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-BASE = "/root/testdata/sf0.1/embeddings.parquet"
-OUT_ROOT = "/tmp/ann_scale"
-
-
-def build_scale(factor: int) -> str:
-    out_dir = os.path.join(OUT_ROOT, f"x{factor}")
-    out = os.path.join(out_dir, "embeddings.parquet")
-    if os.path.exists(out):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    t = pq.read_table(BASE)
-    base_n = t.num_rows
-    emb = np.array([np.asarray(e, dtype=np.float32) for e in t["embedding"].to_pylist()])
-    vec_id = t["vec_id"].to_numpy()
-    label = t["label"].to_numpy()
-    rng = np.random.default_rng(42)
-    parts = []
-    for k in range(factor):
-        e = emb if k == 0 else emb + rng.normal(0, 0.02, emb.shape).astype(np.float32)
-        parts.append(
-            pa.table(
-                {
-                    "vec_id": pa.array(vec_id + k * base_n, pa.int64()),
-                    "embedding": pa.array(list(e), pa.list_(pa.float32())),
-                    "label": pa.array(label, pa.int32()),
-                }
-            )
-        )
-    pq.write_table(pa.concat_tables(parts), out)
-    return out_dir
+from tools.scale_probe import embeddings_fixture  # noqa: E402
 
 
 def main() -> None:
@@ -72,7 +38,7 @@ def main() -> None:
     spark = get_spark()
     results = {}
     for factor in scales:
-        sf_dir = build_scale(factor)
+        sf_dir = embeddings_fixture(factor)
         row = {}
         exact_pairs = None
         for name, fn in [

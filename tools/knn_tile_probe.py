@@ -1,6 +1,6 @@
 """Tile-grid kNN scale probe (SCALE.md methodology): at 50k vectors
 (x25 jittered replicas of the sf0.1 embeddings corpus, built by
-ann_scale_probe.build_scale), run the exact kNN self-join with a
+scale_probe.embeddings_fixture), run the exact kNN self-join with a
 single build-side tile vs a 10k-row tile grid and report wall seconds,
 per-tile broadcast size, and result equality.
 
@@ -30,7 +30,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.ann_scale_probe import build_scale  # noqa: E402
+from tools.scale_probe import embeddings_fixture  # noqa: E402
 
 
 def _child(factor: int, tile_rows: int) -> None:
@@ -41,7 +41,7 @@ def _child(factor: int, tile_rows: int) -> None:
     from streamingdemo_spark.session import get_spark
 
     spark = get_spark()
-    sf_dir = build_scale(factor)
+    sf_dir = embeddings_fixture(factor)
     t0 = time.perf_counter()
     rows = ext_sim_knn_join(spark, sf_dir, tile_rows=tile_rows).count()
     wall = time.perf_counter() - t0
@@ -55,7 +55,7 @@ def _child(factor: int, tile_rows: int) -> None:
 def _rss_main(tile_rows: int) -> None:
     runs = []
     for factor in (5, 25):
-        build_scale(factor)  # pre-build so the child only runs the join
+        embeddings_fixture(factor)  # pre-build so the child only runs the join
         proc = subprocess.run(
             [sys.executable, __file__, "--child", str(factor),
              "--tile-rows", str(tile_rows)],
@@ -98,7 +98,7 @@ def main() -> None:
     from streamingdemo_spark.session import get_spark
 
     spark = get_spark()
-    sf_dir = build_scale(factor)
+    sf_dir = embeddings_fixture(factor)
     n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     dims = 64
     out = {}

@@ -3,8 +3,12 @@ bench corpus (default 10×), with the bench anchor convention so box
 drift stays separable from engine behavior.
 
 Consolidates the per-round probes (r4/r4b/r6/r7/sweep/sweep-sf1/sf10
-variants — all in git history; SCALE.md maps their artifacts). Their
-corpus derivations are preserved verbatim and composed into ONE build:
+variants — all in git history; SCALE.md maps their artifacts). This
+module owns every corpus derivation: its own build below, the
+differential sweeps' (tools/sf1_differential.py and
+tools/sf10_differential.py call ``build_tpch``, ``replicate`` and
+``cipher_documents``) and the embeddings-only fixture of the ANN,
+kNN-tile and x400 probes (``embeddings_fixture``). The build composes:
 
 - documents N×: replica r offsets doc_ids and remaps the 10 most
   common letters through a rotation-by-r substitution cipher — each
@@ -26,6 +30,9 @@ corpus derivations are preserved verbatim and composed into ONE build:
   interval structure identical while pushing replicas into disjoint
   date ranges (interval-join output grows N×, not N²×).
 - region/nation: copied (25 nations at any TPC-H sf).
+
+Walls follow bench.py's protocol: the session is warmed with
+``bench.warm_up`` and every key is timed with ``bench.key_wall``.
 
 A key is scale-clean when its wall grows no faster than its dominant
 input (ratio ≤ N for an N× probe, modulo anchor drift); sublinear
@@ -60,7 +67,7 @@ import streamingdemo_spark.streaming.queries  # noqa: E402,F401
 from streamingdemo_spark.registry import QUERIES  # noqa: E402
 from streamingdemo_spark.session import get_spark  # noqa: E402
 
-from bench import ANCHOR_KEYS, _anchor_ratios, _drain  # noqa: E402
+from bench import ANCHOR_KEYS, _anchor_ratios, key_wall, warm_up  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 KEY_OFFSET = 10_000_000  # % 32 == % 16 == 0: preserves sampling filters
@@ -85,10 +92,38 @@ def dst_dir(replicas: int) -> str:
     return f"/tmp/scale_x{replicas}"
 
 
+def replicate(
+    src: str,
+    dst: str,
+    table: str,
+    replicas: int,
+    offsets: dict[str, int],
+    date_shift_us: int = 0,
+) -> None:
+    """``replicas`` key-offset copies of ``<table>.parquet``, written as
+    one file: copy r adds r·step to each ``offsets`` column and
+    r·date_shift_us to the table's DATE_COLS. Every column keeps its
+    parquet type."""
+    base = pq.read_table(os.path.join(src, f"{table}.parquet"))
+    dates = dict.fromkeys(DATE_COLS.get(table, ()), date_shift_us)
+    steps = {**offsets, **dates}
+    raw = {c: base[c].cast(pa.int64()).to_numpy() for c in steps}
+    parts = []
+    for r in range(replicas):
+        cols = {n: base[n] for n in base.column_names}
+        for col, step in steps.items():
+            cols[col] = pa.array(raw[col] + r * step).cast(
+                base.schema.field(col).type
+            )
+        parts.append(pa.table(cols))
+    pq.write_table(
+        pa.concat_tables(parts), os.path.join(dst, f"{table}.parquet")
+    )
+
+
 def replicate_embeddings(src: str, dst: str, replicas: int) -> None:
     """embeddings N×: jittered near-duplicate replicas (see module
-    docstring). Shared with tools/sf1_differential.py so the perf
-    probe and the differential sweep measure the same corpus."""
+    docstring)."""
     e = pq.read_table(os.path.join(src, "embeddings.parquet"))
     base_n = e.num_rows
     emb = np.array(
@@ -118,42 +153,42 @@ def replicate_embeddings(src: str, dst: str, replicas: int) -> None:
     )
 
 
-def replicate_events(src: str, dst: str, replicas: int, offset: int) -> None:
-    """events N×: fresh user populations (see module docstring)."""
-    ev = pq.read_table(os.path.join(src, "events.parquet"))
-    vparts = []
-    for k in range(replicas):
-        cols = {n: ev[n] for n in ev.column_names}
-        cols["user_id"] = pa.array(
-            ev["user_id"].to_numpy() + k * offset, pa.int64()
-        )
-        cols["event_id"] = pa.array(
-            ev["event_id"].to_numpy() + k * offset, pa.int64()
-        )
-        vparts.append(pa.table(cols))
-    pq.write_table(pa.concat_tables(vparts), os.path.join(dst, "events.parquet"))
+def embeddings_fixture(replicas: int, src: str = SRC) -> str:
+    """The embeddings-only corpus ``/tmp/emb_x{replicas}`` that the ANN,
+    kNN-tile and x400 probes read: ``replicate_embeddings`` of ``src``,
+    built once and reused while its ``.complete`` marker exists."""
+    dst = f"/tmp/emb_x{replicas}"
+    marker = os.path.join(dst, ".complete")
+    if not os.path.isfile(marker):
+        os.makedirs(dst, exist_ok=True)
+        replicate_embeddings(src, dst, replicas)
+        open(marker, "w").close()
+    return dst
 
 
-def cipher_documents(src: str, dst: str, replicas: int, offset: int) -> None:
-    """documents N×: rotation-cipher replicas (see module docstring).
-    Offsets clear MUTANT_OFFSET (1e6) so minhash mutant-planting stays
-    per-replica."""
-    if replicas > len(COMMON):
-        # rotation r == len(COMMON) is the identity map: replicas 10+
-        # would be byte-identical twins of replicas 0-9, cross-replica
-        # shingle matches would explode, and the probe would report a
-        # spurious superlinear "regression". Fail loudly instead.
+def cipher_documents(
+    src: str, dst: str, replicas: int, offset: int, alphabet: str = COMMON
+) -> None:
+    """documents N×: rotation-cipher replicas over ``alphabet`` (see
+    module docstring). Offsets clear MUTANT_OFFSET (1e6) so minhash
+    mutant-planting stays per-replica."""
+    if replicas > len(alphabet):
+        # rotation r == len(alphabet) is the identity map: later
+        # replicas would be byte-identical twins of the first ones,
+        # cross-replica shingle matches would explode, and the probe
+        # would report a spurious superlinear "regression". Fail
+        # loudly instead.
         raise ValueError(
-            f"cipher derivation supports at most {len(COMMON)} replicas "
-            f"(rotation wraps to identity at r={len(COMMON)}); "
+            f"cipher derivation supports at most {len(alphabet)} replicas "
+            f"(rotation wraps to identity at r={len(alphabet)}); "
             f"asked for {replicas}"
         )
     t = pq.read_table(os.path.join(src, "documents.parquet"))
     texts = t["text"].to_pylist()
     parts = []
     for r in range(replicas):
-        rot = COMMON[r:] + COMMON[:r]
-        table = str.maketrans(COMMON, rot)
+        rot = alphabet[r:] + alphabet[:r]
+        table = str.maketrans(alphabet, rot)
         parts.append(
             pa.table(
                 {
@@ -181,36 +216,30 @@ def build_text_corpus(src: str, dst: str, replicas: int) -> None:
     os.makedirs(dst, exist_ok=True)
     cipher_documents(src, dst, replicas, KEY_OFFSET)
     replicate_embeddings(src, dst, replicas)
-    replicate_events(src, dst, replicas, KEY_OFFSET)
+    replicate(
+        src, dst, "events", replicas,
+        {"user_id": KEY_OFFSET, "event_id": KEY_OFFSET},
+    )
 
 
-def build_tpch(src: str, dst: str, replicas: int) -> None:
-    """The TPC-H third: key-offset replicas with per-replica date
-    shift, dims offset in step (closed key universe per replica)."""
+def build_tpch(
+    src: str,
+    dst: str,
+    replicas: int,
+    offsets: dict[str, dict[str, int]] = TPCH_OFFSETS,
+    date_shift_us: int = DAY_SHIFT_US,
+) -> None:
+    """region/nation copied, plus key-offset replicas of every table in
+    ``offsets``. By default the TPC-H third: dims offset in step, so
+    each replica's key universe is closed, and a per-replica date
+    shift."""
     os.makedirs(dst, exist_ok=True)
     for t in ("region", "nation"):
         shutil.copyfile(
             os.path.join(src, f"{t}.parquet"), os.path.join(dst, f"{t}.parquet")
         )
-    for t, offs in TPCH_OFFSETS.items():
-        base = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        date_raw = {
-            c: base[c].cast(pa.int64()).to_numpy() for c in DATE_COLS.get(t, [])
-        }
-        parts = []
-        for r in range(replicas):
-            cols = {n: base[n] for n in base.column_names}
-            for col, step in offs.items():
-                cols[col] = pa.array(
-                    base[col].to_numpy() + r * step,
-                    base.schema.field(col).type,
-                )
-            for col, raw in date_raw.items():
-                cols[col] = pa.array(raw + r * DAY_SHIFT_US).cast(
-                    pa.timestamp("us")
-                )
-            parts.append(pa.table(cols))
-        pq.write_table(pa.concat_tables(parts), os.path.join(dst, f"{t}.parquet"))
+    for t, offs in offsets.items():
+        replicate(src, dst, t, replicas, offs, date_shift_us)
 
 
 def build(src: str = SRC, dst: str | None = None, replicas: int = 10) -> str:
@@ -218,14 +247,6 @@ def build(src: str = SRC, dst: str | None = None, replicas: int = 10) -> str:
     build_tpch(src, dst, replicas)
     build_text_corpus(src, dst, replicas)
     return dst
-
-
-def warm_wall(spark, key: str, d: str) -> tuple[float, int]:
-    """Second-run (warm) wall + row count for a registry key."""
-    QUERIES[key](spark, d).count()
-    t0 = time.perf_counter()
-    n = QUERIES[key](spark, d).count()
-    return time.perf_counter() - t0, n
 
 
 def main() -> None:
@@ -247,21 +268,13 @@ def main() -> None:
         print(f"built {dst} in {time.perf_counter() - t0:.1f}s")
 
     spark = get_spark(app_name="scale-probe")
-    QUERIES["src_parquet_scan"](spark, SRC).collect()  # warm the JVM
-    # Anchor walls use bench.py's EXACT protocol (clearCache +
-    # full-column _drain, best-of-2) — the recorded BENCH_r*.json
-    # walls they are divided against came from that protocol, and a
-    # warm .count() would conflate protocol with box speed (the
-    # retired per-round probes had that flaw).
-    anchor_walls = {}
-    for key in ANCHOR_KEYS:
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _drain(QUERIES[key](spark, SRC))
-            best = min(best, time.perf_counter() - t0)
-        anchor_walls[key] = round(best, 3)
+    warm_up(spark, QUERIES, SRC)
+    # anchors are timed exactly as bench.py times them, so dividing by
+    # the recorded BENCH_r*.json walls separates box speed from engine
+    anchor_walls = {
+        key: round(key_wall(spark, QUERIES[key], SRC, True)[0], 3)
+        for key in ANCHOR_KEYS
+    }
     anchors = _anchor_ratios(anchor_walls, 0.1)
 
     out: dict = {
@@ -276,8 +289,9 @@ def main() -> None:
     print(f"| key | sf0.1 | {n}x corpus | ratio | rows sf0.1 -> {n}x |")
     print("|---|---|---|---|---|")
     for key in keys:
-        w01, r01 = warm_wall(spark, key, SRC)
-        w10, r10 = warm_wall(spark, key, dst)
+        anchor = key in ANCHOR_KEYS
+        w01, r01 = key_wall(spark, QUERIES[key], SRC, anchor)
+        w10, r10 = key_wall(spark, QUERIES[key], dst, anchor)
         out["keys"][key] = {
             "sf0.1_s": round(w01, 2),
             f"x{n}_s": round(w10, 2),

@@ -59,10 +59,8 @@ sys.path.insert(0, str(REPO))
 
 import duckdb
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from streamingdemo_spark.io import TABLES  # noqa: E402
+
 WORK = "/tmp/sf10_cert"
 
 

@@ -35,15 +35,13 @@ Usage:
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 from pathlib import Path
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools import scale_probe  # noqa: E402
 
 SRC = "/tmp/sim_sf1"
 DST = "/tmp/sim_sf10"
@@ -86,6 +84,11 @@ KEYS = [
 ]
 
 
+# Disjoint from scale_probe.COMMON ("etaoinsrhl"): layer-2 rotations
+# must not compose with layer-1 rotations into the identity map.
+COMMON2 = "dcumfpgwyb"
+
+
 def build() -> None:
     from tools.sf1_differential import build as build_sf1
 
@@ -94,68 +97,9 @@ def build() -> None:
         for t in ("lineitem", "events")
     ):
         build_sf1()
-    os.makedirs(DST, exist_ok=True)
-    for t in ("region", "nation"):
-        shutil.copyfile(
-            os.path.join(SRC, f"{t}.parquet"), os.path.join(DST, f"{t}.parquet")
-        )
-    for t, offs in OFFSETS.items():
-        base = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        parts = []
-        for r in range(REPLICAS):
-            cols = {n: base[n] for n in base.column_names}
-            for col, step in offs.items():
-                cols[col] = pa.array(
-                    base[col].to_numpy() + r * step, base.schema.field(col).type
-                )
-            parts.append(pa.table(cols))
-        pq.write_table(
-            pa.concat_tables(parts), os.path.join(DST, f"{t}.parquet")
-        )
-    _cipher2_documents(SRC, DST, REPLICAS, 100_000_000)
-    from tools.scale_probe import replicate_embeddings
-
-    replicate_embeddings(SRC, DST, REPLICAS)
-
-
-# Disjoint from scale_probe.COMMON ("etaoinsrhl"): layer-2 rotations
-# must not compose with layer-1 rotations into the identity map.
-COMMON2 = "dcumfpgwyb"
-
-
-def _cipher2_documents(
-    src: str, dst: str, replicas: int, offset: int
-) -> None:
-    """Second-layer rotation cipher over COMMON2 — 1:1 on characters
-    (n_chars preserved), distinct for every (layer1, layer2) replica
-    pair, per-replica duplicate structure preserved."""
-    t = pq.read_table(os.path.join(src, "documents.parquet"))
-    texts = t["text"].to_pylist()
-    parts = []
-    for r in range(replicas):
-        rot = COMMON2[r:] + COMMON2[:r]
-        table = str.maketrans(COMMON2, rot)
-        parts.append(
-            pa.table(
-                {
-                    "doc_id": pa.array(
-                        t["doc_id"].to_numpy() + r * offset, pa.int64()
-                    ),
-                    "text": pa.array(
-                        texts
-                        if r == 0
-                        else [s.translate(table) for s in texts],
-                        pa.string(),
-                    ),
-                    "lang": t["lang"],
-                    "source": t["source"],
-                    "n_chars": t["n_chars"],  # translate is 1:1
-                }
-            )
-        )
-    pq.write_table(
-        pa.concat_tables(parts), os.path.join(dst, "documents.parquet")
-    )
+    scale_probe.build_tpch(SRC, DST, REPLICAS, OFFSETS, date_shift_us=0)
+    scale_probe.cipher_documents(SRC, DST, REPLICAS, 100_000_000, COMMON2)
+    scale_probe.replicate_embeddings(SRC, DST, REPLICAS)
 
 
 if __name__ == "__main__":

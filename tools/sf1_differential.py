@@ -26,13 +26,8 @@ Usage:
 
 from __future__ import annotations
 
-import os
-import shutil
 import sys
 from pathlib import Path
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -56,26 +51,7 @@ OFFSETS = {
 
 
 def build() -> None:
-    os.makedirs(DST, exist_ok=True)
-    for t in ("region", "nation"):
-        shutil.copyfile(
-            os.path.join(SRC, f"{t}.parquet"), os.path.join(DST, f"{t}.parquet")
-        )
-    for t, offs in OFFSETS.items():
-        base = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        parts = []
-        for r in range(REPLICAS):
-            cols = {n: base[n] for n in base.column_names}
-            for col, step in offs.items():
-                cols[col] = pa.array(
-                    base[col].to_numpy() + r * step, base.schema.field(col).type
-                )
-            parts.append(pa.table(cols))
-        pq.write_table(pa.concat_tables(parts), os.path.join(DST, f"{t}.parquet"))
-    # documents (cipher replicas) + embeddings + events: the shared
-    # derivations from tools/scale_probe.py, written DIRECTLY into
-    # this DST (the r7-era symlinks into the per-round probe dir, and
-    # their dangling-link re-run wedge, are gone with that probe).
+    scale_probe.build_tpch(SRC, DST, REPLICAS, OFFSETS, date_shift_us=0)
     scale_probe.build_text_corpus(SRC, DST, REPLICAS)
 
 

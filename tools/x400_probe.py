@@ -10,10 +10,12 @@ ran as a one-off that round; this tool makes it survive builder
 turnover: every round close re-runs it, refreshes ``X400_PROBE.json``,
 and fails loudly (exit 1) if the floor is breached.
 
-Checks (same semantics as tools/sf10_certify.cert_dedup_embedding):
+Checks: tools/sf10_certify.cert_dedup_embedding, run on this fixture —
 - soundness: every emitted pair exactly re-verified against base
   vectors by DuckDB (cosine recomputed, >= 0.99) — must be 0 unsound;
-- planted recall: fraction of (v, v+1e6) mutant pairs recovered —
+- every emitted pair references a corpus id and is ordered
+  (vec_a < vec_b) — must be 0 dangling_or_misordered;
+- planted recall: fraction of (v, v+offset) mutant pairs recovered —
   floor 0.75 (hard gate), target 0.90 (reported; the r13 multi-probe
   exists to hold it at this density).
 
@@ -24,113 +26,46 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 from pathlib import Path
 
+import duckdb
+
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from tools import scale_probe  # noqa: E402
+from streamingdemo_spark.session import get_spark  # noqa: E402
+from tools import scale_probe, sf10_certify  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def build_fixture(replicas: int) -> str:
-    dst = f"/tmp/emb_x{replicas}"
-    marker = os.path.join(dst, ".complete")
-    if os.path.isfile(marker):
-        return dst
-    os.makedirs(dst, exist_ok=True)
-    scale_probe.replicate_embeddings(SRC, dst, replicas)
-    open(marker, "w").close()
-    return dst
-
-
 def main() -> int:
-    args = sys.argv[1:]
-    replicas, floor, out = 400, 0.75, "X400_PROBE.json"
-    it = iter(range(len(args)))
-    for i in it:
-        if args[i] == "--replicas":
-            replicas = int(args[i + 1]); next(it)
-        elif args[i] == "--floor":
-            floor = float(args[i + 1]); next(it)
-        elif args[i] == "--out":
-            out = args[i + 1]; next(it)
-        else:
-            raise SystemExit(f"unknown arg {args[i]}")
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--replicas", type=int, default=400)
+    ap.add_argument("--floor", type=float, default=0.75)
+    ap.add_argument("--out", default="X400_PROBE.json")
+    args = ap.parse_args()
+    replicas, floor = args.replicas, args.floor
 
-    fixture = build_fixture(replicas)
-    import duckdb
-    from pyspark.sql import SparkSession
-
-    import __spark_entry__ as entry
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .appName("x400_probe")
-        .getOrCreate()
+    fixture = scale_probe.embeddings_fixture(replicas, SRC)
+    spark = get_spark(
+        app_name="x400_probe", extra_conf={"spark.driver.memory": "48g"}
     )
-    t0 = time.time()
-    df = entry.queries()["ext_dedup_embedding"](spark, fixture)
-    out_dir = f"/tmp/x{replicas}_emb_out"
-    df.write.mode("overwrite").parquet(out_dir)
-    wall = time.time() - t0
-
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{fixture}/embeddings.parquet')"
     )
-    con.execute(
-        f"CREATE VIEW emb_out AS SELECT * FROM "
-        f"read_parquet('{out_dir}/*.parquet')"
-    )
-    n_rows = con.execute("SELECT COUNT(*) FROM emb_out").fetchone()[0]
-    # data-derived mutant offset, same ladder as the engine (the
-    # constant 1e6 aliased real ids at this probe's 3.2M-id x1600
-    # fixture — the bug this probe exists to catch)
-    from streamingdemo_spark.extensions.dedup import _emb_mutant_offset
-
-    mx = con.execute("SELECT MAX(vec_id) FROM embeddings").fetchone()[0]
-    off = _emb_mutant_offset(int(mx))
-    vecs_cte = f"""
-    ids AS (SELECT DISTINCT id FROM (SELECT vec_a AS id FROM emb_out
-                                     UNION ALL SELECT vec_b FROM emb_out)),
-    vecs AS (
-      SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS emb
-      FROM embeddings WHERE vec_id IN (SELECT id FROM ids)
-      UNION ALL
-      SELECT vec_id + {off},
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            (v, i) -> CASE WHEN i = 1 THEN v + 0.05
-                                           ELSE v END)
-      FROM embeddings
-      WHERE vec_id % 4 = 0 AND vec_id + {off} IN (SELECT id FROM ids)
-    )"""
-    unsound = con.execute(f"""
-    WITH {vecs_cte}
-    SELECT COUNT(*) FROM emb_out o
-    JOIN vecs a ON a.id = o.vec_a JOIN vecs b ON b.id = o.vec_b
-    WHERE ROUND(list_cosine_similarity(a.emb, b.emb), 4) <> o.cosine
-       OR o.cosine < 0.99
-    """).fetchone()[0]
-    n_planted = con.execute(
-        "SELECT COUNT(*) FROM embeddings WHERE vec_id % 4 = 0"
-    ).fetchone()[0]
-    n_found = con.execute(f"""
-    SELECT COUNT(*) FROM emb_out
-    WHERE vec_a % 4 = 0 AND vec_b = vec_a + {off}
-    """).fetchone()[0]
-    recall = n_found / max(n_planted, 1)
+    t0 = time.time()
+    cert = sf10_certify.cert_dedup_embedding(spark, con, fixture)
+    wall = time.time() - t0
+    checks = cert["checks"]
+    recall = checks["planted_recall"]
 
     result = {
         "fixture": (
@@ -144,11 +79,11 @@ def main() -> int:
             "step past the certified sf10 point, gated by exit code "
             "at every round close"
         ),
-        "planted_recall": round(recall, 4),
+        "planted_recall": recall,
         "recall_floor": floor,
         "floor_pass": recall >= floor,
-        "unsound_pairs": unsound,
-        "spark_rows": n_rows,
+        "unsound_pairs": checks["unsound_pairs"],
+        "spark_rows": cert["spark_rows"],
         "sec": round(wall, 1),
     }
     # Idempotent artifact: when every VALUE field matches the existing
@@ -157,7 +92,7 @@ def main() -> int:
     # clean (only `sec` varies run-to-run, and a stale-by-seconds wall
     # is not a finding).
     try:
-        prev = json.loads(Path(out).read_text())
+        prev = json.loads(Path(args.out).read_text())
     except (OSError, ValueError):
         prev = None
     value_fields = (
@@ -169,14 +104,15 @@ def main() -> int:
     ):
         result["sec"] = prev.get("sec", result["sec"])
     else:
-        with open(out, "w") as f:
+        with open(args.out, "w") as f:
             json.dump(result, f, indent=2)
             f.write("\n")
     print(json.dumps(result, indent=2))
     spark.stop()
-    if unsound != 0:
-        print(f"FAIL: {unsound} unsound pairs", file=sys.stderr)
-        return 1
+    for check in ("unsound_pairs", "dangling_or_misordered"):
+        if checks[check] != 0:
+            print(f"FAIL: {checks[check]} {check}", file=sys.stderr)
+            return 1
     if recall < floor:
         print(
             f"FAIL: planted recall {recall:.4f} < floor {floor}",
