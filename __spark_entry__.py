@@ -22,15 +22,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 import streamingdemo_spark.plans  # noqa: F401  (registers plan keys)
-
-try:  # streaming + extension keys land in later build steps
-    import streamingdemo_spark.streaming.queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    import streamingdemo_spark.extensions  # noqa: F401
-except ImportError:
-    pass
+import streamingdemo_spark.streaming.queries  # noqa: F401  (stream keys)
+import streamingdemo_spark.extensions  # noqa: F401  (extension keys)
 
 from streamingdemo_spark.registry import QUERIES, resolve_oracles
 

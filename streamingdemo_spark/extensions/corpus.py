@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from streamingdemo_spark.io import load_tables, parquet_rows, spread_scan
+from streamingdemo_spark.io import load_tables, plan_bytes, spread_scan, tasks_for
 from streamingdemo_spark.registry import opoly, poly_hash, query
 
 
@@ -758,28 +758,22 @@ def _bpe_fit(
     words = _docs(spark, sf_dir).select(
         F.explode(F.split("text", " ")).alias("w")
     )
-    # Scale-adaptive vocabulary layout (guide §2): every merge round
-    # launches a stage PER CACHED PARTITION of the vocabulary, so a
-    # small vocab spread over the default 32 shuffle partitions pays
-    # ~32x pure task overhead per round (the fixture vocabulary is
-    # tiny; each round was ~0.45 s of scheduling for <1 ms of work).
-    # Partition count derives from corpus size (metadata-only count),
-    # so large corpora keep the parallel aggregate while bench scales
-    # coalesce to one task. coalesce() folds the agg's output without
-    # an extra shuffle.
-    n_docs = parquet_rows(sf_dir, "documents")  # footer, no job
-    vocab_parts = max(1, min(32, n_docs // 20_000))
+    # Every merge round launches a stage PER CACHED PARTITION of the
+    # vocabulary, so a small vocab spread over the session's 32 shuffle
+    # partitions pays ~32x pure task overhead per round (~0.45 s of
+    # scheduling for <1 ms of work at the fixture sizes). coalesce()
+    # folds the agg's output to tasks_for its size without an extra
+    # shuffle.
+    counts = words.groupBy("w").agg(F.count(F.lit(1)).alias("wc"))
     vocab = (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
-        .select(
+        counts.select(
             "w",
             "wc",
             F.concat(
                 F.lit(" "), F.array_join(F.split("w", ""), " "), F.lit(" ")
             ).alias("s"),
         )
-        .coalesce(vocab_parts)
+        .coalesce(tasks_for(spark, plan_bytes(counts)))
         .persist()
     )
     merges: list[tuple[int, str, int]] = []

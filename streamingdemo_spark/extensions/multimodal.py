@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streamingdemo_spark.io import load_tables
+from streamingdemo_spark.io import load_tables, plan_bytes, tasks_for
 from streamingdemo_spark.registry import query
 
 _MAGIC = b"FAKEIMG1"
@@ -181,7 +181,10 @@ def ext_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row pickling); repartition before the decode stage to spread
     large blobs evenly; never collect payloads.
     """
-    payloads = _encode_payload(spark, sf_dir).repartition(8, "doc_id")
+    payloads = _encode_payload(spark, sf_dir)
+    payloads = payloads.repartition(
+        tasks_for(spark, plan_bytes(payloads)), "doc_id"
+    )
     decoded = payloads.mapInPandas(
         _fake_decode,
         schema="doc_id long, width int, height int, n_bytes long, mean_byte double",
@@ -384,9 +387,10 @@ def ext_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the lost 3% sit in regions dense enough to saturate all 8
     bands — the standard LSH cap tradeoff, tunable via _BAND_CAP).
     """
-    sigs = _phash_payloads(spark, sf_dir).repartition(8, "doc_id").mapInPandas(
-        _phash_stage, schema="doc_id long, phash long"
-    )
+    payloads = _phash_payloads(spark, sf_dir)
+    sigs = payloads.repartition(
+        tasks_for(spark, plan_bytes(payloads)), "doc_id"
+    ).mapInPandas(_phash_stage, schema="doc_id long, phash long")
     bands = sigs.select(
         "doc_id",
         "phash",

@@ -9,6 +9,12 @@ Plays the role of the reference's two data-access paths:
 100 TB design note: reads stay fully declarative (``spark.read
 .parquet``) so partition pruning / predicate pushdown / column pruning
 reach the scan. Nothing here collects.
+
+Parallelism: ``tasks_for`` is the engine's one task-count rule: one task
+per ``BYTES_PER_TASK`` of input, clamped to [1, the session's cores].
+Below that a shuffle costs more than the per-row work it spreads (A/B:
+``spread_scan``'s consumers win 1.3-7x at sf0.1, lose 15-35 % at sf0.01
+if spread), and a replay pays a state-store commit per task per batch.
 """
 
 from __future__ import annotations
@@ -31,8 +37,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -40,13 +44,10 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def parquet_rows(sf_dir: str, name: str) -> int:
     """Exact row count of a fixture table from its parquet FOOTER
-    metadata — driver-side, no Spark job. Identical by definition to
-    an unfiltered ``count()`` over the same files (the footer is the
-    writer's own row accounting, the same source Spark's count-star
-    optimization reads inside its tasks); for the scale dials that
-    need only n (LSH band widths, partition counts, tile grids) the
-    count() JOB's fixed scheduling cost is pure overhead — the same
-    job-for-metadata swap as the txn family's ``_footer_stats``."""
+    metadata — driver-side, no Spark job; identical by definition to an
+    unfiltered ``count()`` (the footer is the writer's own row
+    accounting), for the scale dials that need only n (LSH band widths,
+    tile grids)."""
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, name)
@@ -59,19 +60,23 @@ def parquet_rows(sf_dir: str, name: str) -> int:
     return pq.read_metadata(path).num_rows
 
 
-# spread_scan's rule. Below the size floor (plan-statistics bytes) the
-# repartition's fixed shuffle cost exceeds the per-row work it
-# parallelizes: interleaved A/B, the heavy consumers win 1.3-7x at sf0.1
-# (~4 MB corpus) and lose 15-35 % at sf0.01 (~0.4 MB). Above it, a scan
-# spreads only when it yields at most 1/SPREAD_TASKS_RATIO of the cores.
-SPREAD_MIN_BYTES = 256 << 10
-SPREAD_TASKS_RATIO = 2
+BYTES_PER_TASK = 256 << 10
+
+
+def tasks_for(spark: SparkSession, nbytes: int) -> int:
+    """Task count for a stage that reads ``nbytes`` (module docstring)."""
+    per_task = -(-int(nbytes) // BYTES_PER_TASK)
+    return max(1, min(per_task, spark.sparkContext.defaultParallelism))
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """``df``'s size from its optimized plan's statistics; no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _holds_exchange(plan) -> bool:
-    """True if the physical plan contains an exchange. Under AQE (on in
-    every engine session) such a plan is rooted at AdaptiveSparkPlan;
-    the walk covers sessions with AQE off."""
+    """True if the physical plan contains an exchange: under AQE (on in
+    every engine session) its root is AdaptiveSparkPlan, else a node."""
     name = plan.nodeName()
     if name == "AdaptiveSparkPlan" or name.endswith("Exchange"):
         return True
@@ -87,33 +92,27 @@ def spread_scan(df: DataFrame) -> DataFrame:
     The bench fixtures are single-row-group parquet files, so every
     stage up to the first exchange runs as ONE task regardless of core
     count — shingle explodes, rolling-hash UDFs and signature builds
-    all serialize on one core. At production scale a table scan has
-    thousands of row-group splits and this helper is a metadata-only
-    no-op: it round-robin repartitions to the session's default
-    parallelism ONLY when an input of at least ``SPREAD_MIN_BYTES``
-    yields at most 1/``SPREAD_TASKS_RATIO`` of the cores. Results are
+    all serialize on one core. This helper round-robin repartitions to
+    ``tasks_for`` the frame's bytes when the scan yields fewer splits;
+    at production scale it is a metadata-only no-op. Results are
     unchanged by construction — repartition moves rows, and every
     consumer is a key/group computation. The cost when it fires is one
     shuffle of the projected columns, so project/filter before calling
     (guide §2.3); the deterministic sort-before-repartition default
     stays on so task retries reproduce the same placement (guide §2.5).
 
-    The decision never runs a job: the size comes from plan
-    statistics and the split count from the frame's own physical plan.
-    A frame whose plan already holds an exchange is returned unchanged
-    — it is as parallel as its shuffle made it, and reading its split
-    count would run that shuffle.
+    The decision never runs a job: the split count comes from the
+    frame's own physical plan. A frame whose plan already holds an
+    exchange is returned unchanged — it is as parallel as its shuffle
+    made it, and reading its split count would run that shuffle.
     """
-    qe = df._jdf.queryExecution()
-    if int(qe.optimizedPlan().stats().sizeInBytes()) < SPREAD_MIN_BYTES:
+    target = tasks_for(df.sparkSession, plan_bytes(df))
+    if target == 1:
         return df
-    plan = qe.executedPlan()
-    if _holds_exchange(plan):
+    plan = df._jdf.queryExecution().executedPlan()
+    if _holds_exchange(plan) or plan.execute().getNumPartitions() >= target:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if plan.execute().getNumPartitions() * SPREAD_TASKS_RATIO <= target:
-        return df.repartition(target)
-    return df
+    return df.repartition(target)
 
 
 def _load_one(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

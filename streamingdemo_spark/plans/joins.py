@@ -439,8 +439,12 @@ def join_range_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the explosion happens at join output, after the stats it
     coalesces on. The band key is therefore salted (orders explode ×S
     cheap copies, lineitem hashes into S buckets) and both sides are
-    explicitly repartitioned on (band, salt), which pins the task
-    count and spreads candidate generation evenly. The wider-slice
+    explicitly repartitioned on (band, salt) to the session's shuffle
+    partition count, which pins the task count and spreads candidate
+    generation evenly. The count stays above the core count on purpose:
+    band buckets are uneven, and ``io.tasks_for``'s one task per core
+    measured 1.45x slower than 32 partitions at sf0.1 on 4 cores. The
+    wider-slice
     probe (r4 scale probe, git history; now tools/scale_probe.py)
     showed 16× intervals going
     superlinear (58.7 s) without the salt and linear (≈wall × slice)

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamingdemo_spark.io import load_tables
@@ -34,31 +34,7 @@ from streamingdemo_spark.plans.scans import (
     _cow_merge_txn,
     _footer_stats,
 )
-
-_MORTON_SPREADS = (
-    (8, 0x00FF00FF),
-    (4, 0x0F0F0F0F),
-    (2, 0x33333333),
-    (1, 0x55555555),
-)
-
-
-def _morton_spread(c: Column) -> Column:
-    """Spread a 16-bit value's bits to the even positions of a 32-bit
-    lane (0b...abc -> 0b...0a0b0c) — the textbook mask-shift ladder,
-    pure long arithmetic inside whole-stage codegen."""
-    c = c.cast("long").bitwiseAND(F.lit(0xFFFF))
-    for sh, mask in _MORTON_SPREADS:
-        c = c.bitwiseOR(F.shiftleft(c, sh)).bitwiseAND(F.lit(mask))
-    return c
-
-
-def _morton2(x: Column, y: Column) -> Column:
-    """32-bit Morton (Z-order) code of two 16-bit lanes: x on even
-    bits, y on odd. Locality in z implies locality in BOTH x and y,
-    which is exactly what turns one-dimensional per-file min/max
-    stats into a two-dimensional prune."""
-    return _morton_spread(x).bitwiseOR(F.shiftleft(_morton_spread(y), 1))
+from streamingdemo_spark.plans.storage import _SPARK_SHL, _zorder_sql
 
 
 def _add_2d(path: str, st: dict[str, tuple[int, int]]) -> dict:
@@ -179,15 +155,18 @@ def _zorder_txn(
     # 16-bit lane per column: (k - lo) * 2^16 DIV span  in [0, 65535];
     # both lanes clamp — bounds from a stats-carrying subset of files
     # can under-cover rows in the stats-less ones
-    x = F.expr(
+    x = (
         f"greatest(0L, least(65535L, "
         f"((o_orderkey - {klo}) * 65536) DIV {kspan}))"
     )
-    y = F.expr(
+    y = (
         f"greatest(0L, least(65535L, "
         f"((o_custkey - {clo}) * 65536) DIV {cspan}))"
     )
-    z = _morton2(x, y)
+    # 32-bit Morton code, x on even bits and y on odd: locality in z is
+    # locality in BOTH lanes, which turns one-dimensional per-file
+    # min/max stats into a two-dimensional prune
+    z = F.expr(_zorder_sql(x, y, _SPARK_SHL))
     out_name = f"zorder{base_version}"
     zb = (z * n_files / F.lit(1 << 32)).cast("long").alias("zb")
     clustered = src.withColumn("zb", zb)

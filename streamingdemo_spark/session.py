@@ -17,10 +17,9 @@ overridable via env/args.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # glibc-malloc tuning for the Python workers (guide §4/§5): the numpy/
 # Arrow hot paths inside pandas UDFs allocate and free tens-to-hundreds
@@ -48,10 +47,32 @@ for _k, _v in _CHILD_MALLOC_ENV.items():
     os.environ.setdefault(_k, _v)
 
 
+def positive_int(name: str, raw: str | None, default):
+    """``raw``, the value of environment variable ``name``, as a
+    positive int. ``default`` when it is unset, and when it is
+    malformed, then with one stderr line naming the variable."""
+    if raw is None:
+        return default
+    if raw.strip().isdigit() and int(raw) > 0:
+        return int(raw)
+    print(
+        f"{name}={raw!r} is not a positive integer; using {default}",
+        file=sys.stderr,
+    )
+    return default
+
+
+def _local_master() -> str:
+    """``local[N]`` for ``SPARK_GRAFT_CPUS=N``, else ``local[*]``."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    if cpus != "*":
+        cpus = positive_int("SPARK_GRAFT_CPUS", cpus, "*")
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "streamingdemo-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the SparkSession with engine defaults.
@@ -64,11 +85,8 @@ def get_spark(
     RocksDB ``spark.sql.streaming.stateStore.providerClass``) through
     ``extra_conf``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(master or _local_master())
         .appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -86,7 +104,10 @@ def get_spark(
         # unchanged over 5 alternating reps.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        # AQE's pre-coalesce upper bound: adaptive execution sizes each
+        # batch shuffle by bytes; stream replays set their own count
+        # through io.tasks_for.
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # events.parquet stores TIMESTAMP(NANOS), which Spark's reader

@@ -365,11 +365,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "view_id", "purchase_id", "user_id",
         "view_ts", "purchase_ts", "purchase_value",
     )
-    # Stream-stream joins open 4 state stores per shuffle partition
-    # (left/right × key-index layouts), so partition count is 4× as
-    # expensive as for an aggregate — keep the replay harness lean; on a
-    # cluster size this to join-key cardinality instead.
-    return run_to_memory(joined, output_mode="append", state_partitions=4)
+    return run_to_memory(joined, output_mode="append")
 
 
 @query(
@@ -454,12 +450,7 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentinel views themselves (view_id -1/-2), which the filter
     # below strips. Skipping it drops one of five micro-batches of
     # pure fixed cost — oracle re-verified identical at 3 sfs.
-    replayed = run_to_memory(
-        joined,
-        output_mode="append",
-        state_partitions=4,
-        no_data_batches=False,
-    )
+    replayed = run_to_memory(joined, output_mode="append", no_data_batches=False)
     # batch-side sentinel strip — pushdown-safe here (see docstring)
     return replayed.filter(F.col("view_id") >= 0)
 
@@ -1301,33 +1292,13 @@ def stream_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    # Scale-adaptive state partitions (guide §2: never a constant tuned
-    # for one scale): this is the one stateful key whose per-batch work
-    # is Python-side (Arrow transfer + pandas sessionize per user
-    # group). At the 10M-event sweep corpus the default 8 partitions
-    # leave 3/4 of the box idle in exactly the dominating stage, so
-    # large corpora get 32; at replay/bench volumes EVERY state
-    # partition pays the fixed Arrow/python-state plumbing per
-    # micro-batch (EventTimeTimeout scans all partitions even with no
-    # input), so 32 partitions were ~4x pure overhead. The row count
-    # comes straight from the parquet footers (driver-side, no Spark
-    # job — a count() job cost ~0.5 s of pure scheduling here). State
-    # rows stay bounded by open sessions regardless of partition count
-    # (asserted via LAST_STREAM_PROGRESS in test_streaming.py).
-    n_events = parquet_rows(sf_dir, "events")
-    parts = 32 if n_events >= 1_000_000 else 8
     # no_data_batches=False: every real session's timeout fires during
     # sentinel 2's DATA batch (watermark is already max_ts + 2 h − 1 min
     # there, past any real last_event + 1 h gap) and sentinel rows never
     # create state (filtered inside sessionize), so the trailing
     # no-data batch can only scan empty state partitions — pure
     # applyInPandasWithState plumbing. Oracle re-verified at 3 sfs.
-    mem = run_to_memory(
-        sessions,
-        output_mode="append",
-        state_partitions=parts,
-        no_data_batches=False,
-    )
+    mem = run_to_memory(sessions, output_mode="append", no_data_batches=False)
     return mem.select(
         "user_id",
         F.timestamp_micros(F.col("start_us")).alias("session_start"),

@@ -11,6 +11,12 @@ rather than return a partly written sink, records
 on every path. Its conf overrides hold only for ``start()``, and
 ``run_to_memory`` drops the sink's view once its frame is bound, so a
 replay leaves nothing in the session.
+
+Parallelism: a replay's shuffle (and so state-store) partitions are
+``io.tasks_for`` the on-disk bytes of its file sources, read from the
+``StreamingRelation`` paths of the writer's plan without a job — one
+state store per ~256 KiB of replayed input, never more than the
+session's cores. A source without a path (rate) adds no bytes.
 """
 
 from __future__ import annotations
@@ -24,7 +30,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
+from streamingdemo_spark.io import tasks_for
 from streamingdemo_spark.scratch import scratch_dir
+from streamingdemo_spark.session import positive_int
 
 # Checkpoints for replay/test runs: prefer tmpfs — state-store fsyncs
 # on a disk-backed dir dominate micro-batch latency at tiny data sizes.
@@ -32,6 +40,15 @@ from streamingdemo_spark.scratch import scratch_dir
 CHECKPOINT_ROOT = os.environ.get(
     "STREAMINGDEMO_CKPT_ROOT",
     "/dev/shm" if os.access("/dev/shm", os.W_OK) else tempfile.gettempdir(),
+)
+
+# Replay timeout in seconds (default 300 — ample at the fixture sfs,
+# raised by the large-corpus sweeps where the same replays legitimately
+# run long).
+STREAM_TIMEOUT_S = positive_int(
+    "STREAMINGDEMO_STREAM_TIMEOUT",
+    os.environ.get("STREAMINGDEMO_STREAM_TIMEOUT"),
+    300,
 )
 
 # Executed physical plan of the most recent replay — streaming
@@ -66,6 +83,29 @@ def _capture_plan(query) -> str:
     return buf.getvalue()
 
 
+def _source_bytes(df: DataFrame) -> int:
+    """On-disk bytes under the ``path`` of every file source
+    (``StreamingRelation`` leaf) of the streaming frame ``df``, globs
+    expanded, through the Hadoop filesystem API. Plan and filesystem
+    metadata only: no job."""
+    spark = df.sparkSession
+    hconf = spark._jsc.hadoopConfiguration()
+    total = 0
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() != "StreamingRelation":
+            continue
+        path = leaf.dataSource().options().get("path")
+        if path.isEmpty():
+            continue
+        p = spark._jvm.org.apache.hadoop.fs.Path(path.get())
+        fs = p.getFileSystem(hconf)
+        for st in fs.globStatus(p) or []:
+            total += fs.getContentSummary(st.getPath()).getLength()
+    return total
+
+
 def replay(
     writer: DataStreamWriter,
     spark: SparkSession,
@@ -74,7 +114,6 @@ def replay(
     timeout_sec: int | None = None,
     processing_time: str | None = None,
     min_batches: int = 2,
-    state_partitions: int | None = None,
     no_data_batches: bool = True,
 ) -> None:
     """Run ``writer``'s query to completion; see the module docstring.
@@ -88,22 +127,19 @@ def replay(
     stops. availableNow is the DETERMINISTIC form every hash-certified
     key uses; the cadence path is witnessed by ``stream_rate_smoke``.
 
-    ``timeout_sec=None`` defers to ``STREAMINGDEMO_STREAM_TIMEOUT``
-    (default 300 — ample at the fixture sfs, raised by the
-    large-corpus sweeps where the same replays legitimately run long).
+    ``timeout_sec=None`` defers to ``STREAM_TIMEOUT_S``.
 
-    ``state_partitions`` sets the query's shuffle partitions (None
-    keeps the session's); stateful-operator parallelism is fixed at
-    first checkpoint. ``no_data_batches=False`` disables Spark's
-    trailing no-data micro-batch for this query. Both are set on the
-    session for ``start()`` only: the query runs on a clone of the
-    session taken inside ``start()``, so no other query sees them.
+    The query's shuffle partitions come from ``tasks_for`` (see the
+    module docstring); stateful-operator parallelism is fixed at first
+    checkpoint, so a resumed replay keeps its first run's count.
+    ``no_data_batches=False`` disables Spark's trailing no-data
+    micro-batch for this query. Both are set on the session for
+    ``start()`` only: the query runs on a clone of the session taken
+    inside ``start()``, so no other query sees them.
     """
     global LAST_STREAM_PLAN, LAST_STREAM_PROGRESS
     if timeout_sec is None:
-        timeout_sec = int(
-            os.environ.get("STREAMINGDEMO_STREAM_TIMEOUT", "300")
-        )
+        timeout_sec = STREAM_TIMEOUT_S
     writer = writer.option(
         "checkpointLocation",
         checkpoint or scratch_dir(prefix="ckpt_", dir=CHECKPOINT_ROOT),
@@ -112,9 +148,8 @@ def replay(
         writer = writer.trigger(processingTime=processing_time)
     else:
         writer = writer.trigger(availableNow=True)
-    conf = {}
-    if state_partitions:
-        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    parts = tasks_for(spark, _source_bytes(writer._df))
+    conf = {"spark.sql.shuffle.partitions": str(parts)}
     if not no_data_batches:
         conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     prev = {k: spark.conf.get(k, None) for k in conf}
@@ -176,7 +211,6 @@ def run_to_memory(
     df: DataFrame,
     output_mode: str = "append",
     timeout_sec: int | None = None,
-    state_partitions: int | None = 8,
     processing_time: str | None = None,
     min_batches: int = 2,
     no_data_batches: bool = True,
@@ -185,10 +219,6 @@ def run_to_memory(
     batch DataFrame. The frame is analyzed before the sink's view is
     dropped, so it keeps reading the sink while the session holds no
     table for it.
-
-    ``state_partitions`` defaults to 8: at replay volumes 32
-    state-store partitions per micro-batch are pure task overhead. On
-    a cluster, size it to the stream's key cardinality instead.
 
     The state-store backend is the session's
     ``spark.sql.streaming.stateStore.providerClass`` (read at query
@@ -212,7 +242,6 @@ def run_to_memory(
         timeout_sec=timeout_sec,
         processing_time=processing_time,
         min_batches=min_batches,
-        state_partitions=state_partitions,
         no_data_batches=no_data_batches,
     )
     result = spark.table(name)

@@ -26,7 +26,7 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="streamingdemo-tests", shuffle_partitions=8)
+    spark = get_spark(app_name="streamingdemo-tests")
     yield spark
 
 

@@ -81,18 +81,22 @@ def test_parquet_rows_matches_count(spark, sf_dir):
 
 
 def test_spread_scan_floors_parallelism(spark, sf_dir):
-    """spread_scan round-robins a few-partition input above the size
-    floor up to the session's default parallelism (rows unchanged),
-    and leaves tiny or already-parallel inputs alone — the guide §2.5
-    input-skew fix must never fire where it would add a pointless
-    shuffle."""
-    from streamingdemo_spark.io import SPREAD_MIN_BYTES, load_tables, spread_scan
+    """spread_scan round-robins a few-partition input above one task's
+    bytes up to ``tasks_for`` its size (rows unchanged), and leaves
+    tiny or already-parallel inputs alone — the guide §2.5 input-skew
+    fix must never fire where it would add a pointless shuffle."""
+    from streamingdemo_spark.io import (
+        BYTES_PER_TASK,
+        load_tables,
+        plan_bytes,
+        spread_scan,
+        tasks_for,
+    )
 
-    target = spark.sparkContext.defaultParallelism
-
-    # one 8-byte column: 40k rows plan at 320 KB, above the floor
+    # one 8-byte column: 40k rows plan at 320 KB, above one task's bytes
     big = spark.range(0, 40_000, 1, 1)
-    assert 40_000 * 8 >= SPREAD_MIN_BYTES
+    assert plan_bytes(big) == 40_000 * 8 > BYTES_PER_TASK
+    target = tasks_for(spark, plan_bytes(big))
     spread = spread_scan(big)
     assert spread.rdd.getNumPartitions() == target
     assert spread.count() == 40_000
@@ -108,13 +112,28 @@ def test_spread_scan_floors_parallelism(spark, sf_dir):
     assert spread_scan(wide) is wide
 
 
+def _jobs(spark) -> int:
+    """Jobs submitted so far, counted on the DAG scheduler, which also
+    sees AQE map-stage jobs that a status-tracker scan misses."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_tasks_for_clamps_bytes_to_cores(spark):
+    """One task per BYTES_PER_TASK, at least one, at most the cores."""
+    from streamingdemo_spark.io import BYTES_PER_TASK, tasks_for
+
+    cores = spark.sparkContext.defaultParallelism
+    assert tasks_for(spark, 0) == 1
+    assert tasks_for(spark, BYTES_PER_TASK) == 1
+    assert tasks_for(spark, BYTES_PER_TASK + 1) == min(2, cores)
+    assert tasks_for(spark, 10**15) == cores
+
+
 def test_spread_scan_runs_no_job_on_post_exchange_input(spark):
     """A frame past an exchange is as parallel as its shuffle made it:
     spread_scan must return it unchanged without running a job. Reading
     its split count through ``df.rdd`` materialized the AQE shuffle
-    stages — a hidden job per call — and then spread it again. Jobs are
-    counted on the DAG scheduler, which also sees AQE map-stage jobs
-    that a status-tracker scan misses."""
+    stages — a hidden job per call — and then spread it again."""
     from pyspark.sql import functions as F
 
     from streamingdemo_spark.io import spread_scan
@@ -124,10 +143,32 @@ def test_spread_scan_runs_no_job_on_post_exchange_input(spark):
         .groupBy((F.col("id") % 1000).alias("k"))
         .count()
     )
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.numTotalJobs()
+    before = _jobs(spark)
     assert spread_scan(grouped) is grouped
-    assert dag.numTotalJobs() == before
+    assert _jobs(spark) == before
+
+
+def test_parallelism_rule_runs_no_job(spark, sf_dir):
+    """The rule's inputs come from metadata: spread_scan firing on a
+    one-split frame, and a replay sizing its partitions from its file
+    sources' on-disk bytes, submit no job."""
+    import os
+
+    from streamingdemo_spark.io import spread_scan
+    from streamingdemo_spark.streaming.runner import _source_bytes
+    from streamingdemo_spark.streaming.sources import _build, events_stream
+
+    big = spark.range(0, 40_000, 1, 1)
+    stream = events_stream(spark, sf_dir, "ordered", n_chunks=4)
+    joined = stream.join(stream.select("event_id"), "event_id")
+    src = _build(sf_dir, "ordered", 4)
+    on_disk = sum(os.path.getsize(os.path.join(src, f)) for f in os.listdir(src))
+    before = _jobs(spark)
+    assert spread_scan(big) is not big
+    assert _source_bytes(stream) == on_disk
+    assert _source_bytes(joined) == 2 * on_disk
+    assert _source_bytes(spark.readStream.format("rate").load()) == 0
+    assert _jobs(spark) == before
 
 
 # Deployment settings the engine reads: paths, memory, cores and a
@@ -136,7 +177,6 @@ def test_spread_scan_runs_no_job_on_post_exchange_input(spark):
 # (and into the README's Configuration section).
 ALLOWED_ENV = {
     "SPARK_GRAFT_CPUS",
-    "SPARK_GRAFT_SF_DIR",
     "SPARK_DRIVER_MEMORY",
     "SPARK_DRIVER_MAX_RESULT_SIZE",
     "STREAMINGDEMO_STREAM_CACHE",
@@ -219,3 +259,112 @@ def test_only_txn_log_knows_the_log_format():
         if pattern.search(path.read_text())
     }
     assert found == {"plans/txn_log.py"}, found
+
+
+# Task counts that define their scenario or measured faster than the
+# rule; every other count comes from ``io.tasks_for``. Keyed by file
+# and line.
+TASK_COUNT_LITERALS = {
+    ("session.py", '.config("spark.sql.shuffle.partitions", "32")'):
+        "AQE's pre-coalesce upper bound; AQE sizes batch shuffles by bytes",
+    ("plans/storage.py", 'o.repartition(64).write.mode("overwrite").parquet(frag)'):
+        "snk_compaction: the 64 small files it exists to compact",
+    ("plans/storage.py",
+     'spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet('):
+        "snk_compaction: the 4-file compacted layout it verifies",
+    ("plans/storage.py", 'z.repartitionByRange(8, "z")'):
+        "snk_zorder_write: the file count of the clustered layout",
+    ("extensions/corpus.py", 'keyed.repartitionByRange(8, "shard")'):
+        "ext_doc_shuffle_sharded: one range partition per shard (% 8)",
+    ("extensions/similarity.py",
+     'fit_df = fit_df.repartition(1).sortWithinPartitions("vec_id")'):
+        "deterministic fit: one partition fixes the row order it reads",
+    ("plans/scans.py",
+     'o.filter(F.col("o_orderkey") % 4 == part).coalesce(1).write.mode('):
+        "single-file source: one file is one micro-batch",
+    ("plans/scans.py", "src.coalesce(1).write.mode(\"overwrite\").parquet("):
+        "compaction output: one file by definition",
+    ("plans/joins.py",
+     'n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))'):
+        "join_range_banded: uneven band buckets balance over the session's"
+        " 32; tasks_for's 4 measured 2.38 -> 3.45 s at sf0.1 on 4 cores",
+}
+
+
+def test_task_counts_come_from_the_rule():
+    """A task count spelled as an integer literal under
+    ``streamingdemo_spark/`` (``.repartition(<int>``,
+    ``.repartitionByRange(<int>``, ``.coalesce(<int>``,
+    ``numPartitions=<int>``, ``spark.sql.shuffle.partitions`` set from a
+    literal or read back as a count) bypasses ``io.tasks_for``; only the
+    sites above may, each for the reason it gives. No Spark."""
+    import pathlib
+    import re
+
+    import streamingdemo_spark
+
+    pattern = re.compile(
+        r"\.(?:repartition|repartitionByRange|coalesce)\(\s*\d"
+        r"|numPartitions\s*=\s*\d"
+        r"|shuffle\.partitions[\"']\s*(?:,|\]\s*=)\s*(?:str\()?\s*[\"']?\d"
+        r"|conf\.get\(\s*[\"']spark\.sql\.shuffle\.partitions"
+    )
+    root = pathlib.Path(streamingdemo_spark.__file__).parent
+    found = {
+        (path.relative_to(root).as_posix(), line.strip())
+        for path in sorted(root.rglob("*.py"))
+        for line in path.read_text().splitlines()
+        if pattern.search(line)
+    }
+    assert found == set(TASK_COUNT_LITERALS)
+
+
+def test_malformed_env_values_fall_back(monkeypatch):
+    """A malformed deployment value falls back to its default with one
+    stderr line naming the variable, instead of failing every replay
+    (``int('5m')``) or every session (a ``local[abc]`` master). No
+    Spark: the values are read at import and by the master helper."""
+    import pathlib
+    import subprocess
+    import sys
+
+    probe = (
+        "from streamingdemo_spark.streaming import runner\n"
+        "from streamingdemo_spark import session\n"
+        "print(runner.STREAM_TIMEOUT_S, session._local_master())\n"
+    )
+    root = pathlib.Path(__file__).resolve().parent.parent
+
+    def run(timeout: str, cpus: str):
+        monkeypatch.setenv("STREAMINGDEMO_STREAM_TIMEOUT", timeout)
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        out = subprocess.run(
+            [sys.executable, "-c", probe],
+            cwd=root, capture_output=True, text=True, check=True,
+        )
+        return out.stdout.strip(), out.stderr.splitlines()
+
+    got, err = run("5m", "abc")
+    assert got == "300 local[*]"
+    for name in ("STREAMINGDEMO_STREAM_TIMEOUT", "SPARK_GRAFT_CPUS"):
+        assert sum(name in line for line in err) == 1, err
+    got, err = run("42", "3")
+    assert got == "42 local[3]"
+    assert not [line for line in err if "STREAM_TIMEOUT" in line or "CPUS" in line]
+
+
+def test_entry_module_raises_on_a_broken_extension(monkeypatch):
+    """``__spark_entry__`` must not swallow an ImportError: a broken
+    extension import would silently drop its keys from ``queries()``,
+    ``oracle_sql()`` and ``DRIVER_ORDER``. No Spark."""
+    import importlib.util
+    import pathlib
+    import sys
+
+    import pytest
+
+    path = pathlib.Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("entry_probe", path)
+    monkeypatch.setitem(sys.modules, "streamingdemo_spark.extensions", None)
+    with pytest.raises(ImportError):
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))

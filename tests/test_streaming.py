@@ -656,7 +656,7 @@ def test_processing_time_replay_is_live_and_keeps_session_conf(spark):
     """B4's wall-clock cadence (the reference's one hard performance
     fact: a fixed batch interval, OpContainer.java:47-49) has a RUNTIME
     witness: a processingTime='1 second' replay over the rate source
-    completes min_batches DISTINCT micro-batches. The runner's 8 state
+    completes min_batches DISTINCT micro-batches. The runner's state
     partitions must not leak into the session while that query runs,
     where a concurrent query would plan with them: another thread
     polls the session conf once the replay is past its first batch."""
@@ -691,13 +691,20 @@ def test_processing_time_replay_is_live_and_keeps_session_conf(spark):
 
 
 def test_state_partitions_reach_the_query_not_the_session(spark, sf_dir):
-    """Restoring the conf straight after start() keeps the query's own
-    8 state partitions: the query plans on a clone of the session."""
+    """A replay's state partitions are ``io.tasks_for`` the on-disk
+    bytes of its source, and restoring the conf straight after start()
+    keeps them: the query plans on a clone of the session."""
     import os
 
+    from streamingdemo_spark.io import tasks_for
     from streamingdemo_spark.streaming import runner
+    from streamingdemo_spark.streaming.sources import _build
 
     sf001 = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+    src = _build(sf001, "ordered", 8)  # stream_tumbling's source
+    want = tasks_for(
+        spark, sum(os.path.getsize(os.path.join(src, f)) for f in os.listdir(src))
+    )
     undo = _session_partitions(spark, 32)
     try:
         QUERIES["stream_tumbling"](spark, sf001).count()
@@ -705,7 +712,7 @@ def test_state_partitions_reach_the_query_not_the_session(spark, sf_dir):
     finally:
         undo()
     ops = [p["stateOperators"][0] for p in runner.LAST_STREAM_PROGRESS]
-    assert ops and all(op["numShufflePartitions"] == 8 for op in ops), ops
+    assert ops and all(op["numShufflePartitions"] == want for op in ops), ops
 
 
 def test_run_to_memory_leaves_no_table(spark, sf_dir):
