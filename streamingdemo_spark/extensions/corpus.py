@@ -1992,6 +1992,26 @@ def boot_weight_partials(df: DataFrame) -> DataFrame:
     )
 
 
+def boot_ci(per_rep: DataFrame) -> DataFrame:
+    """Close the bootstrap over per-replicate (r, n_w, sum_w, mean_rep)
+    rows: the 2.5/97.5 interpolated percentile of the B means, beside
+    every replicate, rounded to 6 dp — the ``ci`` and final SELECT of
+    ``BOOT_ORACLE_SQL``, shared by the batch and streaming legs."""
+    ci = per_rep.agg(
+        F.expr("percentile(mean_rep, 0.025)").alias("lo"),
+        F.expr("percentile(mean_rep, 0.975)").alias("hi"),
+    )
+    rnd = lambda c: F.round(c, 6) + F.lit(0.0)  # noqa: E731
+    return per_rep.crossJoin(F.broadcast(ci)).select(
+        F.col("r").alias("replicate"),
+        "n_w",
+        "sum_w",
+        rnd("mean_rep").alias("mean_rep"),
+        rnd("lo").alias("boot_lo"),
+        rnd("hi").alias("boot_hi"),
+    )
+
+
 # Shared by ext_bootstrap_ci and the streaming leg
 # (streaming.queries.stream_bootstrap_ci): the per-row Poisson weights
 # are additive across any partitioning of the corpus, so both converge
@@ -2079,16 +2099,4 @@ def ext_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pins that the final query holds no corpus scan at all)
         .localCheckpoint(eager=True)
     )
-    ci = per_rep.agg(
-        F.expr("percentile(mean_rep, 0.025)").alias("lo"),
-        F.expr("percentile(mean_rep, 0.975)").alias("hi"),
-    )
-    rnd = lambda c: F.round(c, 6) + F.lit(0.0)  # noqa: E731
-    return per_rep.crossJoin(F.broadcast(ci)).select(
-        F.col("r").alias("replicate"),
-        "n_w",
-        "sum_w",
-        rnd("mean_rep").alias("mean_rep"),
-        rnd("lo").alias("boot_lo"),
-        rnd("hi").alias("boot_hi"),
-    )
+    return boot_ci(per_rep)

@@ -24,7 +24,7 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streamingdemo_spark.io import load_tables, spread_scan
+from streamingdemo_spark.io import load_tables, reuse, spread_scan
 from streamingdemo_spark.registry import POLY_MOD, opoly, poly_hash, query
 
 # Planted-mutant id offset for the DOC-space keys. Fixed: every
@@ -1230,43 +1230,28 @@ def graduated_occupancy(
     )
 
 
-# One-slot memo of the verified near-dup pair output, keyed by
-# (applicationId, sf_dir): ext_semantic_decontam is a projection of
-# ext_dedup_embedding's output, and when both keys run in one session
-# (driver correctness gate, sf10 sweep, bench) the expensive
-# sketch→band→verify stage must run ONCE, not once per key. A single
-# slot (not a dict) bounds held executor memory to one small pair
-# relation; switching sf_dir or session evicts and unpersists.
-# [(app_id, (sf_dir, fixture_fp), pairs_df, sk_df)] — at most 1 entry
-_EMB_PAIRS_MEMO: list = []
-
-
 def _emb_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build (or reuse) the verified embedding near-dup pairs
-    (vec_a, vec_b, cosine >= 0.99) for ``sf_dir``. See
-    :func:`ext_dedup_embedding` for the algorithm contract."""
-    app_id = spark.sparkContext.applicationId
-    # memo key includes the fixture fingerprint: a fixture regenerated
-    # in place within one session must not return stale pairs (the
-    # staleness class sources._source_fp closes for stream caches)
-    from streamingdemo_spark.streaming.sources import _source_fp
+    """The verified embedding near-dup pairs (vec_a, vec_b, cosine >=
+    0.99) for ``sf_dir``; see :func:`ext_dedup_embedding` for the
+    algorithm contract. ext_semantic_decontam is a projection of the
+    same output, so the sketch→band→verify stage runs once per session
+    and fixture (``io.reuse``), and a miss unpersists both the pair
+    relation and the corpus-sized sketch cache."""
+    pairs, _ = reuse(
+        spark,
+        "emb_pairs",
+        sf_dir,
+        "embeddings",
+        lambda: _build_emb_pairs(spark, sf_dir),
+        release=lambda frames: [df.unpersist() for df in frames],
+    )
+    return pairs
 
-    m_key = (sf_dir, _source_fp(f"{sf_dir}/embeddings.parquet"))
-    if _EMB_PAIRS_MEMO:
-        m_app, m_dir, m_pairs, m_sk = _EMB_PAIRS_MEMO[0]
-        if m_app == app_id and m_dir == m_key:
-            return m_pairs
-        if m_app == app_id:
-            # same session, new sf_dir: release BOTH cached relations —
-            # the corpus-sized sketch cache is the one that hurts if it
-            # leaks once per sf_dir switch, not the small pair list
-            for df in (m_pairs, m_sk):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        _EMB_PAIRS_MEMO.clear()
 
+def _build_emb_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(persisted pairs, cached sketch relation) for _emb_verified_pairs."""
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     # ONE bounded driver-edge aggregate fixes every data-derived
     # constant before the plan is built: max vec_id -> the mutant-id
@@ -1457,8 +1442,7 @@ def _emb_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["vec_a", "vec_b"])
         .persist()  # small verified-pair relation; reused by decontam
     )
-    _EMB_PAIRS_MEMO.append((app_id, m_key, pairs, sk))
-    return pairs
+    return pairs, sk
 
 
 @query("ext_dedup_embedding", oracle=_embedding_oracle())

@@ -30,10 +30,6 @@ from streamingdemo_spark.registry import query
 # pair (85, 100) so both engines do the same integer arithmetic.
 _UNIT = 1_000_000_000
 _ITERATIONS = 3
-# Lineage-truncation cadence for iterative loops: fixed short loops
-# (3 rounds) run as one planned dataflow; loops running to
-# convergence cross this boundary and get their lineage cut.
-_CHECKPOINT_EVERY = 8
 
 
 @query(
@@ -90,12 +86,9 @@ def ext_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each iteration is ONE shuffle join (edges ⋈ ranks on
     src — both sides hash-partitioned on the same key, so AQE reuses
     the exchange) plus one aggregate with map-side partial combine;
-    state between iterations is a node-sized DataFrame whose lineage
-    is truncated every ``_CHECKPOINT_EVERY`` rounds — fixed short
-    loops run as one planned dataflow (checkpointing every round
-    doubled the sf0.1 wall: 3.54 s → 1.71 s measured), while
-    convergence-length loops still get O(1) lineage at the cadence
-    boundary.
+    state between iterations is a node-sized DataFrame, and the
+    fixed 3-round loop runs as one planned dataflow (checkpointing
+    every round doubled the sf0.1 wall: 3.54 s → 1.71 s measured).
     Rank state is node-count-sized, edges dominate: at 100 TB
     pre-partition the edge list once by src and persist it; every
     iteration then shuffles only the node-sized rank relation.
@@ -132,7 +125,7 @@ def ext_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(15000000000 AS BIGINT) div (100 * n)").alias("b"),
         F.expr(f"CAST({_UNIT} AS BIGINT) div n").alias("r"),
     )
-    for i in range(_ITERATIONS):
+    for _ in range(_ITERATIONS):
         contribs = edges.join(
             ranks.withColumnRenamed("node", "src"), "src"
         ).select(F.col("dst").alias("node"), F.expr("r div outdeg").alias("contrib"))
@@ -150,13 +143,6 @@ def ext_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("r"),
             )
         )
-        # Truncate lineage every _CHECKPOINT_EVERY rounds, NOT every
-        # round: eager materialization per round doubled the wall at
-        # sf0.1 (3.54 s -> 1.71 s measured), and a bounded 3-round
-        # dataflow plans fine as one lineage. Long/unbounded loops
-        # (the 100 TB convergence form) still hit the guard.
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         F.col("node").alias("node_id"),
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
@@ -396,10 +382,8 @@ def ext_graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per hop the shuffle is |frontier ∪ labels| ⋈ edges
     on the node key — bounded by k·n (backbone degree ≤ {_KNN_K});
-    the label relation's lineage is truncated at the
-    ``_CHECKPOINT_EVERY`` cadence (fixed short hops plan as one
-    dataflow; long walks stay O(1)). At real scale seeds come from a table, hops
-    from a loop with a convergence check (count of changed labels =
+    the fixed short hops plan as one dataflow. At real scale seeds
+    come from a table, hops from a loop with a convergence check (count of changed labels =
     0), exactly like ``min_label_components``.
     """
     mut = _backbone(spark, sf_dir)
@@ -410,7 +394,7 @@ def ext_graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = nodes.filter(F.col("node") % _BFS_SEED_MOD == 0).select(
         "node", F.lit(0).cast("long").alias("dist")
     )
-    for i in range(_BFS_HOPS):
+    for _ in range(_BFS_HOPS):
         hop = labels.join(e, labels["node"] == e["u"]).select(
             F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
         )
@@ -419,9 +403,6 @@ def ext_graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        # same cadence rationale as ext_graph_pagerank
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            labels = labels.localCheckpoint(eager=True)
     return labels.select(
         F.col("node").alias("supplier"), F.col("dist").cast("int").alias("dist")
     )
@@ -477,8 +458,8 @@ def ext_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape per round: one edges⋈labels join (both sides keyed by
     node id), one (node, label) count aggregate, one per-node argmax
     window — all shuffles on the node key, state is one row per node,
-    and lineage is truncated at the ``_CHECKPOINT_EVERY`` cadence
-    exactly like ``ext_graph_pagerank``. The backbone bounds degree at
+    and the fixed rounds plan as one dataflow like
+    ``ext_graph_pagerank``. The backbone bounds degree at
     {_KNN_K}, so each round moves at most k·n rows — at 100 TB the
     rounds are k·n-shuffle-bounded, never edge-quadratic; synchronous
     update keeps results independent of partitioning (asynchronous
@@ -498,7 +479,7 @@ def ext_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", F.col("node").alias("lbl")
     )
     wa = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
-    for i in range(_LPA_ITERS):
+    for _ in range(_LPA_ITERS):
         counted = (
             edges.join(
                 labels.select(F.col("node").alias("nbr"), "lbl"), "nbr"
@@ -511,10 +492,6 @@ def ext_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("node", "lbl")
         )
-        # same cadence rationale as ext_graph_pagerank: truncate only
-        # past the fixed-short-loop boundary
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            labels = labels.localCheckpoint(eager=True)
     wc = Window.partitionBy("lbl")
     return labels.select(
         F.col("node").alias("supplier"),

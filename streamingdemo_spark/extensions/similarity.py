@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from streamingdemo_spark.io import load_tables, parquet_rows
+from streamingdemo_spark.io import load_tables, parquet_rows, reuse
 from streamingdemo_spark.registry import DEFAULT_ORACLE_SF_DIR, query
 
 N_QUERIES = 8
@@ -518,8 +518,6 @@ def _knn_load_tile(stage_dir: str, tile: int):
 
 
 _KNN_TILE_CACHE: dict = {}
-_KNN_STAGE_CACHE: dict = {}
-
 
 
 @query(
@@ -580,10 +578,9 @@ def ext_sim_knn_join(
     guarantees the cut can never disagree with the oracle's rounded
     ranking.
     """
-    import os
-    from streamingdemo_spark.scratch import scratch_dir
-
     import numpy as np
+
+    from streamingdemo_spark.scratch import scratch_dir
 
     corpus, _ = _corpus_and_queries(spark, sf_dir)
     if tile_rows and tile_rows > 0:
@@ -593,14 +590,8 @@ def ext_sim_knn_join(
         n_tiles = max(1, -(-n // tile_rows))
     else:
         n_tiles = 1
-    # Session-lifetime stage cache: the tile grid is a pure function of
-    # (fixture dir, tile count), so repeated calls — bench reps, driver
-    # runs, downstream pipelines — reuse the first staging write
-    # instead of re-writing the corpus each time (exactly how a real
-    # pipeline stages its build side once and serves many queries).
-    stage_key = (os.path.realpath(sf_dir), n_tiles)
-    stage_dir = _KNN_STAGE_CACHE.get(stage_key)
-    if stage_dir is None or not os.path.isdir(stage_dir):
+
+    def stage() -> str:
         stage_dir = scratch_dir(prefix="streamingdemo_knn_tiles_")
         (
             corpus.withColumn(
@@ -610,7 +601,16 @@ def ext_sim_knn_join(
             .partitionBy("tile")
             .parquet(stage_dir)
         )
-        _KNN_STAGE_CACHE[stage_key] = stage_dir
+        return stage_dir
+
+    # The tile grid is a pure function of (fixture, tile count), so
+    # repeated calls reuse the first staging write, as a pipeline stages
+    # its build side once and serves many queries. Not released: lazy
+    # frames from earlier calls may still read it (scratch_dir removes
+    # it at exit), and it outlives spark.catalog.clearCache().
+    stage_dir = reuse(
+        spark, "knn_tiles", sf_dir, "embeddings", stage, key=(n_tiles,)
+    )
 
     def knn_against(tile_no: int):
         def knn(batches):
@@ -1606,11 +1606,6 @@ def ext_label_noise_knn(
 # neighbors through its other 3 tables.
 _LN_BUCKET_CAP = 512
 _LN_K = 3  # same k as the exact twin
-# single-slot memo of the capped bucket relation (the dedup pair-memo
-# discipline): the self-join reads it twice per invocation, and the
-# idempotence probe / bench reps call the key repeatedly — without
-# eviction each call would leak one cached relation
-_LN_BUCKETS_MEMO: list = []  # [(app_id, sf_dir, DataFrame)] — at most 1
 
 
 def _label_noise_ann_oracle(
@@ -1770,27 +1765,12 @@ def ext_label_noise_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("embedding"),
         "label",
     )
-    # n comes straight from the parquet footers (driver-side, no Spark
-    # job); the plane-width formula needs n only
-    n_corpus = parquet_rows(sf_dir, "embeddings")
-    n_planes = max(6, (n_corpus // 64 + 1).bit_length())
-    app_id = spark.sparkContext.applicationId
-    # memo key includes the fixture fingerprint: a fixture regenerated
-    # in place within one session must not return stale buckets (the
-    # staleness class sources._source_fp closes for stream caches)
-    from streamingdemo_spark.streaming.sources import _source_fp
 
-    memo_key = (app_id, sf_dir, _source_fp(f"{sf_dir}/embeddings.parquet"))
-    if _LN_BUCKETS_MEMO and _LN_BUCKETS_MEMO[0][0] == memo_key:
-        (flagged,) = _LN_BUCKETS_MEMO[0][1:]
-    else:
-        if _LN_BUCKETS_MEMO and _LN_BUCKETS_MEMO[0][0][0] == app_id:
-            for df in _LN_BUCKETS_MEMO[0][1:]:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        _LN_BUCKETS_MEMO.clear()
+    def buckets() -> DataFrame:
+        # n comes straight from the parquet footers (driver-side, no
+        # Spark job); the plane-width formula needs n only
+        n_corpus = parquet_rows(sf_dir, "embeddings")
+        n_planes = max(6, (n_corpus // 64 + 1).bit_length())
         sketch = _bucket_udf(4, n_planes, multiprobe=True)
         # slots 0..3 are the main buckets (the INDEX — cap applies
         # here), slots 4..7 the probe buckets (QUERY side only: a
@@ -1818,10 +1798,14 @@ def ext_label_noise_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             F.lit(False).alias("is_index"),
         )
-        # cached: the bench/idempotence reps and the vote stage reuse
-        # it; the relation is 3 ints + a bool per (vector, slot)
-        flagged = canon.unionByName(probes).cache()
-        _LN_BUCKETS_MEMO.append((memo_key, flagged))
+        # cached: the self-join below reads it twice, and repeated calls
+        # reuse it; the relation is 3 ints + a bool per (vector, slot)
+        return canon.unionByName(probes).cache()
+
+    flagged = reuse(
+        spark, "ln_buckets", sf_dir, "embeddings", buckets,
+        release=DataFrame.unpersist,
+    )
     # Score + rank INSIDE each (table, bucket) group with one dense
     # numpy GEMM per group (applyInPandas), emitting only each query's
     # bucket-local top-k with the rounded-tie margin — the r12 form
@@ -2072,6 +2056,33 @@ def _adc_micro_col() -> Column:
     )
 
 
+def _pq_rerank(adc: DataFrame, v: DataFrame) -> DataFrame:
+    """The two-stage PQ serving tail: the PQ_CAND best ``adc_micro``
+    scores (TakeOrdered, never a global sort) re-rank against the
+    exact full vectors ``v`` by ROUND(squared L2, 6), and the PQ_TOPK
+    nearest are numbered by (dist2, vec_id)."""
+    cand = adc.orderBy("adc_micro", "vec_id").limit(PQ_CAND)
+    qv = v.filter(F.col("vec_id") == PQ_QUERY).select(F.col("e").alias("qe"))
+    exact = F.aggregate(
+        F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, t2: acc + t2,
+    )
+    rer = (
+        cand.join(v.select("vec_id", "e"), "vec_id")
+        .crossJoin(F.broadcast(qv))
+        .select(
+            "vec_id",
+            "label",
+            "adc_micro",
+            (F.round(exact, 6) + F.lit(0.0)).alias("dist2"),
+        )
+    )
+    top = rer.orderBy("dist2", "vec_id").limit(PQ_TOPK)
+    wr = Window.orderBy("dist2", "vec_id")
+    return top.withColumn("rk", F.row_number().over(wr))
+
+
 @query(
     "ext_sim_pq_adc",
     oracle=f"""
@@ -2166,26 +2177,7 @@ def ext_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(_pq_query_tmap(v, cb, PQ_QUERY)))
         .select("vec_id", "label", _adc_micro_col().alias("adc_micro"))
     )
-    cand = adc.orderBy("adc_micro", "vec_id").limit(PQ_CAND)
-    qv = v.filter(F.col("vec_id") == PQ_QUERY).select(F.col("e").alias("qe"))
-    exact = F.aggregate(
-        F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t2: acc + t2,
-    )
-    rer = (
-        cand.join(v.select("vec_id", "e"), "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            "label",
-            "adc_micro",
-            (F.round(exact, 6) + F.lit(0.0)).alias("dist2"),
-        )
-    )
-    top = rer.orderBy("dist2", "vec_id").limit(PQ_TOPK)
-    wr = Window.orderBy("dist2", "vec_id")
-    return top.withColumn("rk", F.row_number().over(wr))
+    return _pq_rerank(adc, v)
 
 
 MRL_DIMS = (8, 16, 32, 64)
@@ -2499,26 +2491,7 @@ def ext_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(_pq_query_tmap(v, cb, PQ_QUERY)))
         .select("vec_id", "label", _adc_micro_col().alias("adc_micro"))
     )
-    cand = adc.orderBy("adc_micro", "vec_id").limit(PQ_CAND)
-    qv = v.filter(F.col("vec_id") == PQ_QUERY).select(F.col("e").alias("qe"))
-    exact = F.aggregate(
-        F.zip_with("e", "qe", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t2: acc + t2,
-    )
-    rer = (
-        cand.join(v.select("vec_id", "e"), "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            "label",
-            "adc_micro",
-            (F.round(exact, 6) + F.lit(0.0)).alias("dist2"),
-        )
-    )
-    top = rer.orderBy("dist2", "vec_id").limit(PQ_TOPK)
-    wr = Window.orderBy("dist2", "vec_id")
-    return top.withColumn("rk", F.row_number().over(wr))
+    return _pq_rerank(adc, v)
 
 
 N_HARDNEG = 5  # mined negatives per query (DPR used 1-7 BM25/ANN negs)

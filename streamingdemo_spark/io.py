@@ -15,6 +15,14 @@ per ``BYTES_PER_TASK`` of input, clamped to [1, the session's cores].
 Below that a shuffle costs more than the per-row work it spreads (A/B:
 ``spread_scan``'s consumers win 1.3-7x at sf0.1, lose 15-35 % at sf0.01
 if spread), and a replay pays a state-store commit per task per batch.
+
+Reuse across calls: ``reuse`` is the engine's one memo for what a key
+keeps between calls (a persisted pair relation, a staged tile grid).
+It holds one value per name, keyed by the session's application id,
+the fixture dir's real path, the table's ``fixture_fp`` and any extra
+key, so a new session, another fixture or a table rewritten in place
+rebuilds. The value it replaces is released (unpersisted), unless a
+stopped session built it: that session's cache died with it.
 """
 
 from __future__ import annotations
@@ -58,6 +66,50 @@ def parquet_rows(sf_dir: str, name: str) -> int:
             if f.endswith(".parquet")
         )
     return pq.read_metadata(path).num_rows
+
+
+def fixture_fp(sf_dir: str, table: str) -> str:
+    """Content fingerprint of a fixture table: size + mtime (µs). It
+    changes when the table is regenerated or rewritten in place, so
+    caches keyed on it never serve a superseded fixture."""
+    st = os.stat(table_path(sf_dir, table))
+    return f"{st.st_size}-{st.st_mtime_ns // 1000}"
+
+
+# name -> (key, value, release) for ``reuse``; one entry per name
+_HELD: dict = {}
+
+
+def reuse(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    table: str,
+    build,
+    release=None,
+    key: tuple = (),
+):
+    """``build()``'s value for ``table`` of ``sf_dir`` in this session,
+    built once and returned as is while the key holds (module
+    docstring); a miss replaces the value held under ``name``, running
+    ``release`` on it."""
+    app = spark.sparkContext.applicationId
+    k = (app, os.path.realpath(sf_dir), fixture_fp(sf_dir, table), *key)
+    held_key, value, _ = _HELD.get(name, (None, None, None))
+    if held_key == k:
+        return value
+    if held_key is not None and held_key[0] == app:
+        forget(name)
+    value = build()
+    _HELD[name] = (k, value, release)
+    return value
+
+
+def forget(name: str) -> None:
+    """Drop the value ``reuse`` holds under ``name``, releasing it."""
+    _, value, release = _HELD.pop(name, (None, None, None))
+    if release is not None:
+        release(value)
 
 
 BYTES_PER_TASK = 256 << 10

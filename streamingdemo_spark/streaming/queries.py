@@ -1867,7 +1867,11 @@ def stream_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from streamingdemo_spark.extensions.corpus import BOOT_ORACLE_SQL  # noqa: E402
+from streamingdemo_spark.extensions.corpus import (  # noqa: E402
+    BOOT_ORACLE_SQL,
+    boot_ci,
+    boot_weight_partials,
+)
 
 
 @query("stream_bootstrap_ci", oracle=BOOT_ORACLE_SQL)
@@ -1895,7 +1899,6 @@ def stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from streamingdemo_spark.extensions.corpus import boot_weight_partials
     from streamingdemo_spark.streaming.sources import documents_stream
 
     target = os.path.join(scratch_dir(prefix="boot_tgt_"), "partials")
@@ -1927,73 +1930,43 @@ def stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sum_w").cast("double") / F.col("n_w")).alias("mean_rep"),
         )
     )
-    ci = per_rep.agg(
-        F.expr("percentile(mean_rep, 0.025)").alias("lo"),
-        F.expr("percentile(mean_rep, 0.975)").alias("hi"),
-    )
-    rnd = lambda c: F.round(c, 6) + F.lit(0.0)  # noqa: E731
-    return per_rep.crossJoin(F.broadcast(ci)).select(
-        F.col("r").alias("replicate"),
-        "n_w",
-        "sum_w",
-        rnd("mean_rep").alias("mean_rep"),
-        rnd("lo").alias("boot_lo"),
-        rnd("hi").alias("boot_hi"),
-    )
+    return boot_ci(per_rep)
 
 
-# Import-guarded like __spark_entry__'s package guards: in a staged
-# build where the streaming package exists but extensions don't, only
-# this twin key vanishes — a module-level import would take every
-# streaming key down with it (the registry would silently shrink).
-# The guard is NARROW (r8 advice): only a genuinely-absent extensions
-# package may unregister the twin; a transitive ImportError from a
-# broken dependency INSIDE extensions.text must still surface, or the
-# registry would shrink silently (count tests derive both sides
-# dynamically and would not notice).
-try:
-    from streamingdemo_spark.extensions.text import GOPHER_ORACLE
-except ImportError:
-    import importlib.util
+from streamingdemo_spark.extensions.text import (  # noqa: E402
+    GOPHER_ORACLE,
+    gopher_rules_projection,
+)
 
-    if importlib.util.find_spec("streamingdemo_spark.extensions") is None:
-        GOPHER_ORACLE = None
-    else:
-        raise
 
-if GOPHER_ORACLE is not None:
+@query("stream_quality_gopher_gate", oracle=GOPHER_ORACLE)
+def stream_quality_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Gopher quality ruleset (``ext_quality_gopher_rules``,
+    text.py) as a CONTINUOUS-INGEST micro-batch screen — the place a
+    crawl pipeline actually runs it: documents arrive as a stream and
+    each micro-batch evaluates the full rule battery map-side (the
+    projection is stateless, so it runs unchanged on an unbounded
+    relation — Structured Streaming's batch/stream unification),
+    emitting the per-document keep/drop verdicts in append mode.
 
-    @query("stream_quality_gopher_gate", oracle=GOPHER_ORACLE)
-    def stream_quality_gopher_gate(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """The Gopher quality ruleset (``ext_quality_gopher_rules``,
-        text.py) as a CONTINUOUS-INGEST micro-batch screen — the place a
-        crawl pipeline actually runs it: documents arrive as a stream and
-        each micro-batch evaluates the full rule battery map-side (the
-        projection is stateless, so it runs unchanged on an unbounded
-        relation — Structured Streaming's batch/stream unification),
-        emitting the per-document keep/drop verdicts in append mode.
+    The twin discipline (``stream_ts_holt`` pattern): the SAME
+    expression tree (``gopher_rules_projection``) and the SAME DuckDB
+    oracle certify both legs, so after the deterministic availableNow
+    replay this key's multi-batch output must hash-equal the batch
+    key — a real streaming execution earning a full value-hash row,
+    not a rows-only smoke.
 
-        The twin discipline (``stream_ts_holt`` pattern): the SAME
-        expression tree (``gopher_rules_projection``) and the SAME DuckDB
-        oracle certify both legs, so after the deterministic availableNow
-        replay this key's multi-batch output must hash-equal the batch
-        key — a real streaming execution earning a full value-hash row,
-        not a rows-only smoke.
+    100 TB/continuous shape: zero state, zero shuffle — the gate runs
+    at ingest speed on each micro-batch and composes upstream of the
+    stateful dedup stages (``stream_dedup_substring``), exactly where
+    the published pipelines place their quality filters (filter before
+    you fingerprint: the gate is O(chars) and cuts the dedup state for
+    every document it drops).
+    """
+    from streamingdemo_spark.streaming.sources import documents_stream
 
-        100 TB/continuous shape: zero state, zero shuffle — the gate runs
-        at ingest speed on each micro-batch and composes upstream of the
-        stateful dedup stages (``stream_dedup_substring``), exactly where
-        the published pipelines place their quality filters (filter before
-        you fingerprint: the gate is O(chars) and cuts the dedup state for
-        every document it drops).
-        """
-        from streamingdemo_spark.extensions.text import gopher_rules_projection
-        from streamingdemo_spark.streaming.sources import documents_stream
-
-        # files_per_trigger=2 → 2 micro-batches: the gate is stateless
-        # append (every doc emits exactly once at any batching), so the
-        # only thing chunk count buys is per-batch fixed cost.
-        stream = documents_stream(spark, sf_dir, n_chunks=4, files_per_trigger=2)
-        return run_to_memory(gopher_rules_projection(stream), output_mode="append")
+    # files_per_trigger=2 → 2 micro-batches: the gate is stateless
+    # append (every doc emits exactly once at any batching), so the
+    # only thing chunk count buys is per-batch fixed cost.
+    stream = documents_stream(spark, sf_dir, n_chunks=4, files_per_trigger=2)
+    return run_to_memory(gopher_rules_projection(stream), output_mode="append")

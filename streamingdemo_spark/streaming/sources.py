@@ -25,6 +25,8 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
+from streamingdemo_spark.io import fixture_fp
+
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -68,19 +70,12 @@ def _write_chunks(table: pa.Table, out_dir: str, n_chunks: int) -> None:
         time.sleep(0.01)
 
 
-def _source_fp(path: str) -> str:
-    """Content fingerprint of a fixture file for the replay-cache key:
-    size + mtime. Two failure modes this closes: same-BASENAME sf dirs
-    in different parents silently replaying each other's cached
-    chunks, and a regenerated fixture reusing the stale chunk dir
-    (only _CACHE_VERSION used to participate in the path)."""
-    st = os.stat(path)
-    return f"{st.st_size}-{st.st_mtime_ns // 1000}"
-
-
 def _cache_dir(sf_dir: str, source_file: str, leaf: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = _source_fp(os.path.join(sf_dir, source_file))
+    src = os.path.splitext(os.path.basename(source_file))[0]
+    # the fingerprint keeps same-basename sf dirs in different parents,
+    # and a fixture regenerated in place, off each other's chunks
+    fp = fixture_fp(sf_dir, src)
     root = os.path.join(_CACHE_ROOT, f"v{_CACHE_VERSION}")
     # The cache key (and the GC sweep prefix below) must include the
     # SOURCE FILE, not just the sf-dir tag: the fingerprint is
@@ -89,7 +84,6 @@ def _cache_dir(sf_dir: str, source_file: str, leaf: str) -> str:
     # (documents vs embeddings vs events), causing perpetual rebuild
     # thrash and deleting an active file-stream's source dir
     # mid-replay in a concurrent session.
-    src = os.path.splitext(os.path.basename(source_file))[0]
     cur = f"{tag}-{src}-{fp}"
     # GC stale fingerprints of the SAME (sf-dir tag, source file):
     # every fixture regeneration changes the fingerprint, and without

@@ -325,6 +325,32 @@ class TestSimilarity:
         }
         assert chunked == whole
 
+    def test_knn_join_restages_a_rewritten_fixture(
+        self, spark, sf_dir, tmp_path
+    ):
+        """Rewriting ``embeddings.parquet`` in place must re-stage the
+        build tiles: the next call equals a run on a fresh copy of the
+        new table, never the new probe side against the old tiles."""
+        import pyarrow.parquet as pq
+
+        from streamingdemo_spark.extensions.similarity import ext_sim_knn_join
+
+        def knn(d):
+            return sorted(tuple(r) for r in ext_sim_knn_join(spark, str(d)).collect())
+
+        table = pq.read_table(f"{sf_dir}/embeddings.parquet")
+        live, fresh = tmp_path / "live", tmp_path / "fresh"
+        live.mkdir()
+        fresh.mkdir()
+        pq.write_table(table, live / "embeddings.parquet")
+        before = knn(live)
+        half = table.slice(0, table.num_rows // 2)
+        for d in (live, fresh):
+            pq.write_table(half, d / "embeddings.parquet")
+        after = knn(live)
+        assert after != before
+        assert after == knn(fresh)
+
     def test_exact_topk_shape(self, spark, sf_dir):
         out = QUERIES["ext_sim_cosine_topk"](spark, sf_dir)
         per_q = out.groupBy("q_id").count().collect()

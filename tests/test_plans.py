@@ -1947,25 +1947,12 @@ def test_embedding_dedup_plan_is_bucketed_not_cartesian(spark, sf_dir):
     nested-loop pairing — the property that makes it O(n·bands·load)
     at 100 TB. The verify stage joins candidate ids back to vectors
     by key, so every join in the plan is hash-based."""
-    from streamingdemo_spark.extensions.dedup import _EMB_PAIRS_MEMO
+    from streamingdemo_spark.io import forget
 
-    def _evict_memo():
-        # unpersist the memoized pairs/sketch relations BEFORE
-        # clearing — the memo's eviction path is the only place they
-        # are released, so a bare clear() would leave both cached for
-        # the rest of the session
-        if _EMB_PAIRS_MEMO:
-            for df in _EMB_PAIRS_MEMO[0][2:]:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        _EMB_PAIRS_MEMO.clear()
-
-    _evict_memo()  # force a fresh plan (memo returns a persisted DF
-    # whose plan string would hide the join shape)
+    forget("emb_pairs")  # force a fresh plan (the held frame is
+    # persisted, and its plan string would hide the join shape)
     plan = _plan(QUERIES["ext_dedup_embedding"](spark, sf_dir))
-    _evict_memo()  # don't leak this build's cached relations
+    forget("emb_pairs")  # unpersist this build's cached relations
     assert "CartesianProduct" not in plan
     assert "NestedLoop" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or (

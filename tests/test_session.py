@@ -261,6 +261,103 @@ def test_only_txn_log_knows_the_log_format():
     assert found == {"plans/txn_log.py"}, found
 
 
+def test_reuse_builds_once_per_session_and_fixture(tmp_path):
+    """``io.reuse`` builds once per (session, fixture, extra key): a
+    table rewritten in place rebuilds and releases the old value, and
+    another application id rebuilds. No Spark."""
+    from types import SimpleNamespace
+
+    from streamingdemo_spark.io import forget, reuse
+
+    table = tmp_path / "embeddings.parquet"
+    table.write_bytes(b"v1")
+    built, released = [], []
+
+    def call(app, key=()):
+        spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+        return reuse(
+            spark,
+            "test_reuse",
+            str(tmp_path),
+            "embeddings",
+            lambda: built.append(len(built)) or built[-1],
+            release=released.append,
+            key=key,
+        )
+
+    try:
+        assert call("app-1") == call("app-1") == 0
+        assert built == [0]
+        table.write_bytes(b"v2, rewritten")
+        assert call("app-1") == 1
+        assert released == [0]
+        # a stopped session's value died with its cache: not released
+        assert call("app-2") == 2
+        assert released == [0]
+        assert call("app-2", key=(4,)) == 3
+        assert released == [0, 2]
+    finally:
+        forget("test_reuse")
+    assert released == [0, 2, 3]
+
+
+# Module-level caches outside ``io.reuse``, each with the reason it may
+# live on its own.
+OWN_CACHES = {
+    ("extensions/similarity.py", "_KNN_TILE_CACHE"):
+        "executor side: one resident kNN build tile per Python worker",
+}
+
+
+def test_only_io_keeps_state_between_calls():
+    """``io.py`` owns what a key keeps between calls (``reuse``) and the
+    fixture fingerprint that keys it (``fixture_fp``). No other module
+    under ``streamingdemo_spark/`` may bind a module-level empty dict or
+    list named ``*_MEMO`` / ``*_CACHE`` (except the ones above), define a
+    ``*_fp`` helper, stat a file's mtime, or import a ``*_fp`` helper
+    from anywhere but ``io``. No Spark."""
+    import ast
+    import pathlib
+
+    import streamingdemo_spark
+
+    root = pathlib.Path(streamingdemo_spark.__file__).parent
+    caches, fingerprints = set(), set()
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        if rel == "io.py":
+            continue
+        text = path.read_text()
+        tree = ast.parse(text)
+        for node in tree.body:
+            target = value = None
+            if isinstance(node, ast.Assign) and len(node.targets) == 1:
+                target, value = node.targets[0], node.value
+            elif isinstance(node, ast.AnnAssign):
+                target, value = node.target, node.value
+            if (
+                isinstance(target, ast.Name)
+                and target.id.endswith(("_MEMO", "_CACHE"))
+                and isinstance(value, (ast.Dict, ast.List))
+                and not (value.keys if isinstance(value, ast.Dict) else value.elts)
+            ):
+                caches.add((rel, target.id))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name.endswith("_fp"):
+                fingerprints.add((rel, node.name))
+            if (
+                isinstance(node, ast.ImportFrom)
+                and node.module != "streamingdemo_spark.io"
+            ):
+                fingerprints.update(
+                    (rel, a.name) for a in node.names if a.name.endswith("_fp")
+                )
+        if "st_mtime" in text:
+            fingerprints.add((rel, "st_mtime"))
+    assert caches == set(OWN_CACHES), caches
+    assert not fingerprints, fingerprints
+
+
 # Task counts that define their scenario or measured faster than the
 # rule; every other count comes from ``io.tasks_for``. Keyed by file
 # and line.

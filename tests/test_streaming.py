@@ -762,6 +762,7 @@ def test_cache_gc_is_scoped_per_source_file(sf_dir, monkeypatch, tmp_path):
     cache untouched."""
     import os
 
+    from streamingdemo_spark.io import fixture_fp
     from streamingdemo_spark.streaming import sources as src
 
     monkeypatch.setattr(src, "_CACHE_ROOT", str(tmp_path))
@@ -783,7 +784,7 @@ def test_cache_gc_is_scoped_per_source_file(sf_dir, monkeypatch, tmp_path):
     assert tmp_gen.exists(), "in-flight .tmp builds must survive"
     # the returned dir is keyed on tag AND source file AND fingerprint
     leafdir = os.path.basename(os.path.dirname(cur))
-    fp = src._source_fp(os.path.join(sf_dir, "documents.parquet"))
+    fp = fixture_fp(sf_dir, "documents")
     assert leafdir == f"{tag}-documents-{fp}"
     # a second call with the same fixture is stable (no self-GC)
     assert src._cache_dir(sf_dir, "documents.parquet", "chunks") == cur
