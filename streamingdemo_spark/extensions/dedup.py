@@ -11,8 +11,8 @@ Scale design (the actual point of these operators at 100 TB):
   no all-pairs comparison ever materializes.
 - hashes are either Spark-native ``xxhash64`` (JVM codegen, no
   Python) or the engine-portable polynomial convention
-  (``registry.poly_hash``) where a DuckDB oracle must replay them;
-  both are JVM-side expressions with identical plan shapes.
+  (``registry.poly_hash``, and ``registry.poly_fold``, its numpy twin
+  in the Arrow kernels) where a DuckDB oracle must replay them.
 - candidate verification joins only within buckets, so the shuffle
   volume is O(n · bands), not O(n²).
 """
@@ -24,8 +24,21 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streamingdemo_spark.io import load_tables, reuse, spread_scan
-from streamingdemo_spark.registry import POLY_MOD, opoly, poly_hash, query
+from streamingdemo_spark.io import (
+    load_tables,
+    plan_bytes,
+    reuse,
+    spread_scan,
+    tasks_for,
+)
+from streamingdemo_spark.registry import (
+    POLY_MOD,
+    opoly,
+    poly_fold,
+    poly_hash,
+    pow_mod_table,
+    query,
+)
 
 # Planted-mutant id offset for the DOC-space keys. Fixed: every
 # certified doc corpus keeps base doc_ids below 1e6 (sf10 replicas are
@@ -149,78 +162,245 @@ _MH_B = [(16807 * (k + 1)) % POLY_MOD for k in range(_MH_N)]
 _MH_BUCKET_CAP = 100
 
 
-def _shingle_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh): each doc's distinct 3-token shingle hashes.
+def _signature_batch(batch):
+    """Signature kernel over one Arrow batch of (doc_id, text):
+    (doc_id, sh, bk) with ``sh`` the doc's distinct 3-token shingle
+    hashes in first-occurrence order and ``bk`` its ``_MH_BANDS`` band
+    buckets, every value bit-for-bit the JVM convention the oracle
+    replays:
 
-    Integer shingles: hash each token once, then a shingle hash is the
-    131-combine of 3 adjacent token-hash longs — no shingle strings
-    are ever built, and every downstream stage (signatures, verify
-    sets) moves 8-byte longs instead of ~20-byte strings.
+    - tokens are the ``' '``-separated segments (empty ones included),
+      each hashed by ``registry.poly_fold``;
+    - a shingle is the 131-combine of 3 adjacent token hashes, deduped
+      per doc like ``array_distinct``;
+    - the signature is the ``_MH_N`` affine minima over the shingles,
+      folded 3 rows per band by 131-combines.
+
+    A doc with fewer than 3 tokens (or a NULL text) has no shingle, so
+    it gets empty ``sh`` and ``bk`` and no band rows, as in the oracle,
+    whose out-of-range list index is NULL and dropped by
+    ``list_distinct``.
     """
-    mod = F.lit(POLY_MOD)
-    toks = F.split("text", " ")
-    # Materialize token hashes in their own projection BEFORE the
-    # shingle transform references them: the shingle lambda reads the
-    # array 3x via element_at, and inlining the char-fold expression
-    # there re-evaluates every token's fold once per shingle —
-    # O(tokens²·chars) per doc, measured 74x slower at sf0.1.
-    with_th = docs.select("doc_id", F.transform(toks, poly_hash).alias("th"))
-    th = F.col("th")
-    n = F.size(th)
-    shingle_hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 2, F.lit(1))),
-        lambda i: (
-            (F.element_at(th, i) * 131 + F.element_at(th, i + 1)) % mod * 131
-            + F.element_at(th, i + F.lit(2))
+    import numpy as np
+    import pyarrow as pa
+
+    texts = [t or "" for t in batch.column("text").to_pylist()]
+    n = len(texts)
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=n)
+    codes = np.frombuffer("".join(texts).encode("utf-32-le"), dtype="<u4")
+    space = codes == 32
+    spaces_before = np.zeros(len(codes) + 1, dtype=np.int64)
+    np.cumsum(space, out=spaces_before[1:])
+    ends = np.cumsum(lens)
+    n_tok = spaces_before[ends] - spaces_before[ends - lens] + 1
+    # a char's token: the tokens of earlier docs (their spaces + 1
+    # each) plus the spaces before it in its own doc
+    tok = np.repeat(np.arange(n), lens)
+    tok += spaces_before[:-1]
+    del spaces_before
+    word = ~space
+    tok_len = np.bincount(tok[word], minlength=int(n_tok.sum()))
+    del tok
+    th = poly_fold(codes[word], tok_len)
+    tok_doc = np.repeat(np.arange(n), n_tok)
+    whole = tok_doc[:-2] == tok_doc[2:]
+    sh = ((th[:-2] * 131 + th[1:-1]) % POLY_MOD * 131 + th[2:]) % POLY_MOD
+    sh, sh_doc = sh[whole], tok_doc[:-2][whole]
+    # array_distinct: keep each (doc, shingle)'s first position (a
+    # stable sort on doc << 30 | shingle; shingles are < 2^30)
+    key = (sh_doc << 30) | sh
+    order = np.argsort(key, kind="stable")
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = np.diff(key[order]) != 0
+    keep = np.sort(order[first])
+    sh, sh_doc = sh[keep], sh_doc[keep]
+    n_sh = np.bincount(sh_doc, minlength=n)
+    has = n_sh > 0
+    rows = _MH_N // _MH_BANDS
+    if has.any():
+        starts = (np.cumsum(n_sh) - n_sh)[has]
+        sig = np.empty((_MH_N, int(has.sum())), dtype=np.int64)
+        for k in range(_MH_N):  # one permutation at a time: one S-long temporary
+            h = sh * _MH_A[k]
+            h += _MH_B[k]
+            h %= POLY_MOD
+            sig[k] = np.minimum.reduceat(h, starts)
+        bk = sig[0::rows]
+        for r in range(1, rows):
+            bk = (bk * 131 + sig[r::rows]) % POLY_MOD
+        bk = bk.T.ravel()
+    else:
+        bk = np.empty(0, dtype=np.int64)
+
+    def lists(sizes, values):
+        offsets = np.concatenate(([0], np.cumsum(sizes))).astype(np.int32)
+        return pa.ListArray.from_arrays(offsets, pa.array(values, pa.int64()))
+
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("doc_id").cast(pa.int64()),
+            lists(n_sh, sh),
+            lists(has * _MH_BANDS, bk),
+        ],
+        names=["doc_id", "sh", "bk"],
+    )
+
+
+# Text bytes per signature-kernel call: the kernel holds a few int64
+# arrays per character, so a batch of long documents is cut into
+# slices of about this much text (one document at least).
+_SIG_CHUNK_BYTES = 1 << 22
+
+
+def _signature_batches(batches):
+    """:func:`_signature_batch` over each slice of ``_SIG_CHUNK_BYTES``
+    of text of each batch."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    for batch in batches:
+        nbytes = pc.binary_length(batch.column("text")).fill_null(0)
+        off = np.concatenate(([0], np.cumsum(nbytes.to_numpy())))
+        start = 0
+        while start < len(batch):
+            stop = np.searchsorted(off, off[start] + _SIG_CHUNK_BYTES, "right") - 1
+            stop = max(int(stop), start + 1)
+            yield _signature_batch(batch.slice(start, stop - start))
+            start = stop
+
+
+def _signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh, bk) for each doc of (doc_id, text): one Arrow pass
+    (:func:`_signature_batch`), no explode, no aggregate."""
+    return docs.select("doc_id", "text").mapInArrow(
+        _signature_batches, "doc_id long, sh array<long>, bk array<long>"
+    )
+
+
+# Candidate pairs per verify chunk: bounds the kernel's working set
+# (each pair expands to one lookup per shingle of its first doc).
+_PAIR_CHUNK = 8192
+
+
+def _run_pairs(rows, starts, sizes):
+    """One Arrow batch of (doc_a, doc_b, inter, uni) for the in-bucket
+    pairs of the runs ``rows[starts[i] : starts[i] + sizes[i]]``, with
+    ``rows`` sorted by (band, bucket, doc_id) and every run one
+    bucket of 2..``_MH_BUCKET_CAP`` docs."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids = rows.column("doc_id").to_numpy()
+    sh = rows.column("sh")
+    off = sh.offsets.to_numpy().astype(np.int64)  # into the unsliced values
+    vals = sh.values.to_numpy()[off[0] : off[-1]]
+    off -= off[0]
+    n_sh = np.diff(off)
+    # each row's set as sorted keys (row << 30 | hash): hashes < 2^30
+    keys = np.sort((np.repeat(np.arange(len(n_sh)), n_sh) << 30) | vals)
+    a_parts, b_parts = [], []
+    for r in np.unique(sizes):
+        iu, ju = np.triu_indices(int(r), 1)
+        s = starts[sizes == r][:, None]
+        a_parts.append((s + iu).ravel())
+        b_parts.append((s + ju).ravel())
+    a, b = np.concatenate(a_parts), np.concatenate(b_parts)
+    lo = ids[a] < ids[b]
+    a, b = a[lo], b[lo]
+    inter = np.empty(len(a), dtype=np.int64)
+    for c in range(0, len(a), _PAIR_CHUNK):
+        ca, cb = a[c : c + _PAIR_CHUNK], b[c : c + _PAIR_CHUNK]
+        la = n_sh[ca]
+        pair = np.repeat(np.arange(len(ca)), la)
+        pos = np.repeat(off[ca] - (np.cumsum(la) - la), la) + np.arange(
+            int(la.sum())
         )
-        % mod,
-    )
-    return with_th.select(
-        "doc_id", F.array_distinct(shingle_hashes).alias("sh")
-    )
-
-
-def _lsh_bands(hashes: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) LSH rows from exploded shingle hashes
-    (doc_id, hs): the ``_MH_N`` affine permutations are evaluated once
-    per shingle and min-aggregated per doc (aggregate-form MinHash),
-    then folded into ``_MH_BANDS`` band buckets by 131-combines, with
-    buckets above ``_MH_BUCKET_CAP`` dropped."""
-    from pyspark.sql.window import Window
-
-    mod = F.lit(POLY_MOD)
-    rows_per_band = _MH_N // _MH_BANDS
-    sigs = (
-        hashes.select(
-            "doc_id",
-            *[
-                ((F.lit(_MH_A[k]) * F.col("hs") + F.lit(_MH_B[k])) % mod).alias(
-                    f"h{k}"
-                )
-                for k in range(_MH_N)
-            ],
+        probe = (cb[pair] << 30) | vals[pos]
+        at = np.minimum(np.searchsorted(keys, probe), len(keys) - 1)
+        inter[c : c + _PAIR_CHUNK] = np.bincount(
+            pair[keys[at] == probe], minlength=len(ca)
         )
-        .groupBy("doc_id")
-        .agg(*[F.min(f"h{k}").alias(f"h{k}") for k in range(_MH_N)])
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids[a], pa.int64()),
+            pa.array(ids[b], pa.int64()),
+            pa.array(inter, pa.int32()),
+            pa.array(n_sh[a] + n_sh[b] - inter, pa.int32()),
+        ],
+        names=["doc_a", "doc_b", "inter", "uni"],
     )
 
-    def _band_bucket(b: int) -> Column:
-        acc: Column = F.col(f"h{b * rows_per_band}")
-        for r in range(1, rows_per_band):
-            acc = (acc * 131 + F.col(f"h{b * rows_per_band + r}")) % mod
-        return acc
 
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_band_bucket(b) for b in range(_MH_BANDS)])
-        ).alias("band", "bucket"),
+def _verify_runs(batches):
+    """In-bucket verify kernel over one partition of (doc_id, sh, band,
+    bucket) rows sorted by (band, bucket, doc_id): every pair of docs
+    sharing a bucket of at most ``_MH_BUCKET_CAP`` docs (the LSH skew
+    guard), with its exact shingle intersection and union sizes.
+
+    Batches stream through: the last bucket run of a batch stays open
+    and is joined by the next batch's leading rows, and a run is
+    dropped as soon as it passes the cap, so the kernel holds the
+    current batch and at most ``_MH_BUCKET_CAP`` rows of an open run."""
+    import numpy as np
+    import pyarrow as pa
+
+    open_key, open_rows = None, []  # open_rows None: run over the cap
+
+    def close():
+        if open_rows and 1 < sum(len(t) for t in open_rows):
+            run = pa.Table.from_batches(open_rows).combine_chunks()
+            run = run.to_batches()[0]
+            yield _run_pairs(run, np.array([0]), np.array([len(run)]))
+
+    for batch in batches:
+        if len(batch) == 0:
+            continue
+        band = batch.column("band").to_numpy()
+        bucket = batch.column("bucket").to_numpy()
+        cuts = np.flatnonzero((np.diff(band) != 0) | (np.diff(bucket) != 0)) + 1
+        starts = np.concatenate(([0], cuts))
+        sizes = np.diff(np.append(starts, len(batch)))
+        head = (int(band[0]), int(bucket[0]))
+        first = 0
+        if head == open_key:
+            if open_rows is not None:
+                open_rows.append(batch.slice(0, int(sizes[0])))
+                if sum(len(t) for t in open_rows) > _MH_BUCKET_CAP:
+                    open_rows = None
+            if len(starts) == 1:
+                continue
+            first = 1
+        yield from close()
+        last = len(starts) - 1
+        mid = slice(first, last)
+        ok = (sizes[mid] > 1) & (sizes[mid] <= _MH_BUCKET_CAP)
+        if ok.any():
+            yield _run_pairs(batch, starts[mid][ok], sizes[mid][ok])
+        open_key = (int(band[-1]), int(bucket[-1]))
+        open_rows = (
+            [batch.slice(int(starts[last]))]
+            if sizes[last] <= _MH_BUCKET_CAP
+            else None
+        )
+    yield from close()
+
+
+def _bucket_pairs(sigs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter, uni) for every pair of docs of ``sigs``
+    (:func:`_signatures`) sharing a capped LSH band bucket, once per
+    shared band: the band rows take ONE shuffle on (band, bucket),
+    sized by the one task rule, and the verify kernel
+    (:func:`_verify_runs`) walks each partition's sorted bucket
+    runs. Each doc's row, shingle set included, is repeated once per
+    band, which the size passed to the rule counts."""
+    rows = sigs.select(
+        "doc_id", "sh", F.posexplode("bk").alias("band", "bucket")
     )
-    bucket_sizes = Window.partitionBy("band", "bucket")
+    n = tasks_for(sigs.sparkSession, _MH_BANDS * plan_bytes(sigs))
     return (
-        banded.withColumn("bucket_n", F.count(F.lit(1)).over(bucket_sizes))
-        .filter(F.col("bucket_n") <= _MH_BUCKET_CAP)
-        .drop("bucket_n")
+        rows.repartition(n, "band", "bucket")
+        .sortWithinPartitions("band", "bucket", "doc_id")
+        .mapInArrow(_verify_runs, "doc_a long, doc_b long, inter int, uni int")
     )
 
 
@@ -306,65 +486,41 @@ def _minhash_oracle() -> str:
 def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup detection via MinHash + LSH banding.
 
-    Pipeline: 3-token shingles → explode → 12 affine hashes per shingle
-    (computed exactly once each) → groupBy(doc) min-aggregate = MinHash
-    signature → 4 bands × 3 rows → band-bucket self-join → candidate
-    pairs → exact Jaccard verify. Output: (doc_a, doc_b, jaccard ≥ 0.5).
+    Pipeline: 3-token shingles → 12 affine min-hashes = MinHash
+    signature → 4 bands × 3 rows → in-bucket candidate pairs → exact
+    Jaccard verify. Output: (doc_a, doc_b, jaccard ≥ 0.5).
 
     Every hash is the engine-portable convention (``poly_hash`` token
     fold, 131-combines, affine permutations mod 1e9+7), so the DuckDB
     oracle replays the ENTIRE pipeline — banding, skew guard and all —
-    and the driver hash-checks it; swap the token fold for
-    ``F.xxhash64`` (and widen the modulus to a 61-bit Mersenne prime)
-    when cross-engine verification isn't needed — one helper, same
-    plan shape either way.
+    and the driver hash-checks it.
 
-    100 TB shape: the explode shuffle is O(total shingles) with
-    map-side partial min; candidate generation is O(n·bands); exact
-    verification touches only in-bucket pairs. No all-pairs stage
-    exists, and each hash is evaluated once (aggregate-form MinHash,
-    not per-band recomputation). MULTI-consumer intermediates
-    (shingle sets, capped band rows) are persisted — the band
-    self-join and the verify join would otherwise recompute their
-    whole lineage per reference (38-48 s vs ~2.5 s at sf0.1 without
-    them); at cluster scale these are exactly the datasets you
-    checkpoint. Single-consumer intermediates (signatures, candidate
-    pairs) are NOT cached — caching them paid a cache-write pass for
-    zero reuse. Buckets above ``_MH_BUCKET_CAP`` are
-    dropped before pairing (the LSH skew guard).
+    Stage shape: two Arrow kernels and one bucket shuffle.
+    :func:`_signatures` turns each doc into its shingle set and band
+    buckets in one numpy pass per batch; :func:`_bucket_pairs` shuffles
+    the band rows once on (band, bucket) and verifies each bucket's
+    pairs in place, skipping buckets above ``_MH_BUCKET_CAP`` (the LSH
+    skew guard). Spark then drops the pairs found in several bands and
+    rounds and thresholds the Jaccard.
+
+    100 TB shape: the bucket shuffle is O(n · bands) rows, each
+    carrying its doc's shingle set; verification touches only
+    in-bucket pairs, at most ``_MH_BUCKET_CAP``² per bucket. No
+    all-pairs stage exists, nothing is cached, and each hash is
+    evaluated once per doc.
     """
     # 4 bands x 3 rows: P(candidate) at jaccard .85 = 1-(1-.85^3)^4 ≈ .98,
     # at jaccard .3 ≈ .10 — a sharper sensitivity curve than 4x4 with 25%
     # fewer hash evaluations (``_MH_N``, ``_MH_BANDS``).
-    docs = _shingle_sets(_docs_with_mutants(spark, sf_dir)).cache()
-    based = docs.select("doc_id", F.explode("sh").alias("hs"))
-    # The signatures and cand are single-consumer (the banding resp.
-    # the verify join), so caching them bought nothing and paid the
-    # cache-write pass on every run (r13-opt: dropped; docs and banded
-    # keep their caches — each is read by 2-3 distinct consumers, and
-    # the no-cache form measured 38-48 s vs ~2.5 s at sf0.1).
-    banded = _lsh_bands(based).cache()
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sh_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
+    pairs = _bucket_pairs(_signatures(_docs_with_mutants(spark, sf_dir)))
     return (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .withColumn("jaccard", F.round(inter / union, 4))
+        pairs.dropDuplicates(["doc_a", "doc_b"])
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(F.col("inter") / F.col("uni"), 4).alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= 0.5)
-        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -1986,13 +2142,15 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     impossible but a sliced audit is cheap.
 
     Ground truth on the slice: pairs sharing >= 1 shingle (all others
-    have Jaccard 0), verified with exact set intersection at the 0.5
-    threshold the production key uses. Candidates: the production
-    key's shingle and banding helpers (``_shingle_sets``,
-    ``_lsh_bands``) — WITHOUT its verify step, because the evaluator
-    measures the raw banding selectivity. One output row: counts + rounded
-    precision/recall. Every hash is the portable convention, so the
-    DuckDB oracle replays both sides bit-for-bit.
+    have Jaccard 0), their shared-shingle count from the shingle
+    self-join, kept at the 0.5 Jaccard threshold the production key
+    uses. Candidates: the production key's signature and bucket-pair
+    kernels (:func:`_signatures`, :func:`_bucket_pairs`) — WITHOUT its
+    threshold, because the evaluator measures the raw banding
+    selectivity; a candidate is a hit when its own exact Jaccard
+    clears 0.5, which is the oracle's candidate ∩ truth. One output
+    row: counts + rounded precision/recall. Every hash is the portable
+    convention, so the DuckDB oracle replays both sides bit-for-bit.
 
     Scale shape: the slice bound (~400 base docs + mutants) caps the
     truth join; at production scale the slice is a sampled partition,
@@ -2001,68 +2159,35 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliced = _docs_with_mutants(spark, sf_dir).filter(
         F.pmod(F.col("doc_id"), F.lit(1_000_000)) < 400
     )
-    docs = _shingle_sets(sliced).cache()
-    ex = docs.select("doc_id", F.explode("sh").alias("hs"))
-    truth_pairs = (
+    sigs = _signatures(sliced)
+    ex = sigs.select(
+        "doc_id", F.size("sh").alias("n"), F.explode("sh").alias("hs")
+    )
+    shared = (
         ex.alias("a")
         .join(
             ex.alias("b"),
             (F.col("a.hs") == F.col("b.hs"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
+        .groupBy("a.doc_id", "b.doc_id", "a.n", "b.n")
+        .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sa = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha"))
-    sb = docs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("shb"))
-    inter = F.size(F.array_intersect("sha", "shb"))
-    j = inter.cast("double") / (F.size("sha") + F.size("shb") - inter)
-    truth = (
-        truth_pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(j >= 0.5)
-        .select("doc_a", "doc_b")
-        .cache()
+    n_a, n_b, inter = F.col("a.n"), F.col("b.n"), F.col("inter")
+    j = inter.cast("double") / (n_a + n_b - inter)
+    n_truth = shared.filter(j >= 0.5).agg(F.count(F.lit(1)).alias("n_truth"))
+    cand = _bucket_pairs(sigs).dropDuplicates(["doc_a", "doc_b"])
+    n_cand = cand.agg(
+        F.count(F.lit(1)).alias("n_candidates"),
+        F.count(F.when(F.col("inter") / F.col("uni") >= 0.5, 1)).alias("n_hit"),
     )
-    banded = _lsh_bands(ex)
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        .cache()
-    )
-    hit = cand.join(truth, ["doc_a", "doc_b"])
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    n_hit = hit.agg(F.count(F.lit(1)).alias("n_hit"))
-    return (
-        n_truth.crossJoin(n_cand)
-        .crossJoin(n_hit)
-        .select(
-            "n_truth",
-            "n_candidates",
-            "n_hit",
-            F.round(
-                F.col("n_hit").cast("double")
-                / F.greatest(F.col("n_candidates"), F.lit(1)),
-                4,
-            ).alias("precision"),
-            F.round(
-                F.col("n_hit").cast("double")
-                / F.greatest(F.col("n_truth"), F.lit(1)),
-                4,
-            ).alias("recall"),
-        )
+    hit = F.col("n_hit").cast("double")
+    return n_truth.crossJoin(n_cand).select(
+        "n_truth",
+        "n_candidates",
+        "n_hit",
+        F.round(hit / F.greatest("n_candidates", F.lit(1)), 4).alias("precision"),
+        F.round(hit / F.greatest("n_truth", F.lit(1)), 4).alias("recall"),
     )
 
 
@@ -2204,24 +2329,6 @@ WINNOW_SEL = 12  # selection-hash prefix length (chars)
 _INV31 = pow(31, POLY_MOD - 2, POLY_MOD)  # 31⁻¹ mod P (P prime)
 
 
-def _pow_mod_table(base: int, n: int):
-    """``base**i % POLY_MOD`` for i in 0..n-1 as int64, built by
-    vectorized doubling (log₂ n numpy passes, no per-element Python);
-    every product of two residues stays < (2^30)² < 2^63."""
-    import numpy as np
-
-    out = np.ones(max(n, 1), dtype=np.int64)
-    if n > 1:
-        out[1] = base
-    filled = min(n, 2)
-    while filled < n:
-        take = min(filled, n - filled)
-        step = out[filled - 1] * base % POLY_MOD
-        out[filled : filled + take] = out[:take] * step % POLY_MOD
-        filled += take
-    return out[:n]
-
-
 def winnow_positions(text: str) -> list[int]:
     """1-based start positions of the winnow-SELECTED WINNOW_K-grams
     of ``text`` — the per-document half of :func:`_winnowed_grams`,
@@ -2256,8 +2363,8 @@ def winnow_positions(text: str) -> list[int]:
     codes = np.frombuffer(
         text.encode("utf-32-le"), dtype="<u4"
     ).astype(np.int64)
-    inv = _pow_mod_table(_INV31, length + 1)
-    pw = _pow_mod_table(31, length + 1)
+    inv = pow_mod_table(_INV31, length + 1)
+    pw = pow_mod_table(31, length + 1)
     terms = codes * inv[1:] % POLY_MOD
     acc = np.empty(length + 1, dtype=np.int64)
     acc[0] = 0
@@ -2312,8 +2419,8 @@ def _gram_hash_batch(texts, hash_width: int, gram_width: int):
     ).astype(np.int64)
     L = int(lens.sum())
     maxlen = int(lens.max())
-    inv = _pow_mod_table(_INV31, maxlen + 1)
-    pw = _pow_mod_table(31, maxlen + 1)
+    inv = pow_mod_table(_INV31, maxlen + 1)
+    pw = pow_mod_table(31, maxlen + 1)
     char_start = np.concatenate(([0], np.cumsum(lens)[:-1]))
     j = np.arange(L, dtype=np.int64) - np.repeat(char_start, lens)
     terms = codes * inv[j + 1] % POLY_MOD
@@ -2879,8 +2986,8 @@ def cdc_cut_positions(text: str) -> list[int]:
     codes = np.frombuffer(
         text.encode("utf-32-le"), dtype="<u4"
     ).astype(np.int64)
-    inv = _pow_mod_table(_INV31, length + 1)
-    pw = _pow_mod_table(31, length + 1)
+    inv = pow_mod_table(_INV31, length + 1)
+    pw = pow_mod_table(31, length + 1)
     terms = codes * inv[1:] % POLY_MOD
     acc = np.empty(length + 1, dtype=np.int64)
     acc[0] = 0

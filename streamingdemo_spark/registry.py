@@ -109,6 +109,57 @@ def opoly(expr: str) -> str:
     )
 
 
+def pow_mod_table(base: int, n: int):
+    """``base**i % POLY_MOD`` for i in 0..n-1 as int64, built by
+    vectorized doubling (log₂ n numpy passes, no per-element Python);
+    every product of two residues stays < (2^30)² < 2^63."""
+    import numpy as np
+
+    out = np.ones(max(n, 1), dtype=np.int64)
+    if n > 1:
+        out[1] = base
+    filled = min(n, 2)
+    while filled < n:
+        take = min(filled, n - filled)
+        step = out[filled - 1] * base % POLY_MOD
+        out[filled : filled + take] = out[:take] * step % POLY_MOD
+        filled += take
+    return out[:n]
+
+
+def poly_fold(codes, lens):
+    """numpy twin of :func:`poly_hash` for a batch of strings, for the
+    Arrow kernels that must reproduce it bit-for-bit.
+
+    ``codes`` holds the codepoints of consecutive strings and
+    ``lens[i]`` the codepoint length of string i; returns each
+    string's hash as int64 (0 for an empty string). The per-char
+    Horner fold ``acc*31 + c mod POLY_MOD`` equals the positional sum
+    Σ c_j·31^(len-1-j) mod POLY_MOD, so the fold is one multiply per
+    codepoint plus a segment sum: codepoints < 2^21 times residues
+    < 2^30 stay exact in int64, and so does a segment sum below ~2^33
+    chars."""
+    import numpy as np
+
+    lens = np.asarray(lens, dtype=np.int64)
+    out = np.zeros(len(lens), dtype=np.int64)
+    if len(codes) == 0:
+        return out
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    exp = np.repeat(ends - 1, lens)
+    exp -= np.arange(len(codes))
+    # in place: the kernels run over whole batches, and every
+    # per-codepoint temporary stays in the worker's heap
+    terms = pow_mod_table(31, int(lens.max()))[exp]
+    del exp
+    terms *= codes
+    terms %= POLY_MOD
+    full = lens > 0
+    out[full] = np.add.reduceat(terms, starts[full]) % POLY_MOD
+    return out
+
+
 def dsum(col: Column | str, scale: int = 2, *, wide: bool = False) -> Column:
     """Exact, order-insensitive sum of a fixed-point double column, as
     double.

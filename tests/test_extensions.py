@@ -75,6 +75,47 @@ class TestDedup:
         assert row["recall"] >= 0.9
         assert row["precision"] >= 0.5
 
+    def test_minhash_family_takes_docs_too_short_to_shingle(self, spark, tmp_path):
+        """A doc with fewer than 3 tokens, or a NULL text, has no
+        shingle: the oracle's out-of-range list index is NULL and
+        ``list_distinct`` drops it, so the doc gets no band rows. Both
+        MinHash keys must give their oracle's rows on such a corpus
+        (an ANSI out-of-range ``element_at`` used to fail the job)."""
+        import random
+
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from tests.oracle_compare import duck_rows, spark_rows
+
+        from streamingdemo_spark.registry import ORACLES
+
+        rng = random.Random(3)
+        words = [f"w{i}" for i in range(12)]
+        texts = [" ".join(rng.choice(words) for _ in range(60)) for _ in range(20)]
+        texts += ["a b", "a", "", " ", None, "a  b", "x y "]
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(range(len(texts)), pa.int64()),
+                    "text": pa.array(texts, pa.string()),
+                    "lang": ["en"] * len(texts),
+                    "source": ["src0"] * len(texts),
+                    "n_chars": [len(t or "") for t in texts],
+                }
+            ),
+            tmp_path / "documents.parquet",
+        )
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'documents.parquet'}')"
+        )
+        for key in ("ext_dedup_minhash", "ext_dedup_eval"):
+            got = spark_rows(QUERIES[key](spark, str(tmp_path)))
+            assert got == duck_rows(con, ORACLES[key]), key
+            assert got[1], key
+
     def test_simhash_recovers_planted_mutants(self, spark, sf_dir):
         planted, _ = _planted_recall(
             QUERIES["ext_dedup_simhash"](spark, sf_dir), "doc_a", "doc_b"

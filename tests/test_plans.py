@@ -1023,31 +1023,40 @@ def test_vacuum_deletes_aged_tombstones_only(spark, sf_dir):
     ).count()
 
 
-def test_minhash_is_aggregate_form_with_in_row_verify(spark, sf_dir):
-    """ext_dedup_minhash's 100 TB contract in plan text (the r7 hand
-    audit, pinned): signatures come from ONE shingle explode with
-    MAP-SIDE partial min (aggregate-form MinHash — a per-band
-    recomputation or a pair-level shuffle would drop partial_min),
-    the skew guard's bucket-size window is present, the verify stage
-    intersects token arrays IN-ROW, and nothing goes quadratic or
-    drops to Python.
+def test_minhash_is_two_kernels_around_one_bucket_shuffle(spark, sf_dir):
+    """ext_dedup_minhash's 100 TB contract in plan text: the band rows
+    take exactly ONE shuffle on (band, bucket) and are verified inside
+    their bucket, so nothing goes quadratic; signatures come from the
+    Arrow kernel, not a per-shingle explode (the band posexplode is
+    the one Generate); nothing runs row-at-a-time in Python; and no
+    cached relation is left behind."""
+    import re
 
-    clearCache first: the key caches its shingle/signature relations,
-    and a prior run in the same session (the oracle test) leaves
-    cached plans that print as InMemoryTableScan, hiding the
-    aggregate/explode structure this test pins."""
-    spark.catalog.clearCache()
     plan = _plan(QUERIES["ext_dedup_minhash"](spark, sf_dir))
-    assert "partial_min" in plan, plan
-    assert "array_intersect" in plan, plan
-    assert "bucket_n" in plan, plan  # LSH skew cap still filters
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan  # whole pipeline JVM-side
-    # shingle explode + band posexplode only; a per-character or
-    # per-pair×shingle explosion would add Generate nodes
-    assert plan.count("Generate") <= 4, plan
+    # one task (a small fixture) plans the same shuffle as SinglePartition
+    bucket_shuffles = re.findall(
+        r"Exchange (?:hashpartitioning\(band#\d+, bucket#\d+L?, \d+\)"
+        r"|SinglePartition), REPARTITION_BY_NUM",
+        plan,
+    )
+    assert len(bucket_shuffles) == 1, plan
+    assert plan.count("hashpartitioning(band#") <= 1, plan
+    assert "InMemoryRelation" not in plan
+    assert "InMemoryTableScan" not in plan
+    assert plan.count("Generate") <= 1, plan
+
+
+def test_minhash_leaves_no_persisted_rdd(spark, sf_dir):
+    """A long-lived session must not build up state: one
+    ext_dedup_minhash call leaves the session's persistent RDDs as it
+    found them."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    assert QUERIES["ext_dedup_minhash"](spark, sf_dir).count() > 0
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_stream_dedup_substring_winnows_map_side(spark, sf_dir):

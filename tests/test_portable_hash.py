@@ -1,6 +1,7 @@
 """The engine-portability contract of registry.poly_hash/opoly: Spark
-and DuckDB must produce bitwise-identical hashes for arbitrary ASCII
-content — every oracle-checked dedup/fingerprint key rests on this.
+and DuckDB (and poly_fold, the numpy twin in the Arrow kernels) must
+produce bitwise-identical hashes for arbitrary content — every
+oracle-checked dedup/fingerprint key rests on this.
 
 One batched differential (seeded corpus, single Spark job + single
 DuckDB query), not per-example round trips."""
@@ -15,7 +16,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from streamingdemo_spark.registry import opoly, poly_hash
+from streamingdemo_spark.registry import opoly, poly_fold, poly_hash
 
 
 def _corpus() -> list[str]:
@@ -25,8 +26,10 @@ def _corpus() -> list[str]:
         "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 300)))
         for _ in range(200)
     ]
-    # adversarial edges: empty, single char, spaces only, repeats
+    # adversarial edges: empty, single char, spaces only, repeats,
+    # double and trailing spaces (empty tokens when split on ' ')
     docs += ["", "a", "   ", "z" * 500, "ab " * 100]
+    docs += ["a  b", "trailing ", " leading", "x  y  z  ", "  "]
     # BMP unicode: both engines fold per codepoint
     docs += ["héllo wörld", "日本語のテキスト", "aéb ü ß", "кириллица"]
     # astral plane: Spark's split('')/ascii are codepoint-aware (not
@@ -84,6 +87,35 @@ def test_poly_hash_matches_duckdb_bitwise(spark):
     con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(docs)))
     want = dict(con.execute(f"SELECT i, {opoly('s')} FROM t").fetchall())
     assert got == want
+
+
+def test_poly_fold_matches_poly_hash_and_opoly(spark):
+    """registry.poly_fold, the numpy twin the Arrow kernels use, is
+    bit-for-bit poly_hash (Spark) and opoly (DuckDB) on the same
+    adversarial corpus: whole strings, and the ' '-separated tokens
+    the MinHash signature kernel hashes."""
+    import numpy as np
+
+    docs = _corpus()
+    tokens = [t for d in docs for t in d.split(" ")]
+    for strings in (docs, tokens):
+        codes = np.frombuffer("".join(strings).encode("utf-32-le"), dtype="<u4")
+        got = poly_fold(codes, [len(s) for s in strings]).tolist()
+        sdf = spark.createDataFrame(list(enumerate(strings)), "i long, s string")
+        spark_h = [
+            r["h"]
+            for r in sdf.select("i", poly_hash(F.col("s")).alias("h"))
+            .orderBy("i")
+            .collect()
+        ]
+        con = duckdb.connect()
+        con.execute("CREATE TABLE t (i BIGINT, s VARCHAR)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(strings)))
+        duck_h = [
+            h
+            for (h,) in con.execute(f"SELECT {opoly('s')} FROM t ORDER BY i").fetchall()
+        ]
+        assert got == spark_h == duck_h
 
 
 def test_bm25_floor_boundary_margin():
