@@ -1688,6 +1688,12 @@ def _cluster_oracle() -> str:
     """
 
 
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free the executor blocks behind ``df``, an eager
+    ``localCheckpoint``; ``df`` must not be read afterwards."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 # Bound on the wait for min_label_components' per-round Observation
 # (normally milliseconds) before it falls back to an explicit sum.
 _OBSERVATION_WAIT_S = 10.0
@@ -1730,7 +1736,9 @@ def min_label_components(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     ~1e38, so no wraparound can fake a fixpoint (ANSI mode would
     raise loudly first). Non-numeric ids keep the join probe.
 
-    Each round ends in an eager ``localCheckpoint``: iterative
+    Each round ends in an eager ``localCheckpoint``, and the round
+    before it is dropped once probed, so a call leaves one checkpoint
+    (the returned labels) in the session: iterative
     self-referencing plans double in size per round without lineage
     truncation (the no-checkpoint variant planned 2^rounds copies of
     the upstream subtree and ran ~60× slower), and a checkpoint per
@@ -1807,23 +1815,42 @@ def min_label_components(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
             )
         )
         if numeric_label:
-            if cur_sum == prev_sum:
-                return labels
+            converged = cur_sum == prev_sum
             prev_sum = cur_sum
         else:
-            changed = (
+            converged = (
                 labels.alias("cur")
                 .join(prev.alias("prv"), "doc_id")
                 .filter(F.col("cur.label") != F.col("prv.label"))
                 .limit(1)
                 .count()
-            )
-            if changed == 0:
-                return labels
+            ) == 0
+        # the new round's checkpoint truncated its lineage: nothing
+        # reads the previous round's blocks after the probe
+        _drop_checkpoint(prev)
+        if converged:
+            return labels
     raise RuntimeError(
         f"min_label_components did not converge in {max_rounds} rounds "
         f"(component diameter beyond ~2^{max_rounds}); raise max_rounds"
     )
+
+
+def _minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Checkpointed (doc_id, label) components of the MinHash pair
+    graph, for ext_dedup_cluster; the edge caches the rounds scan are
+    released before it returns."""
+    pairs = ext_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b").cache()
+    # undirected edge list
+    edges = pairs.unionByName(
+        pairs.select(
+            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+        )
+    ).cache()
+    labels = min_label_components(edges)
+    edges.unpersist()
+    pairs.unpersist()
+    return labels
 
 
 @query("ext_dedup_cluster", oracle=_cluster_oracle())
@@ -1838,17 +1865,21 @@ def ext_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain-shaped trains now converge too instead of silently
     splitting).
 
+    The labels are a pure function of the fixture, so they are built
+    once per session and fixture (``io.reuse``): the session holds one
+    call's worth, the final labels checkpoint, and a miss drops it.
+
     Output: (doc_id, canonical_id, cluster_size) for docs in
     components of size >= 2.
     """
-    pairs = ext_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b").cache()
-    # undirected edge list
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).cache()
-    labels = min_label_components(edges)
+    labels = reuse(
+        spark,
+        "dedup_cluster_labels",
+        sf_dir,
+        "documents",
+        lambda: _minhash_components(spark, sf_dir),
+        release=_drop_checkpoint,
+    )
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "label")

@@ -68,12 +68,18 @@ def parquet_rows(sf_dir: str, name: str) -> int:
     return pq.read_metadata(path).num_rows
 
 
-def fixture_fp(sf_dir: str, table: str) -> str:
-    """Content fingerprint of a fixture table: size + mtime (µs). It
-    changes when the table is regenerated or rewritten in place, so
-    caches keyed on it never serve a superseded fixture."""
-    st = os.stat(table_path(sf_dir, table))
+def path_stamp(path: str) -> str:
+    """Size + mtime (µs) of the file at ``path``; raises ``OSError``
+    when it cannot be stat'ed. It changes when the file is regenerated
+    or rewritten in place."""
+    st = os.stat(path)
     return f"{st.st_size}-{st.st_mtime_ns // 1000}"
+
+
+def fixture_fp(sf_dir: str, table: str) -> str:
+    """Content fingerprint of a fixture table (``path_stamp``), so
+    caches keyed on it never serve a superseded fixture."""
+    return path_stamp(table_path(sf_dir, table))
 
 
 # name -> (key, value, release) for ``reuse``; one entry per name

@@ -47,6 +47,12 @@ for _k, _v in _CHILD_MALLOC_ENV.items():
     os.environ.setdefault(_k, _v)
 
 
+# The directory holding the streamingdemo_spark package. Python workers
+# get it on their path so by-reference kernels and the worker daemon
+# import whatever directory the driver runs from.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def positive_int(name: str, raw: str | None, default):
     """``raw``, the value of environment variable ``name``, as a
     positive int. ``default`` when it is unset, and when it is
@@ -121,6 +127,19 @@ def get_spark(
         # store); a deployment that wants the UI passes extra_conf.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.debug.maxToStringFields", "200")
+        # Python < 3.13 workers: pyspark invalidates the import caches
+        # before every task, which makes each of a worker's 16
+        # zipimporters re-parse its whole archive (pyspark.zip, 1,328
+        # entries; the spark-core jar, 5,359; the py4j zip): 0.26-0.52 s
+        # per task on a reused worker (4-core box, Python 3.11). An
+        # identity mapInArrow stage over 24k cached rows (4 tasks) took
+        # 0.46 s against 0.12 s with no Python; with worker_daemon,
+        # which re-reads an archive only when its size or mtime moved,
+        # it takes 0.23 s. Delete this conf and worker_daemon.py once
+        # the engine requires Python >= 3.13, whose invalidate_caches
+        # only drops the cached directory (re-read lazily, once).
+        .config("spark.python.daemon.module", "streamingdemo_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # The oracle-differential harness collects FULL query results
         # for hashing; at the sf10 sweep a 60M-row projection tops the

@@ -1059,6 +1059,18 @@ def test_minhash_leaves_no_persisted_rdd(spark, sf_dir):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_dedup_cluster_holds_one_call_of_persisted_rdds(spark, sf_dir):
+    """ext_dedup_cluster's pair caches and per-round checkpoints do not
+    build up in a long-lived session: after the first call, further
+    calls leave the persistent-RDD count where it was."""
+    jsc = spark.sparkContext._jsc.sc()
+    counts = []
+    for _ in range(3):
+        assert QUERIES["ext_dedup_cluster"](spark, sf_dir).count() > 0
+        counts.append(jsc.getPersistentRDDs().size())
+    assert counts[0] == counts[1] == counts[2], counts
+
+
 def test_stream_dedup_substring_winnows_map_side(spark, sf_dir):
     """The streaming substring dedup must keep winnowing MAP-SIDE:
     the vectorized Arrow UDF (winnow_pos) sits BELOW the stateful

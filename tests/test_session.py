@@ -12,6 +12,9 @@ def test_session_defaults(spark):
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     assert conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert conf.get("spark.ui.enabled") == "false"
+    assert (
+        conf.get("spark.python.daemon.module") == "streamingdemo_spark.worker_daemon"
+    )
 
 
 def test_session_is_reused(spark):
