@@ -85,10 +85,22 @@ def warm_up(spark, queries, sf_dir: str) -> None:
 
 def timed_reps(spark, build, sf_dir: str, reps: int):
     """Time ``reps`` runs of ``build(spark, sf_dir)``, each from the
-    builder call to fully drained output. The cache is cleared per rep
-    so keys that persist intermediates (LSH signatures) are measured
-    cold. Returns the sorted walls, the last rep's row count and the
-    last rep's frame."""
+    builder call to fully drained output. ``clearCache()`` per rep
+    drops every cached frame, so a key that caches within its call, or
+    holds a cached frame through ``io.reuse`` (the embedding pair memo
+    of ``ext_dedup_embedding``, ``ext_semantic_decontam`` and
+    ``ext_dedup_embedding_cluster``; the buckets of
+    ``ext_label_noise_ann``), computes it again every rep.
+
+    What ``io.reuse`` holds outside Spark's cache is set-up by design,
+    as in perfbench, whose untimed warm-up pass builds it: the first
+    call in the session builds it, and later reps read it warm, so
+    ``key_wall``'s best-of-2 and median-of-3 report the warm wall. Those
+    values are the kNN tile stage (``ext_sim_knn_join``), the cluster
+    labels checkpoints (``ext_dedup_cluster``,
+    ``ext_dedup_embedding_cluster``, ``ext_multimodal_phash_cluster``)
+    and the staged stream replays (every ``stream_*`` key). Returns the
+    sorted walls, the last rep's row count and the last rep's frame."""
     walls, n, df = [], 0, None
     for _ in range(reps):
         spark.catalog.clearCache()
@@ -400,8 +412,10 @@ def _registry_walls(
     headline set (the headline measures the scale-critical paths at
     sf0.1 with reps; this pass trades precision for COVERAGE: a plan
     regression that doubles a key's wall is visible even when the key
-    is sub-second). No oracle, one rep, cache cleared per key so
-    memoizing keys measure their own pipeline. Deterministic key
+    is sub-second). No oracle, one rep, cache cleared per key; a value
+    ``io.reuse`` holds outside Spark's cache (named in ``timed_reps``)
+    is built in the wall of the first key in key order that needs it at
+    sf0.01, and keys after it read it warm. Deterministic key
     order; a hard time budget bounds the driver's bench step, and
     hitting it is recorded loudly (``registry_truncated``) rather than
     silently narrowing coverage. A key that raises records ``null`` —

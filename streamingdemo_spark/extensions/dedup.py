@@ -1836,21 +1836,37 @@ def min_label_components(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     )
 
 
-def _minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpointed (doc_id, label) components of the MinHash pair
-    graph, for ext_dedup_cluster; the edge caches the rounds scan are
-    released before it returns."""
-    pairs = ext_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b").cache()
-    # undirected edge list
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).cache()
-    labels = min_label_components(edges)
-    edges.unpersist()
-    pairs.unpersist()
-    return labels
+def pair_clusters(
+    spark: SparkSession, name: str, sf_dir: str, table: str, pairs
+) -> DataFrame:
+    """(doc_id, canonical_id, cluster_size) for the docs in components
+    of size >= 2 of the undirected graph over the (doc_a, doc_b) rows
+    of ``pairs()``, a pair list of fixture ``table``; canonical_id is
+    the component minimum (:func:`min_label_components`).
+
+    The labels are a pure function of the fixture, so they are built
+    once per session and fixture (``io.reuse`` under ``name``): the
+    pair and edge caches the rounds scan are released before the build
+    returns, the session holds one call's worth (the final labels
+    checkpoint), and a miss drops it."""
+
+    def build() -> DataFrame:
+        found = pairs().select("doc_a", "doc_b").cache()
+        edges = found.unionByName(
+            found.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+        ).cache()
+        labels = min_label_components(edges)
+        edges.unpersist()
+        found.unpersist()
+        return labels
+
+    labels = reuse(spark, name, sf_dir, table, build, release=_drop_checkpoint)
+    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return (
+        labels.join(sizes, "label")
+        .filter(F.col("cluster_size") >= 2)
+        .select("doc_id", F.col("label").alias("canonical_id"), "cluster_size")
+    )
 
 
 @query("ext_dedup_cluster", oracle=_cluster_oracle())
@@ -1863,32 +1879,17 @@ def ext_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation with pointer doubling, looped to a probed fixpoint
     (dedup graphs are usually star-shaped and converge in 2 rounds;
     chain-shaped trains now converge too instead of silently
-    splitting).
-
-    The labels are a pure function of the fixture, so they are built
-    once per session and fixture (``io.reuse``): the session holds one
-    call's worth, the final labels checkpoint, and a miss drops it.
+    splitting), held once per session through :func:`pair_clusters`.
 
     Output: (doc_id, canonical_id, cluster_size) for docs in
     components of size >= 2.
     """
-    labels = reuse(
+    return pair_clusters(
         spark,
         "dedup_cluster_labels",
         sf_dir,
         "documents",
-        lambda: _minhash_components(spark, sf_dir),
-        release=_drop_checkpoint,
-    )
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        labels.join(sizes, "label")
-        .filter(F.col("cluster_size") >= 2)
-        .select(
-            "doc_id",
-            F.col("label").alias("canonical_id"),
-            "cluster_size",
-        )
+        lambda: ext_dedup_minhash(spark, sf_dir),
     )
 
 
@@ -2313,11 +2314,12 @@ def ext_dedup_embedding_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic cluster), completing the family: minhash pairs →
     ``ext_dedup_cluster``, phash pairs →
     ``ext_multimodal_phash_cluster``, embedding pairs → this key. All
-    three share ONE verified clustering engine
-    (:func:`min_label_components`: min-label propagation with pointer
-    doubling to a probed fixpoint, loud failure over silent
-    under-merge) and one oracle shape (recursive-CTE transitive
-    closure over the shared pair SQL).
+    three share ONE verified clustering path
+    (:func:`pair_clusters` over :func:`min_label_components`: min-label
+    propagation with pointer doubling to a probed fixpoint, loud
+    failure over silent under-merge, labels held once per session) and
+    one oracle shape (recursive-CTE transitive closure over the shared
+    pair SQL).
 
     Pure composition: the pair stage is the persisted
     ``_emb_verified_pairs`` memo (computed once per session/sf_dir
@@ -2330,27 +2332,15 @@ def ext_dedup_embedding_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (vec_id, canonical_id, cluster_size) for vectors in
     components of size >= 2; canonical_id is the component minimum.
     """
-    pairs = _emb_verified_pairs(spark, sf_dir).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    )
-    labels = min_label_components(edges)
-    sizes = labels.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return (
-        labels.join(sizes, "label")
-        .filter(F.col("cluster_size") >= 2)
-        .select(
-            F.col("doc_id").alias("vec_id"),
-            F.col("label").alias("canonical_id"),
-            "cluster_size",
-        )
-    )
+    return pair_clusters(
+        spark,
+        "dedup_embedding_cluster_labels",
+        sf_dir,
+        "embeddings",
+        lambda: _emb_verified_pairs(spark, sf_dir).select(
+            F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+        ),
+    ).withColumnRenamed("doc_id", "vec_id")
 
 
 WINNOW_W = 10  # winnowing window (grams per window)

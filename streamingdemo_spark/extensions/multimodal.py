@@ -464,30 +464,20 @@ def ext_multimodal_phash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media near-dup CLUSTERS: the phash pair list closed into
     connected components, one canonical keep-id per group — what a
     media dedup actually ships (keep one representative per visual
-    cluster, not a pair list). Reuses the text-dedup min-label
-    pointer-doubling loop (``dedup.min_label_components``: probed
+    cluster, not a pair list). Reuses the text-dedup clustering path
+    (``dedup.pair_clusters`` over ``min_label_components``: probed
     fixpoint, localCheckpoint per round, loud failure over silent
-    under-merge), so both dedup modalities share one verified
-    clustering engine; the oracle wraps the shared pair SQL in a
+    under-merge, labels held once per session), so both dedup
+    modalities share one verified clustering engine; the oracle wraps the shared pair SQL in a
     recursive transitive closure. Component sizes stay bounded by the
     band-cap on candidate generation, so the closure's frontier never
     explodes at scale."""
-    from streamingdemo_spark.extensions.dedup import min_label_components
+    from streamingdemo_spark.extensions.dedup import pair_clusters
 
-    pairs = ext_multimodal_phash_dedup(spark, sf_dir).select(
-        "doc_a", "doc_b"
-    ).cache()
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).cache()
-    labels = min_label_components(edges)
-    sizes = labels.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return (
-        labels.join(sizes, "label")
-        .filter(F.col("cluster_size") >= 2)
-        .select("doc_id", F.col("label").alias("canonical_id"), "cluster_size")
+    return pair_clusters(
+        spark,
+        "multimodal_phash_cluster_labels",
+        sf_dir,
+        "documents",
+        lambda: ext_multimodal_phash_dedup(spark, sf_dir),
     )

@@ -17,7 +17,8 @@ Below that a shuffle costs more than the per-row work it spreads (A/B:
 if spread), and a replay pays a state-store commit per task per batch.
 
 Reuse across calls: ``reuse`` is the engine's one memo for what a key
-keeps between calls (a persisted pair relation, a staged tile grid).
+keeps between calls (a persisted pair relation, a staged tile grid, a
+staged stream replay, a cluster-labels checkpoint).
 It holds one value per name, keyed by the session's application id,
 the fixture dir's real path, the table's ``fixture_fp`` and any extra
 key, so a new session, another fixture or a table rewritten in place

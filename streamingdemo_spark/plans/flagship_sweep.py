@@ -32,23 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamingdemo_spark.io import load_tables, register_views
-from streamingdemo_spark.registry import dsum, osum, query
-
-
-def _usum(col, scale: int = 4):
-    """Integer-unit sum WITHOUT the closing divide — a BIGINT column.
-
-    For ratio keys (Q8/Q14) the numerator and denominator stay in
-    integer units and a single double division closes the ratio, so
-    there is exactly one rounding step to replay on the oracle side.
-    """
-    k = 10**scale
-    return F.sum(F.floor(col * k + F.lit(0.5)))
-
-
-def _ousum(expr: str, scale: int = 4) -> str:
-    k = 10**scale
-    return f"SUM(CAST(FLOOR(({expr}) * {k} + 0.5) AS BIGINT))"
+from streamingdemo_spark.registry import dsum, osum, ousum, query, usum
 
 
 @query(
@@ -189,8 +173,8 @@ def flagship_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     "flagship_q8",
     oracle=f"""
     SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS o_year,
-           CAST({_ousum("CASE WHEN n2.n_name = 'NATION_3' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END")} AS DOUBLE)
-           / CAST({_ousum("l.l_extendedprice * (1 - l.l_discount)")} AS DOUBLE)
+           CAST({ousum("CASE WHEN n2.n_name = 'NATION_3' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END")} AS DOUBLE)
+           / CAST({ousum("l.l_extendedprice * (1 - l.l_discount)")} AS DOUBLE)
            AS mkt_share
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
@@ -262,8 +246,8 @@ def flagship_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust_nation), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(supp_nation), F.col("l_suppkey") == F.col("s_suppkey"))
     )
-    nation_vol = _usum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0)))
-    total_vol = _usum(vol)
+    nation_vol = usum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0)))
+    total_vol = usum(vol)
     return (
         joined.groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
         .agg(
@@ -434,8 +418,8 @@ def flagship_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "flagship_q14",
     oracle=f"""
-    SELECT 100.0 * CAST({_ousum("CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END")} AS DOUBLE)
-           / CAST({_ousum("l.l_extendedprice * (1 - l.l_discount)")} AS DOUBLE)
+    SELECT 100.0 * CAST({ousum("CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END")} AS DOUBLE)
+           / CAST({ousum("l.l_extendedprice * (1 - l.l_discount)")} AS DOUBLE)
            AS promo_revenue,
            COUNT(*) AS n_lines
     FROM lineitem l
@@ -462,8 +446,8 @@ def flagship_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
-    promo = _usum(F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0)))
-    total = _usum(vol)
+    promo = usum(F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0)))
+    total = usum(vol)
     return (
         items.join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
         .agg(

@@ -209,6 +209,14 @@ def half_up_micro_avg(units: str, n: str, *, sql: bool = False) -> str:
     return f"(2 * {units} * 100 + {n}) {op} (2 * {n})"
 
 
+def ousum(expr: str, scale: int = 4) -> str:
+    """Oracle-SQL fragment matching :func:`usum`: the exact integer-unit
+    sum, the integer half of :func:`osum`. Ratio keys (Q8, Q14) keep
+    both terms in units and close with one double division, so the
+    oracle replays exactly one rounding step."""
+    return f"SUM(CAST(FLOOR(({expr}) * {10**scale} + 0.5) AS BIGINT))"
+
+
 def osum(expr: str, scale: int = 2, *, wide: bool = False) -> str:
     """Oracle-SQL fragment matching :func:`dsum` term-for-term.
 
@@ -218,8 +226,4 @@ def osum(expr: str, scale: int = 2, *, wide: bool = False) -> str:
     """
     if wide:
         return f"CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS DOUBLE)"
-    k = 10**scale
-    return (
-        f"CAST(SUM(CAST(FLOOR(({expr}) * {k} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / {float(k)}"
-    )
+    return f"CAST({ousum(expr, scale)} AS DOUBLE) / {float(10**scale)}"

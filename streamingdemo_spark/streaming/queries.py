@@ -543,7 +543,7 @@ def stream_kafka_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamingdemo_spark.operators import run_pipeline
     from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
 
-    src_dir = _build(sf_dir, "ordered", 8)
+    src_dir = _build(spark, sf_dir, "ordered", 8)
     ports = run_pipeline(
         spark,
         {
@@ -982,18 +982,14 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch id — same discipline as ``stream_foreach_batch``'s merge).
     """
     import os
-    import shutil
 
-    from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
-
-    built = _build(sf_dir, "ordered", 4)
-    files = sorted(
-        f for f in os.listdir(built) if f.endswith(".parquet")
+    from streamingdemo_spark.streaming.sources import (
+        EVENTS_SCHEMA,
+        replay_in_two_arrivals,
     )
-    src = scratch_dir(prefix="inc_src_")
+
     target = os.path.join(scratch_dir(prefix="inc_tgt_"), "partials")
     ckpt = scratch_dir(prefix="ckpt_inc_", dir=CHECKPOINT_ROOT)
-    _LAST_INCREMENTAL.update(source=src, partials=target, checkpoint=ckpt)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         (
@@ -1013,7 +1009,7 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    def run_once() -> None:
+    def run(src: str) -> None:
         stream = (
             spark.readStream.schema(EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -1021,13 +1017,8 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         replay(stream.writeStream.foreachBatch(sink), spark, checkpoint=ckpt)
 
-    for f in files[: len(files) // 2]:
-        shutil.copy(os.path.join(built, f), src)
-    run_once()
-    for f in files[len(files) // 2 :]:
-        shutil.copy(os.path.join(built, f), src)
-    run_once()
-
+    src = replay_in_two_arrivals(spark, sf_dir, 4, run)
+    _LAST_INCREMENTAL.update(source=src, partials=target, checkpoint=ckpt)
     partials = spark.read.parquet(target)
     return partials.groupBy("event_type").agg(
         F.sum("partial_n").alias("n_events"),
@@ -1686,11 +1677,11 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from streamingdemo_spark.registry import poly_hash
-    from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
+    from streamingdemo_spark.streaming.sources import (
+        EVENTS_SCHEMA,
+        replay_in_two_arrivals,
+    )
 
-    built = _build(sf_dir, "ordered", 4)
-    files = sorted(f for f in os.listdir(built) if f.endswith(".parquet"))
-    src = scratch_dir(prefix="botk_src_")
     sketch_dir = os.path.join(scratch_dir(prefix="botk_tgt_"), "sketch")
     ckpt = scratch_dir(prefix="ckpt_botk_", dir=CHECKPOINT_ROOT)
 
@@ -1730,7 +1721,7 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(sketch_dir, ignore_errors=True)
         os.rename(sketch_dir + "_next", sketch_dir)
 
-    def run_once() -> None:
+    def run(src: str) -> None:
         stream = (
             spark.readStream.schema(EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -1738,13 +1729,7 @@ def stream_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         replay(stream.writeStream.foreachBatch(sink), spark, checkpoint=ckpt)
 
-    for f in files[: len(files) // 2]:
-        shutil.copy(os.path.join(built, f), src)
-    run_once()
-    for f in files[len(files) // 2 :]:
-        shutil.copy(os.path.join(built, f), src)
-    run_once()
-
+    replay_in_two_arrivals(spark, sf_dir, 4, run)
     bot = spark.read.parquet(sketch_dir)
     kth = bot.agg(F.max("h").alias("hk"))
     from pyspark.sql.window import Window

@@ -1,11 +1,11 @@
-"""Deterministic replayable stream sources over the events fixture.
+"""Deterministic replayable stream sources over the fixtures.
 
-The events table is replayed as a chronologically-chunked parquet file
-stream (FIXTURES.md usage note): files are written in ts order with
-increasing mod-times, so ``maxFilesPerTrigger=1`` yields a
-deterministic sequence of micro-batches and deterministic watermark
-advancement. Variants inject late rows / duplicate rows (again
-deterministically) to exercise watermark drops and stateful dedup.
+Each replay is a chunked parquet file stream (FIXTURES.md usage note),
+staged once per session and fixture in a scratch dir (``_staged``):
+files are written in order with increasing mod-times, so
+``maxFilesPerTrigger=1`` yields a deterministic sequence of
+micro-batches and deterministic watermark advancement. Event variants
+inject late / duplicate rows to exercise watermark drops and dedup.
 
 At 100 TB the file stream is replaced by Kafka partitions; everything
 downstream (watermarks, windows, state) is source-agnostic — that is
@@ -25,39 +25,28 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
-from streamingdemo_spark.io import fixture_fp
+from streamingdemo_spark.io import reuse, table_path
+from streamingdemo_spark.scratch import scratch_dir
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
 
-_CACHE_ROOT = os.environ.get(
-    "STREAMINGDEMO_STREAM_CACHE", "/tmp/streamingdemo_stream_src"
-)
-# Bump when chunking/variant semantics change: the version participates
-# in the cache path, so stale replay directories are never reused.
-_CACHE_VERSION = 2
-
 
 def _events_sorted(sf_dir: str) -> pa.Table:
-    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    # Spark's TimestampType is microseconds; truncate ns up front so the
+    t = pq.read_table(table_path(sf_dir, "events"))
+    # Spark's TimestampType is microseconds, and the fixture carries
+    # sub-microsecond precision: truncate ns up front, exactly as the
+    # batch path (`ts DIV 1000`) and DuckDB's parquet reader do, so the
     # streaming schema is plain `timestamp`.
-    # The fixture carries sub-microsecond precision; truncate exactly as
-    # the batch path (`ts DIV 1000`) and DuckDB's parquet reader do.
-    ts_us = pc.cast(
-        t["ts"],
-        options=pc.CastOptions(
-            target_type=pa.timestamp("us"), allow_time_truncate=True
-        ),
-    )
+    to_us = pc.CastOptions(pa.timestamp("us"), allow_time_truncate=True)
+    ts_us = pc.cast(t["ts"], options=to_us)
     t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
     return t.sort_by([("ts", "ascending"), ("event_id", "ascending")])
 
 
 def _write_chunks(table: pa.Table, out_dir: str, n_chunks: int) -> None:
-    os.makedirs(out_dir, exist_ok=True)
     n = table.num_rows
     per = (n + n_chunks - 1) // n_chunks
     for i in range(n_chunks):
@@ -70,66 +59,27 @@ def _write_chunks(table: pa.Table, out_dir: str, n_chunks: int) -> None:
         time.sleep(0.01)
 
 
-def _cache_dir(sf_dir: str, source_file: str, leaf: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.splitext(os.path.basename(source_file))[0]
-    # the fingerprint keeps same-basename sf dirs in different parents,
-    # and a fixture regenerated in place, off each other's chunks
-    fp = fixture_fp(sf_dir, src)
-    root = os.path.join(_CACHE_ROOT, f"v{_CACHE_VERSION}")
-    # The cache key (and the GC sweep prefix below) must include the
-    # SOURCE FILE, not just the sf-dir tag: the fingerprint is
-    # per-file, so a tag-only sweep would let each stream build wipe
-    # the OTHER sources' live chunk caches for the same fixture
-    # (documents vs embeddings vs events), causing perpetual rebuild
-    # thrash and deleting an active file-stream's source dir
-    # mid-replay in a concurrent session.
-    cur = f"{tag}-{src}-{fp}"
-    # GC stale fingerprints of the SAME (sf-dir tag, source file):
-    # every fixture regeneration changes the fingerprint, and without
-    # this sweep the superseded chunk dirs strand under /tmp forever
-    # on long-lived hosts. Only sibling generations of this exact
-    # source are touched, so concurrent sessions on other fixtures or
-    # other sources of this fixture are unaffected; a concurrent
-    # reader of the stale generation would be replaying a fixture that
-    # no longer exists — removing it converts silent staleness into a
-    # rebuild.
-    try:
-        for d in os.listdir(root):
-            if d.startswith(f"{tag}-{src}-") and d != cur and ".tmp-" not in d:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    except OSError:
-        pass
-    return os.path.join(root, cur, leaf)
+def _staged(spark: SparkSession, sf_dir: str, table: str, leaf: str, write) -> str:
+    """The chunk dir of fixture ``table``'s replay ``leaf``, staged once
+    per session and fixture (``io.reuse``): ``write(dir)`` fills a
+    scratch dir. The fixture's real path is in the name, so a session
+    that alternates fixtures does not restage either's chunks. Not
+    released: lazy frames of earlier calls may still read it, and
+    ``scratch_dir`` removes it at exit."""
 
-
-def _publish(sf_dir: str, source_file: str, leaf: str, write) -> str:
-    """Return the chunk dir of ``source_file`` cached under ``leaf``,
-    building it on first use: ``write(tmp_dir)`` fills a private
-    ``.tmp-<pid>`` dir, and one rename publishes it. A crash mid-build
-    leaves only a .tmp dir (rebuilt next time), never a half-full
-    cache that os.listdir() would mistake for complete."""
-    out_dir = _cache_dir(sf_dir, source_file, leaf)
-    if os.path.isdir(out_dir):
+    def build() -> str:
+        out_dir = scratch_dir(prefix=f"stream_{table}_{leaf}_")
+        write(out_dir)
         return out_dir
-    tmp = f"{out_dir}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write(tmp)
-    try:
-        os.rename(tmp, out_dir)
-    except OSError:
-        # another process published first; a lost race with no winner
-        # on disk is an error, not an empty replay
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(out_dir):
-            raise RuntimeError(f"chunk cache build raced and lost: {out_dir}")
-    return out_dir
+
+    name = f"replay:{os.path.realpath(sf_dir)}:{table}:{leaf}"
+    return reuse(spark, name, sf_dir, table, build)
 
 
 def _reader(
     spark: SparkSession, schema: str, path: str, files_per_trigger: int | None
 ) -> DataFrame:
-    """The file-stream reader over a published chunk dir: one trigger
+    """The file-stream reader over a staged chunk dir: one trigger
     per ``files_per_trigger`` files, or everything in one micro-batch
     when None."""
     reader = spark.readStream.schema(schema)
@@ -138,13 +88,24 @@ def _reader(
     return reader.parquet(path)
 
 
-def _write_sorted(
-    sf_dir: str, source_file: str, columns: list[str], n_chunks: int, out_dir: str
-) -> None:
-    """``columns`` of a fixture, sorted by the first (the stable id),
-    as mod-time-ordered chunks."""
-    t = pq.read_table(os.path.join(sf_dir, source_file), columns=columns)
-    _write_chunks(t.sort_by([(columns[0], "ascending")]), out_dir, n_chunks)
+def _sorted_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    schema: str,
+    n_chunks: int,
+    files_per_trigger: int | None,
+) -> DataFrame:
+    """A replay of ``schema``'s columns of fixture ``table``, sorted by
+    the first (the stable id), as mod-time-ordered chunks."""
+    cols = [c.split()[0] for c in schema.split(", ")]
+
+    def write(out_dir: str) -> None:
+        t = pq.read_table(table_path(sf_dir, table), columns=cols)
+        _write_chunks(t.sort_by([(cols[0], "ascending")]), out_dir, n_chunks)
+
+    path = _staged(spark, sf_dir, table, f"sorted-{n_chunks}", write)
+    return _reader(spark, schema, path, files_per_trigger)
 
 
 def _write_events(sf_dir: str, variant: str, n_chunks: int, out_dir: str) -> None:
@@ -156,8 +117,7 @@ def _write_events(sf_dir: str, variant: str, n_chunks: int, out_dir: str) -> Non
         # Rows with event_id % 50 == 0 are held back and appended as the
         # final file — they arrive "late" relative to the watermark the
         # earlier chunks advanced.
-        ids = t["event_id"].to_numpy()
-        hold = pa.array(ids % 50 == 0)
+        hold = pa.array(t["event_id"].to_numpy() % 50 == 0)
         main, held = t.filter(pc.invert(hold)), t.filter(hold)
         _write_chunks(main, out_dir, n_chunks - 1)
         pq.write_table(held, os.path.join(out_dir, f"part-{n_chunks - 1:04d}.parquet"))
@@ -186,19 +146,16 @@ def _write_events(sf_dir: str, variant: str, n_chunks: int, out_dir: str) -> Non
         for i, hours in enumerate((2, 4)):
             sentinel = pa.table(
                 {
-                    "event_id": pa.array([-1 - i], pa.int64()),
-                    "ts": pa.array(
-                        [max_ts + datetime.timedelta(hours=hours)],
-                        pa.timestamp("us"),
-                    ),
-                    "user_id": pa.array([-1], pa.int64()),
-                    "event_type": pa.array(["__flush__"], pa.string()),
-                    "value": pa.array([0.0], pa.float64()),
-                    "props": pa.array(["{}"], pa.string()),
+                    "event_id": [-1 - i],
+                    "ts": [max_ts + datetime.timedelta(hours=hours)],
+                    "user_id": [-1],
+                    "event_type": ["__flush__"],
+                    "value": [0.0],
+                    "props": ["{}"],
                 }
-            ).select(t.column_names)
+            )
             pq.write_table(
-                sentinel.cast(t.schema),
+                sentinel.select(t.column_names).cast(t.schema),
                 os.path.join(out_dir, f"part-{n_chunks - 2 + i:04d}.parquet"),
             )
             time.sleep(0.01)
@@ -206,15 +163,13 @@ def _write_events(sf_dir: str, variant: str, n_chunks: int, out_dir: str) -> Non
         raise ValueError(f"unknown variant {variant!r}")
 
 
-def _build(sf_dir: str, variant: str, n_chunks: int) -> str:
-    """Publish the events replay ``variant`` as ``n_chunks`` chunk
-    files and return its dir."""
-    return _publish(
-        sf_dir,
-        "events.parquet",
-        f"{variant}-{n_chunks}",
-        lambda out_dir: _write_events(sf_dir, variant, n_chunks, out_dir),
-    )
+def _build(spark: SparkSession, sf_dir: str, variant: str, n_chunks: int) -> str:
+    """The chunk dir of the events replay ``variant`` in ``n_chunks``."""
+
+    def write(out_dir: str) -> None:
+        _write_events(sf_dir, variant, n_chunks, out_dir)
+
+    return _staged(spark, sf_dir, "events", f"{variant}-{n_chunks}", write)
 
 
 DOCS_SCHEMA = "doc_id long, text string"
@@ -233,14 +188,9 @@ def documents_stream(
     Same deterministic chunked-parquet mechanism as
     :func:`events_stream` (mod-time-ordered files, one trigger per
     file by default)."""
-    cols = ["doc_id", "text"]
-    path = _publish(
-        sf_dir,
-        "documents.parquet",
-        f"docs-{n_chunks}",
-        lambda out: _write_sorted(sf_dir, "documents.parquet", cols, n_chunks, out),
+    return _sorted_stream(
+        spark, sf_dir, "documents", DOCS_SCHEMA, n_chunks, files_per_trigger
     )
-    return _reader(spark, DOCS_SCHEMA, path, files_per_trigger)
 
 
 EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>"
@@ -257,14 +207,9 @@ def embeddings_stream(
     feeding an index build. Same deterministic chunked-parquet
     mechanism as :func:`events_stream` (mod-time-ordered files, one
     trigger per file by default)."""
-    cols = ["vec_id", "embedding"]
-    path = _publish(
-        sf_dir,
-        "embeddings.parquet",
-        f"emb-{n_chunks}",
-        lambda out: _write_sorted(sf_dir, "embeddings.parquet", cols, n_chunks, out),
+    return _sorted_stream(
+        spark, sf_dir, "embeddings", EMB_STREAM_SCHEMA, n_chunks, files_per_trigger
     )
-    return _reader(spark, EMB_STREAM_SCHEMA, path, files_per_trigger)
 
 
 def events_stream(
@@ -280,5 +225,20 @@ def events_stream(
     the final batch), 'dups' (duplicate event_ids in the final batch).
     ``files_per_trigger=None`` processes everything in one micro-batch.
     """
-    path = _build(sf_dir, variant, n_chunks)
+    path = _build(spark, sf_dir, variant, n_chunks)
     return _reader(spark, EVENTS_SCHEMA, path, files_per_trigger)
+
+
+def replay_in_two_arrivals(spark: SparkSession, sf_dir: str, n_chunks: int, run) -> str:
+    """A stream stopped mid-input and resumed once new files land: the
+    first half of the ordered events replay's ``n_chunks`` chunk files
+    lands in a fresh scratch dir and ``run(dir)`` is called, then the
+    rest lands and ``run(dir)`` is called again. Returns the dir."""
+    built = _build(spark, sf_dir, "ordered", n_chunks)
+    files = sorted(os.listdir(built))
+    src = scratch_dir(prefix="arrivals_")
+    for part in (files[: len(files) // 2], files[len(files) // 2 :]):
+        for f in part:
+            shutil.copy(os.path.join(built, f), src)
+        run(src)
+    return src

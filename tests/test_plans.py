@@ -1059,14 +1059,24 @@ def test_minhash_leaves_no_persisted_rdd(spark, sf_dir):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_dedup_cluster_holds_one_call_of_persisted_rdds(spark, sf_dir):
-    """ext_dedup_cluster's pair caches and per-round checkpoints do not
+@pytest.mark.parametrize(
+    "key",
+    [
+        "ext_dedup_cluster",
+        "ext_dedup_embedding_cluster",
+        "ext_multimodal_phash_cluster",
+    ],
+)
+def test_dedup_cluster_holds_one_call_of_persisted_rdds(spark, sf_dir, key):
+    """A cluster key's pair caches and per-round checkpoints do not
     build up in a long-lived session: after the first call, further
-    calls leave the persistent-RDD count where it was."""
+    calls leave the persistent-RDD count where it was, even while the
+    caller still holds every result frame."""
     jsc = spark.sparkContext._jsc.sc()
-    counts = []
+    frames, counts = [], []
     for _ in range(3):
-        assert QUERIES["ext_dedup_cluster"](spark, sf_dir).count() > 0
+        frames.append(QUERIES[key](spark, sf_dir))
+        assert frames[-1].count() > 0
         counts.append(jsc.getPersistentRDDs().size())
     assert counts[0] == counts[1] == counts[2], counts
 

@@ -164,7 +164,7 @@ def test_parallelism_rule_runs_no_job(spark, sf_dir):
     big = spark.range(0, 40_000, 1, 1)
     stream = events_stream(spark, sf_dir, "ordered", n_chunks=4)
     joined = stream.join(stream.select("event_id"), "event_id")
-    src = _build(sf_dir, "ordered", 4)
+    src = _build(spark, sf_dir, "ordered", 4)
     on_disk = sum(os.path.getsize(os.path.join(src, f)) for f in os.listdir(src))
     before = _jobs(spark)
     assert spread_scan(big) is not big
@@ -182,7 +182,6 @@ ALLOWED_ENV = {
     "SPARK_GRAFT_CPUS",
     "SPARK_DRIVER_MEMORY",
     "SPARK_DRIVER_MAX_RESULT_SIZE",
-    "STREAMINGDEMO_STREAM_CACHE",
     "STREAMINGDEMO_CKPT_ROOT",
     "STREAMINGDEMO_STREAM_TIMEOUT",
 }

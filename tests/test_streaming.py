@@ -154,38 +154,25 @@ class TestCheckpointResume:
         the final sink equals the full input exactly — the
         exactly-once resume guarantee a 100 TB pipeline leans on when
         an executor/driver dies mid-run."""
-        import os
-        import shutil
-
         from streamingdemo_spark.streaming.runner import replay
         from streamingdemo_spark.streaming.sources import (
             EVENTS_SCHEMA,
-            _build,
+            replay_in_two_arrivals,
         )
 
-        src_all = _build(sf_dir, "ordered", 8)
-        files = sorted(
-            f for f in os.listdir(src_all) if f.endswith(".parquet")
-        )
-        staged = str(tmp_path / "staged")
-        os.makedirs(staged)
         ckpt = str(tmp_path / "ckpt")
         out = str(tmp_path / "out")
+        phase_rows = []
 
-        def run_phase():
+        def run_phase(staged):
             stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
             writer = stream.select("event_id", "user_id").writeStream
             replay(writer.format("parquet").option("path", out), spark,
                    checkpoint=ckpt, timeout_sec=120)
+            phase_rows.append(spark.read.parquet(out).count())
 
-        for f in files[: len(files) // 2]:
-            shutil.copy(os.path.join(src_all, f), staged)
-        run_phase()
-        n_phase1 = spark.read.parquet(out).count()
-
-        for f in files[len(files) // 2 :]:
-            shutil.copy(os.path.join(src_all, f), staged)
-        run_phase()
+        staged = replay_in_two_arrivals(spark, sf_dir, 8, run_phase)
+        n_phase1 = phase_rows[0]
 
         total = spark.read.schema(EVENTS_SCHEMA).parquet(staged).count()
         got = spark.read.parquet(out)
@@ -202,18 +189,14 @@ def test_anomaly_state_survives_checkpoint_resume(spark, sf_dir, tmp_path):
     the full input, each event emitted exactly once. A lost or
     corrupted buffer would flip verdicts for the first 24
     post-resume events of every series."""
-    import os
-    import shutil
-
     from streamingdemo_spark.registry import QUERIES
     from streamingdemo_spark.streaming.queries import apply_anomaly_screen
     from streamingdemo_spark.streaming.runner import replay
-    from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
+    from streamingdemo_spark.streaming.sources import (
+        EVENTS_SCHEMA,
+        replay_in_two_arrivals,
+    )
 
-    src_all = _build(sf_dir, "ordered", 8)
-    files = sorted(f for f in os.listdir(src_all) if f.endswith(".parquet"))
-    staged = str(tmp_path / "staged")
-    os.makedirs(staged)
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "verdicts")
 
@@ -222,20 +205,17 @@ def test_anomaly_state_survives_checkpoint_resume(spark, sf_dir, tmp_path):
     def sink(batch_df, _batch_id):
         batch_df.write.mode("append").parquet(out)
 
-    def run_phase():
+    phase_rows = []
+
+    def run_phase(staged):
         stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
         writer = apply_anomaly_screen(stream).writeStream.foreachBatch(sink)
         replay(writer.outputMode("update"), spark, checkpoint=ckpt,
                timeout_sec=180)
+        phase_rows.append(spark.read.parquet(out).count())
 
-    for f in files[: len(files) // 2]:
-        shutil.copy(os.path.join(src_all, f), staged)
-    run_phase()
-    n_phase1 = spark.read.parquet(out).count()
-
-    for f in files[len(files) // 2 :]:
-        shutil.copy(os.path.join(src_all, f), staged)
-    run_phase()
+    replay_in_two_arrivals(spark, sf_dir, 8, run_phase)
+    n_phase1 = phase_rows[0]
 
     rows = spark.read.parquet(out).collect()
     got = {}
@@ -260,7 +240,7 @@ def test_anomaly_screen_as_container_operator(spark, sf_dir):
     from streamingdemo_spark.streaming.runner import run_to_memory
     from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
 
-    src_dir = _build(sf_dir, "ordered", 8)
+    src_dir = _build(spark, sf_dir, "ordered", 8)
     ports = run_pipeline(
         spark,
         {
@@ -701,7 +681,7 @@ def test_state_partitions_reach_the_query_not_the_session(spark, sf_dir):
     from streamingdemo_spark.streaming.sources import _build
 
     sf001 = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
-    src = _build(sf001, "ordered", 8)  # stream_tumbling's source
+    src = _build(spark, sf001, "ordered", 8)  # stream_tumbling's source
     want = tasks_for(
         spark, sum(os.path.getsize(os.path.join(src, f)) for f in os.listdir(src))
     )
@@ -722,7 +702,7 @@ def test_run_to_memory_leaves_no_table(spark, sf_dir):
     from streamingdemo_spark.streaming import runner
     from streamingdemo_spark.streaming.sources import EVENTS_SCHEMA, _build
 
-    src = _build(sf_dir, "ordered", 4)
+    src = _build(spark, sf_dir, "ordered", 4)
     n_tables = len(spark.catalog.listTables())
     out = runner.run_to_memory(
         spark.readStream.schema(EVENTS_SCHEMA).parquet(src).select("event_id")
@@ -752,39 +732,41 @@ def test_replay_timeout_raises_and_stops_the_query(spark, sf_dir):
     assert spark.streams.active == []
 
 
-def test_cache_gc_is_scoped_per_source_file(sf_dir, monkeypatch, tmp_path):
-    """r12 ADVICE: the replay-cache GC swept every '{tag}-*' sibling,
-    so documents/embeddings/events caches of ONE fixture wiped each
-    other (perpetual rebuild thrash; a concurrent stream's live source
-    dir deleted mid-replay). The sweep is now keyed on (tag, source
-    file): building one source's cache must remove only STALE
-    generations of that same source and leave every other source's
-    cache untouched."""
+def test_replays_stage_once_per_session_under_the_temp_dir(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """A replay's chunks are staged under the temp dir (removed at
+    exit), once per session and fixture: a second call writes no file,
+    and a fixture rewritten in place restages with its new rows."""
     import os
+    import shutil
+    import tempfile
 
-    from streamingdemo_spark.io import fixture_fp
-    from streamingdemo_spark.streaming import sources as src
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    monkeypatch.setattr(src, "_CACHE_ROOT", str(tmp_path))
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = tmp_path / f"v{src._CACHE_VERSION}"
-    root.mkdir()
-    stale_docs = root / f"{tag}-documents-0-0"
-    live_embs = root / f"{tag}-embeddings-12345-67890"
-    other_fixture = root / f"other-documents-1-1"
-    tmp_gen = root / f"{tag}-documents-.tmp-999"
-    for d in (stale_docs, live_embs, other_fixture, tmp_gen):
-        d.mkdir()
+    from streamingdemo_spark.streaming.sources import documents_stream
 
-    cur = src._cache_dir(sf_dir, "documents.parquet", "chunks")
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(temp))
+    fixture = tmp_path / "fixture"
+    fixture.mkdir()
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), fixture)
 
-    assert not stale_docs.exists(), "stale generation of SAME source swept"
-    assert live_embs.exists(), "other source's cache must survive"
-    assert other_fixture.exists(), "other fixture tag must survive"
-    assert tmp_gen.exists(), "in-flight .tmp builds must survive"
-    # the returned dir is keyed on tag AND source file AND fingerprint
-    leafdir = os.path.basename(os.path.dirname(cur))
-    fp = fixture_fp(sf_dir, "documents")
-    assert leafdir == f"{tag}-documents-{fp}"
-    # a second call with the same fixture is stable (no self-GC)
-    assert src._cache_dir(sf_dir, "documents.parquet", "chunks") == cur
+    def staged():
+        return {p: p.stat().st_mtime_ns for p in temp.rglob("*")}
+
+    documents_stream(spark, str(fixture))
+    first = staged()
+    assert first, "replay chunks staged under the temp dir"
+    documents_stream(spark, str(fixture))
+    assert staged() == first, "a second call writes no file"
+
+    docs = pq.read_table(fixture / "documents.parquet").slice(0, 5)
+    pq.write_table(docs, fixture / "documents.parquet")
+    documents_stream(spark, str(fixture))
+    new = [p for p in staged().keys() - first.keys() if p.suffix == ".parquet"]
+    assert new, "a rewritten fixture restages"
+    got = pa.concat_tables([pq.read_table(p) for p in new])
+    assert sorted(got["doc_id"].to_pylist()) == sorted(docs["doc_id"].to_pylist())
